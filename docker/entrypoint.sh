@@ -15,5 +15,4 @@ done
 MAIN=graft.serve.ServeMain
 [ "${GRAFT_MODE:-serve}" = ingest ] && MAIN=graft.serve.IngestMain
 exec java $ADD_OPENS -Xmx"${GRAFT_MEM:-4g}" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "/opt/graft/graft.jar:$SPARK_JARS/*" "$MAIN" "$@"

@@ -245,19 +245,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDirEnv = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // this box's root disk stalls intermittently (30-100x hiccups on
-      // shuffle spill); tmpfs shuffle dirs make timings reflect the plans
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.experimental.extraOptimizations ++= Seq(graft.plans.SpatialFilterPushdown)
+    // this box's root disk stalls intermittently (30-100x hiccups on
+    // shuffle spill); tmpfs shuffle dirs make timings reflect the plans
+    val spark = Session(Session.localMaster(32), Some("/dev/shm/graft-spark"))
 
     val (sfDir, staged) = stageInputs(sfDirEnv)
     if (staged) prepareWidened(spark, sfDir)
@@ -340,27 +330,41 @@ object Bench {
       .flatMap(_.toIntOption).filter(_ > 0).getOrElse(3)
     val meas = scala.collection.mutable.Map[String, List[(Double, Boolean)]]()
       .withDefaultValue(Nil)
-    // OS 1-min load average captured alongside each rep (same prepend
-    // order as meas), so a contaminated epoch self-describes numerically
-    // in the durable record instead of narratively (r18 verdict task 7).
-    // -1 where the JVM can't read it.
-    val loads = scala.collection.mutable.Map[String, List[Double]]()
+    // OS 1-min load average and GC seconds captured alongside each rep
+    // (same prepend order as meas), so a contaminated epoch self-describes
+    // numerically in the durable record instead of narratively (r18
+    // verdict task 7), and heap-pressure warm-down is told apart from host
+    // epochs (r19 close). Load is -1 where the JVM can't read it.
+    val repHost = scala.collection.mutable.Map[String, List[(Double, Double)]]()
       .withDefaultValue(Nil)
     def loadAvg(): Double = {
       val l = java.lang.management.ManagementFactory
         .getOperatingSystemMXBean.getSystemLoadAverage
       if (l < 0) -1.0 else math.rint(l * 10.0) / 10.0
     }
-    def record(n: String, t: Double, clean: Boolean): Unit = {
+    // getCollectionTime returns -1 for collectors without timing support;
+    // filter them so they can't deflate the per-rep GC seconds
+    def gcMillis(): Long = {
+      import scala.jdk.CollectionConverters._
+      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
+        .map(_.getCollectionTime).filter(_ >= 0).sum
+    }
+    /** One measured rep: (seconds, GC seconds); seconds -1 on failure. */
+    def rep(n: String): (Double, Double) = {
+      val gc0 = gcMillis()
+      val t = exec(n)
+      (t, (gcMillis() - gc0) / 1000.0)
+    }
+    def record(n: String, t: Double, gc: Double, clean: Boolean): Unit = {
       meas(n) = (t, clean) :: meas(n)
-      loads(n) = loadAvg() :: loads(n)
+      repHost(n) = (loadAvg(), gc) :: repHost(n)
     }
     for (_ <- 1 to passes) {
       var prevQuiet = sentinelQuiet()
       for (n <- names) {
-        val t = exec(n)
+        val (t, gc) = rep(n)
         val nextQuiet = sentinelQuiet()
-        if (t >= 0) record(n, t, prevQuiet && nextQuiet)
+        if (t >= 0) record(n, t, gc, prevQuiet && nextQuiet)
         prevQuiet = nextQuiet
       }
     }
@@ -392,9 +396,9 @@ object Bench {
              System.nanoTime() < deadline) {
         tries += 1
         if (sentinelQuiet()) {
-          val t = exec(n)
+          val (t, gc) = rep(n)
           val quiet = sentinelQuiet()
-          if (t >= 0) record(n, t, quiet)
+          if (t >= 0) record(n, t, gc, quiet)
           else fails += 1 // a query that ERRORS must not eat the budget
         } else Thread.sleep(5000)
       }
@@ -449,13 +453,14 @@ object Bench {
     // round 3's line, losing 13 entries and the total — the file is the
     // durable copy, with every raw (seconds, clean) measurement for audit.
     try {
-      // each rep as [seconds, clean, loadavg] — the load sentinel makes
-      // an epoch's contamination a per-rep measurement, not an inference
+      // each rep as [seconds, clean, loadavg, gc seconds] — the load
+      // sentinel makes an epoch's contamination a per-rep measurement, not
+      // an inference
       val raw = names.map { n =>
-        val ls = loads(n)
-        val ms = meas(n).zipAll(ls.take(meas(n).size), (0.0, false), -1.0)
+        val ls = repHost(n)
+        val ms = meas(n).zipAll(ls.take(meas(n).size), (0.0, false), (-1.0, 0.0))
           .reverse
-          .map { case ((t, c), l) => s"[${round3(t)},$c,$l]" }
+          .map { case ((t, c), (l, gc)) => s"[${round3(t)},$c,$l,${round3(gc)}]" }
           .mkString("[", ",", "]")
         "\"" + n + "\":" + ms
       }.mkString("{", ",", "}")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection main: prints explain("formatted") for the named
   * queries (or all). Used to keep the physical plans honest at scale —
   * check for PushedFilters on scans, broadcast joins on dims,
@@ -15,13 +13,7 @@ object Explain {
     val queryMap = SparkEntry.queries ++ SparkEntry.benchOnly
     val names = if (args.length > 1) args.drop(1).toSeq
       else queryMap.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.experimental.extraOptimizations ++= Seq(graft.plans.SpatialFilterPushdown)
+    val spark = Session("local[4]")
     names.foreach { n =>
       println(s"\n========== $n ==========")
       try queryMap(n)(spark, sfDir).explain("formatted")

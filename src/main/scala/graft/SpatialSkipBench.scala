@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.LongAdder
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions.{st_geomfromtext, st_intersects, st_point}
@@ -33,15 +32,7 @@ object SpatialSkipBench {
 
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 4000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.experimental.extraOptimizations ++= Seq(graft.plans.SpatialFilterPushdown)
+    val spark = Session(Session.localMaster(32), Some("/dev/shm/graft-spark"))
 
     val records = new LongAdder; val bytes = new LongAdder
     spark.sparkContext.addSparkListener(new SparkListener {

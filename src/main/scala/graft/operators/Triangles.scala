@@ -140,7 +140,7 @@ object Triangles {
     // parallel write, and the downstream bucket-layout read opens one
     // file per bucket (the q39 repartition-before-bucketBy treatment).
     // `clusterFirst=false` keeps the old shape for A/B measurement
-    // (graft.Profile g2bforms).
+    // (OPTIMIZATION_r20.md, "chg 4 — g2b vs g2 re-adjudication").
     (if (clusterFirst) oriented.repartition(buckets, col("u")) else oriented)
       .write
       .mode("overwrite").format("parquet")

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
 import graft.functions.GraftFunctions
 
@@ -10,13 +10,29 @@ import graft.functions.GraftFunctions
   * functions and optimizer rules into the session):
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions) ...
-  * // or: spark.sql.extensions=graft.plans.GraftExtensions
+  * spark-submit --conf spark.sql.extensions=graft.plans.GraftExtensions ...
   * }}}
+  *
+  * In-process entry points get the same functions and rule from
+  * [[graft.Session]], which calls [[GraftExtensions.install]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.injectInto(ext)
     ext.injectOptimizerRule(_ => SpatialFilterPushdown)
+  }
+}
+
+object GraftExtensions {
+
+  /** Install graft's functions and [[SpatialFilterPushdown]] into an
+    * existing session. Idempotent: the rule's presence guards the whole
+    * install, so a second call neither re-registers nor adds the rule twice.
+    */
+  def install(spark: SparkSession): Unit = synchronized {
+    if (!spark.experimental.extraOptimizations.contains(SpatialFilterPushdown)) {
+      GraftFunctions.register(spark)
+      spark.experimental.extraOptimizations ++= Seq(SpatialFilterPushdown)
+    }
   }
 }

@@ -855,7 +855,7 @@ object Relational extends QueryPack {
     // Crossover, re-adjudicated r20: the r19 array restructure removed
     // the orientation-subtree double-read this design existed to
     // amortize, so declarative g2 now WINS the single-query comparison —
-    // interleaved A/B (graft.Profile g2bforms) warm passes: g2 6.9-7.6 s
+    // interleaved A/B (OPTIMIZATION_r20.md chg 4) warm passes: g2 6.9-7.6 s
     // vs g2b 8.0-8.5 s (clustered write; 9.8-10.0 unclustered). g2b's
     // remaining premise is the one it documents for a REUSED layout:
     // the build-once cost amortizes across downstream readers (g2b's

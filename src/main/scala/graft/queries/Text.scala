@@ -1258,8 +1258,8 @@ object Text extends QueryPack {
       // consumers (the n_exact aggregate and the hit semi-join) re-run
       // only a few-hundred-row scan — the r19 caller-level
       // localCheckpoint on top re-materialized the orderBy for nothing
-      // (one extra job; the r20 interleaved A/B `graft.Profile
-      // recallforms` measured NO-OUTER faster in every warm pass:
+      // (one extra job; the r20 interleaved A/B in OPTIMIZATION_r20.md
+      // chg 3 measured NO-OUTER faster in every warm pass:
       // 5.36/4.69/4.48 vs 6.36/5.61/4.65 s). The LSH side also exits
       // minhashLshNearDupPairs localCheckpoint'ed.
       val exact = Dedup.jaccardNearDupPairs(docs, "doc_id", "text",

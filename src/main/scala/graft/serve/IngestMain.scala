@@ -1,7 +1,5 @@
 package graft.serve
 
-import org.apache.spark.sql.SparkSession
-
 /** One-shot ingest CLI — the deployment analogue of the reference's
   * `postgres-init` service (`docker-compose.yml:11-25` runs
   * `python load_data.py` once before the backend boots): load a raw
@@ -17,13 +15,7 @@ object IngestMain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: IngestMain <rawParquet> <layersParquet> [embeddingDim]")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-ingest")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
     val dim = if (args.length > 2) Some(args(2).toInt) else None
     val loaded = graft.operators.Ingest.run(
       spark, args(0), args(1), validateDim = dim, geoParquet = true)

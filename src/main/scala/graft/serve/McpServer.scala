@@ -132,7 +132,8 @@ final class McpServer(layers: DataFrame, encoder: String => Array[Float]) {
     *  - POST with a notification (no `id`) → 202 Accepted, empty body;
     *  - malformed JSON → -32700 error response (id null);
     *  - GET → 405 (this server opens no server-initiated SSE streams,
-    *    which the spec permits).
+    *    which the spec permits);
+    *  - a body past [[Http.MaxBodyBytes]] → 413, before buffering.
     * Port 0 = ephemeral; read the bound port off the returned server.
     * Handlers run on a bounded pool; concurrent calls are safe (Spark
     * actions are thread-safe on a shared session).
@@ -141,53 +142,19 @@ final class McpServer(layers: DataFrame, encoder: String => Array[Float]) {
     val server = HttpServer.create(new InetSocketAddress(port), 0)
     server.createContext("/mcp", new HttpHandler {
       override def handle(ex: HttpExchange): Unit =
-        try {
-          if (ex.getRequestMethod != "POST") {
-            reply(ex, 405, Some(error(JNull, -32600,
-              "streamable-http: POST JSON-RPC messages to this endpoint")))
-          } else if (ex.getRequestHeaders.getFirst("Content-Length") match {
-            case null => false
-            case cl => try cl.toLong > McpServer.MaxBodyBytes catch { case _: NumberFormatException => false }
-          }) {
-            // bound the body read BEFORE buffering — an oversized POST must
-            // not exhaust the serving JVM's heap (shared with Spark)
-            reply(ex, 413, Some(error(JNull, -32600,
-              s"request body exceeds ${McpServer.MaxBodyBytes} bytes")))
-          } else {
-            // chunked / unlabelled bodies get the same cap, enforced on read
-            val raw = ex.getRequestBody.readNBytes(McpServer.MaxBodyBytes + 1)
-            if (raw.length > McpServer.MaxBodyBytes) {
-              reply(ex, 413, Some(error(JNull, -32600,
-                s"request body exceeds ${McpServer.MaxBodyBytes} bytes")))
-            } else {
-            val body = new String(raw, UTF_8)
-            val resp =
-              try McpServer.this.handle(Json.parse(body))
-              catch { case e: JsonParseException =>
-                Some(error(JNull, -32700, s"parse error: ${e.getMessage}")) }
-            // a notification gets NO body — 202 per the MCP spec
-            resp match {
-              case Some(r) => reply(ex, 200, Some(r))
-              case None => reply(ex, 202, None)
-            }
-            }
-          }
-        } finally ex.close()
+        Http.post(ex, error(JNull, -32600, _)) { body =>
+          val resp =
+            try McpServer.this.handle(Json.parse(body))
+            catch { case e: JsonParseException =>
+              Some(error(JNull, -32700, s"parse error: ${e.getMessage}")) }
+          // a notification gets NO body — 202 per the MCP spec
+          (if (resp.isDefined) 200 else 202, resp)
+        }
     })
     server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(poolSize))
     server.start()
     server
   }
-
-  private def reply(ex: HttpExchange, status: Int, body: Option[JValue]): Unit =
-    body match {
-      case Some(b) =>
-        val bytes = b.render.getBytes(UTF_8)
-        ex.getResponseHeaders.set("Content-Type", "application/json")
-        ex.sendResponseHeaders(status, bytes.length.toLong)
-        ex.getResponseBody.write(bytes)
-      case None => ex.sendResponseHeaders(status, -1L)
-    }
 
   /** Serve line-delimited JSON-RPC until EOF (the MCP stdio transport). */
   def serve(in: InputStream, out: OutputStream): Unit = {
@@ -205,12 +172,4 @@ final class McpServer(layers: DataFrame, encoder: String => Array[Float]) {
       line = reader.readLine()
     }
   }
-}
-
-object McpServer {
-  /** Hard cap on a streamable-http POST body (4 MiB) — far above any
-    * legitimate JSON-RPC tool call, far below anything that could
-    * pressure the shared serving JVM's heap.
-    */
-  val MaxBodyBytes: Int = 4 * 1024 * 1024
 }

@@ -1,7 +1,6 @@
 package graft.serve
 
 import java.net.InetSocketAddress
-import java.nio.charset.StandardCharsets.UTF_8
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.DataFrame
@@ -28,7 +27,8 @@ import graft.operators.Search.{Point, SearchRequest}
   *    metadata_text}...], "error": null}.
   *
   * Scale posture: the endpoint is presentation, not data plane — request
-  * bodies are probe-sized and responses are limit<=10 rows, so the only
+  * bodies are probe-sized (capped at [[Http.MaxBodyBytes]], 413 past it)
+  * and responses are limit<=10 rows, so the only
   * cluster-sized work is the `Search.plan` scan itself. Handlers run on
   * a bounded pool; concurrent requests are safe (Spark actions are
   * thread-safe on a shared session).
@@ -123,23 +123,16 @@ object SearchServer {
     val server = HttpServer.create(new InetSocketAddress(port), 0)
     server.createContext("/search", new HttpHandler {
       override def handle(ex: HttpExchange): Unit =
-        try {
-          if (ex.getRequestMethod != "POST") {
-            reply(ex, 405, JObj.of("detail" -> JStr("method not allowed")))
-          } else {
-            val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-            val resp: (Int, JValue) =
-              try {
-                val req = decodeRequest(Json.parse(body), encoder)
-                Search.validate(req) // 422 analogue, like the decode
-                (200, encodeResponse(Search.search(layers, req)))
-              } catch {
-                case e: JsonParseException => (422, detail(e.getMessage))
-                case e: IllegalArgumentException => (422, detail(e.getMessage))
-              }
-            reply(ex, resp._1, resp._2)
+        Http.post(ex, detail) { body =>
+          try {
+            val req = decodeRequest(Json.parse(body), encoder)
+            Search.validate(req) // 422 analogue, like the decode
+            (200, Some(encodeResponse(Search.search(layers, req))))
+          } catch {
+            case e: JsonParseException => (422, Some(detail(e.getMessage)))
+            case e: IllegalArgumentException => (422, Some(detail(e.getMessage)))
           }
-        } finally ex.close()
+        }
     })
     server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(poolSize))
     server.start()
@@ -148,11 +141,4 @@ object SearchServer {
 
   private def detail(msg: String): JObj =
     JObj.of("detail" -> JArr(Vector(JObj.of("msg" -> JStr(msg)))))
-
-  private def reply(ex: HttpExchange, status: Int, body: JValue): Unit = {
-    val bytes = body.render.getBytes(UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "application/json")
-    ex.sendResponseHeaders(status, bytes.length.toLong)
-    ex.getResponseBody.write(bytes)
-  }
 }

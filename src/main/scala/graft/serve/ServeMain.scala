@@ -53,13 +53,7 @@ object ServeMain {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty,
       "usage: ServeMain <layersParquet> [httpPort=8080] [mcpPort=8081] [weightsPath]")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-serve")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
     start(spark, args(0),
       if (args.length > 1) args(1).toInt else 8080,
       if (args.length > 2) args(2).toInt else 8081,

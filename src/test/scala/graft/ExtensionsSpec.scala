@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,25 +8,11 @@ import graft.plans.SpatialFilterPushdown
 
 class ExtensionsSpec extends AnyFunSuite {
 
-  // separate session: extensions are builder-time configuration, and
-  // getOrCreate() would silently return the shared test session (ignoring
-  // withExtensions) unless the default/active slots are cleared first.
-  // The new session shares the existing SparkContext.
-  lazy val extSpark: SparkSession = {
-    val base = SparkTestSession.spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .config("spark.sql.shuffle.partitions", "2")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    SparkSession.setDefaultSession(base)
-    SparkSession.setActiveSession(base)
-    s
-  }
+  // graft.Session installs graft's functions and rule into the shared session
+  lazy val spark = SparkTestSession.spark
 
   test("extension-registered functions work from pure SQL") {
-    val d = extSpark.sql(
+    val d = spark.sql(
       "SELECT cosine_distance(array(1.0F, 0.0F), array(0.0F, 1.0F)) AS d, " +
         "st_astext(st_point(1.5D, 2.5D)) AS wkt")
       .head()
@@ -38,7 +23,7 @@ class ExtensionsSpec extends AnyFunSuite {
   test("round-17 functions resolve and evaluate from pure SQL") {
     // zunstd: RFC 8878 single-segment stored frame holding 'abc'
     // (magic, FHD 0x20, FCS 3, block header 1|3<<3 LE24, payload)
-    val r = extSpark.sql(
+    val r = spark.sql(
       "SELECT decode(zunstd(unhex('28B52FFD2003' || '190000' || '616263')), 'UTF-8') AS z, " +
         "ogg_crc(unhex('')) AS c0, ogg_crc(unhex('4F676753')) AS c1")
       .head()
@@ -46,7 +31,7 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(r.getLong(1) === 0L)
     assert(r.getLong(2) !== 0L)
     // the walks resolve from SQL and keep the NULL-in/NULL-out contract
-    val n = extSpark.sql(
+    val n = spark.sql(
       "SELECT pdf_meta(x) AS a, pdf_text(x) AS b, pdf_info(x) AS c, " +
         "flac_streaminfo(x) AS d, avi_frames(x) AS e, ogg_meta(x) AS f " +
         "FROM (SELECT CAST(NULL AS BINARY) AS x)")
@@ -62,7 +47,7 @@ class ExtensionsSpec extends AnyFunSuite {
       "01000261626300" + "00" +              // chunk(abc) | end | pad
       "0001130303A560D8" +                   // index + crc32
       "06729E7A010000000000595A"             // footer
-    val r = extSpark.sql(
+    val r = spark.sql(
       s"SELECT decode(zunxz(unhex('$xzAbc')), 'UTF-8') AS x, " +
         "le_hex(258, 4) AS l4, le_hex(CAST(65535 AS BIGINT), 2) AS l2, " +
         "zunxz(CAST(NULL AS BINARY)) AS n, zunxz(unhex('FD37')) AS torn")
@@ -76,7 +61,7 @@ class ExtensionsSpec extends AnyFunSuite {
     val hc = (net.jpountz.xxhash.XXHashFactory.fastestInstance().hash32()
       .hash(Array[Byte](0x60, 0x40), 0, 2, 0) >> 8) & 0xFF
     val lz4Abc = f"04224D186040$hc%02X" + "03000080" + "616263" + "00000000"
-    val r2 = extSpark.sql(
+    val r2 = spark.sql(
       "SELECT decode(zunbz2(bzip2_deflate(encode('abc', 'UTF-8'))), 'UTF-8') AS b, " +
         s"decode(zunlz4(unhex('$lz4Abc')), 'UTF-8') AS l, " +
         "zunbz2(unhex('425A6830')) AS badDigit, " +
@@ -88,7 +73,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("SQL robots functions: literal agent works, a non-literal agent is a clean analysis error") {
-    val ok = extSpark.sql(
+    val ok = spark.sql(
       "SELECT robots_allowed('User-agent: *\nDisallow: /x\n', '/x1', 'bot') AS a, " +
         "robots_crawl_delay('User-agent: *\nCrawl-delay: 4\n', 9L, 'bot') AS d")
       .head()
@@ -97,19 +82,19 @@ class ExtensionsSpec extends AnyFunSuite {
     // a non-literal agent argument must raise an AnalysisException at
     // plan time, not a ClassCastException at build time
     val e = intercept[Exception] {
-      extSpark.sql("SELECT robots_allowed('User-agent: *\n', '/p', CAST(id AS STRING)) " +
+      spark.sql("SELECT robots_allowed('User-agent: *\n', '/p', CAST(id AS STRING)) " +
         "FROM range(3)").collect()
     }
     assert(e.getMessage.contains("string literal"), e.getMessage)
   }
 
   test("SpatialFilterPushdown adds sargable bbox conjuncts that reach the parquet scan") {
-    import extSpark.implicits._
+    import spark.implicits._
     // parquet-backed so ConvertToLocalRelation can't fold the filter away
     val dir = java.nio.file.Files.createTempDirectory("graft-bbox").toString
     Seq((1L, 0.0, 0.0), (2L, 10.0, 10.0), (3L, 100.0, 100.0))
       .toDF("id", "x", "y").write.mode("overwrite").parquet(dir)
-    val filtered = extSpark.read.parquet(dir).filter(
+    val filtered = spark.read.parquet(dir).filter(
       st_distance(st_point(col("x"), col("y")), st_point(lit(0.0), lit(0.0))) < 20.0)
     val optimized = filtered.queryExecution.optimizedPlan.toString
     assert(optimized.contains(">=") && optimized.contains("<="),
@@ -123,7 +108,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("SpatialFilterPushdown derives envelope conjuncts from st_intersects/contains/within") {
-    import extSpark.implicits._
+    import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-env").toString
     Seq((1L, 1.0, 1.0), (2L, 5.0, 5.0), (3L, 50.0, 50.0))
       .toDF("id", "x", "y").write.mode("overwrite").parquet(dir)
@@ -133,7 +118,7 @@ class ExtensionsSpec extends AnyFunSuite {
         "intersects-flipped" -> st_intersects(st_point(col("x"), col("y")), st_geomfromtext(rect)),
         "contains" -> st_contains(st_geomfromtext(rect), st_point(col("x"), col("y"))),
         "within" -> st_within(st_point(col("x"), col("y")), st_geomfromtext(rect)))) {
-      val filtered = extSpark.read.parquet(dir).filter(pred)
+      val filtered = spark.read.parquet(dir).filter(pred)
       val physical = filtered.queryExecution.executedPlan.toString
       assert(physical.contains("PushedFilters: [") &&
         physical.contains("GreaterThanOrEqual(x,"),
@@ -144,7 +129,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("rule is a no-op without a constant center or without st_distance") {
-    import extSpark.implicits._
+    import spark.implicits._
     val df = Seq((1L, 1.0, 2.0, 3.0, 4.0)).toDF("id", "x", "y", "cx", "cy")
     // variable center: no rewrite, still correct
     val dynamic = df.filter(
@@ -156,7 +141,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("rule reaches fixpoint (no duplicate conjuncts on re-application)") {
-    import extSpark.implicits._
+    import spark.implicits._
     val df = Seq((1L, 0.0, 0.0)).toDF("id", "x", "y")
     val filtered = df.filter(
       st_distance(st_point(col("x"), col("y")), st_point(lit(0.0), lit(0.0))) < 1.0)

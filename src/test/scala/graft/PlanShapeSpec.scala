@@ -9,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * region/nation broadcasts to shuffle joins).
   */
 class PlanShapeSpec extends AnyFunSuite {
-  lazy val spark = {
-    val s = SparkTestSession.spark
-    // same rule injection as Verify/Bench (builder extensions can't attach
-    // to the shared test session)
-    if (!s.experimental.extraOptimizations.contains(graft.plans.SpatialFilterPushdown))
-      s.experimental.extraOptimizations ++= Seq(graft.plans.SpatialFilterPushdown)
-    s
-  }
+  lazy val spark = SparkTestSession.spark
   import SparkTestSession.sfDir
 
   private def planOf(name: String): String =

@@ -345,9 +345,19 @@ class ServeSpec extends AnyFunSuite {
     } finally { http.stop(0); mcp.stop(0) }
   }
 
+  test("http: a /search body over the cap is 413, not buffered") {
+    withServer { (c, port) =>
+      val pad = "x" * (Http.MaxBodyBytes + 1024)
+      val r = post(c, port, s"""{"request_string":"$pad"}""")
+      assert(r.statusCode() === 413)
+      // the same server still answers a normal request afterwards
+      assert(post(c, port, """{"request_string":"red"}""").statusCode() === 200)
+    }
+  }
+
   test("mcp http: oversized bodies refuse with 413 before buffering") {
     withMcpHttp { (client, port) =>
-      val pad = "x" * (McpServer.MaxBodyBytes + 1024)
+      val pad = "x" * (Http.MaxBodyBytes + 1024)
       val r = postMcp(client, port,
         s"""{"jsonrpc":"2.0","id":1,"method":"tools/list","params":{"pad":"$pad"}}""")
       assert(r.statusCode === 413)

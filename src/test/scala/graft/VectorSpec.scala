@@ -9,18 +9,12 @@ import graft.operators.{Ivf, Knn}
 
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    // a fresh warehouse per test JVM: managed tables left by an earlier
+    // run would make saveAsTable refuse their locations. Spark reads
+    // spark.* system properties when it builds the context.
+    System.setProperty("spark.sql.warehouse.dir",
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+    Session("local[4]", Some("/dev/shm/graft-spark"))
   }
   val sfDir = "/root/testdata/sf0.001"
 }

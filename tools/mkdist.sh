@@ -36,7 +36,6 @@ SPARK_JARS="\${SPARK_JARS:-/opt/spark/jars}"
 ADD_OPENS=""
 for p in $OPENS; do ADD_OPENS="\$ADD_OPENS --add-opens \$p=ALL-UNNAMED"; done
 exec java \$ADD_OPENS -Xmx"\${GRAFT_MEM:-4g}" \\
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \\
   -cp "\$HERE/graft.jar:\$SPARK_JARS/*" $2 "\$@"
 EOF
   chmod +x "dist/bin/$1"
