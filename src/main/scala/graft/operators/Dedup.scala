@@ -84,14 +84,11 @@ object Dedup {
     * cheap explode per consumer (or checkpoint to a bucketed table
     * upstream) instead of caching rows x shingles.
     *
-    * Pair-volume guard: the self-join's candidate volume is EXACTLY
-    * sum over post-blocking shingles of df*(df-1)/2 — a one-row aggregate
-    * over the df table the blocking step needs anyway. When a corpus's
-    * vocabulary is too small for `maxDf` to prune (the regime the sf1
-    * sweep entered silently at ~1e8 pairs), this operator now refuses
-    * loudly with the scale path named, instead of absorbing a quadratic
-    * shuffle — same posture as `Knn.nearDupPairs`' row guard. Raise
-    * `maxPairEstimate` deliberately to run the exact baseline anyway.
+    * Pair-volume guard ([[Pairs.volume]], counted over the df table the
+    * blocking step needs anyway): when a corpus's vocabulary is too small
+    * for `maxDf` to prune (the sf1 regime, ~1e8 pairs), this refuses
+    * loudly with the scale path named. Raise `maxPairEstimate`
+    * deliberately to run the exact baseline anyway.
     */
   def jaccardNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
                           n: Int = 3, minJaccard: Double = 0.5,
@@ -108,10 +105,7 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val kept = maxDf.fold(dfs)(m => dfs.filter(col("df") <= m))
-      // long arithmetic end-to-end (Spark's `/` is double division); the
-      // halving happens driver-side on the summed long
-      val est = kept.agg(sum(col("df") * (col("df") - lit(1L)))).head()
-      val pairVolume = (if (est.isNullAt(0)) 0L else est.getLong(0)) / 2
+      val pairVolume = kept.agg(Pairs.volume(col("df"))).head().getLong(0)
       if (pairVolume > maxPairEstimate && fallbackToLsh) {
         // opt-in graceful degrade for pipeline users: route past-cap
         // inputs to the LSH scale path (same n and threshold) instead of
@@ -148,17 +142,9 @@ object Dedup {
     try {
       // sizes over the same (possibly df-filtered) universe as the numerator
       val sizes = ex.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-      // candidate pairs from per-shingle sorted POSTING ARRAYS (bounded by
-      // maxDf after blocking): one groupBy of the exploded table, then
-      // posexplode + slice emits each id1 < id2 pair once — the posting
-      // self-join generated df^2 rows per shingle and filtered half away
-      // (guide §2.3/§2.4: half the generated rows, one exchange instead of
-      // the join's pair)
-      val common = ex.groupBy(col("s"))
-        .agg(sort_array(collect_list(col("id"))).as("ids"))
-        .select(col("ids"), posexplode(col("ids")).as(Seq("i", "id1")))
-        .select(col("id1"),
-          explode(expr("slice(ids, i + 2, size(ids))")).as("id2"))
+      // candidate pairs from per-shingle posting buckets (bounded by
+      // maxDf after blocking), each id1 < id2 pair once
+      val common = Pairs.within(ex, Seq("s"), "id")
         .groupBy(col("id1"), col("id2"))
         .agg(count(lit(1)).as("common"))
       common
@@ -215,23 +201,17 @@ object Dedup {
     val keptEx =
       try {
         val kept = dfs.filter(col("df") <= maxDf)
-        val est = kept.agg(sum(col("df") * (col("df") - lit(1L)))).head()
-        val pairVolume = (if (est.isNullAt(0)) 0L else est.getLong(0)) / 2
-        require(pairVolume <= maxPairEstimate,
+        Pairs.guard(kept, "df", maxPairEstimate) { pairVolume =>
           s"sharedWindowPairs would shuffle ~$pairVolume candidate pairs " +
             s"after maxDf=$maxDf blocking (> $maxPairEstimate): lower maxDf " +
             "(more aggressive boilerplate blocking), raise w (rarer " +
-            "windows), or raise maxPairEstimate deliberately")
+            "windows), or raise maxPairEstimate deliberately"
+        }
         // single consumer downstream (the postings groupBy) — no persist
         ex.join(kept.select(col("win")), "win").select(col("id"), col("win"))
       } finally dfs.unpersist()
-    // per-window sorted posting arrays (bounded by maxDf) -> each
-    // id1 < id2 pair once, instead of the df^2-row posting self-join
-    keptEx.groupBy(col("win"))
-      .agg(sort_array(collect_list(col("id"))).as("ids"))
-      .select(col("ids"), posexplode(col("ids")).as(Seq("i", "id1")))
-      .select(col("id1"),
-        explode(expr("slice(ids, i + 2, size(ids))")).as("id2"))
+    // per-window posting buckets (bounded by maxDf), each id1 < id2 pair once
+    Pairs.within(keptEx, Seq("win"), "id")
       .groupBy(col("id1"), col("id2"))
       .agg(count(lit(1)).as("n_shared"))
       .orderBy(col("id1"), col("id2"))
@@ -518,10 +498,18 @@ object Dedup {
     * lifecycle as [[incrementalNearDupNew]]; pairs are bounded by the
     * bucket-colliding candidates that survive verification, far below
     * the corpus-sized shingles the cache held.
+    *
+    * Bucket-volume guard: a degenerate corpus (many identical documents)
+    * puts all their ids into one array row per band, so the exact
+    * candidate volume is counted over the banding first and refused past
+    * `maxPairEstimate` ([[Pairs]]). The banding is materialized once (a
+    * lazy localCheckpoint, the [[hammingPairs]] lifecycle) so the guard
+    * and the generation do not both compute the signatures.
     */
   def minhashLshNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
                              n: Int = 3, numHashes: Int = 128, bands: Int = 32,
-                             minJaccard: Double = 0.5): DataFrame = {
+                             minJaccard: Double = 0.5,
+                             maxPairEstimate: Long = 50000000L): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rows = numHashes / bands
     val sh = shingled(docs, idCol, textCol, n).cache()
@@ -535,13 +523,17 @@ object Dedup {
       val banded = sig
         .select(col("id"), explode(array(bandStructs: _*)).as("bb"))
         .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-      // per-(band, bucket) sorted id arrays -> each colliding id1 < id2
-      // pair once, instead of the bucket self-join's |bucket|^2 rows
-      val cand = banded.groupBy(col("band"), col("bucket"))
-        .agg(sort_array(collect_list(col("id"))).as("ids"))
-        .select(col("ids"), posexplode(col("ids")).as(Seq("i", "id1")))
-        .select(col("id1"),
-          explode(expr("slice(ids, i + 2, size(ids))")).as("id2"))
+        .localCheckpoint(false)
+      Pairs.guard(banded.groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("df")),
+        "df", maxPairEstimate) { pairVolume =>
+        s"minhashLshNearDupPairs would materialize ~$pairVolume candidate " +
+          s"pairs from per-band buckets (> $maxPairEstimate): the corpus is " +
+          "too degenerate for band blocking (near-identical documents share " +
+          "every band). Pre-dedup exact duplicates first (exactDupGroups), " +
+          "use more rows per band, or raise maxPairEstimate deliberately"
+      }
+      val cand = Pairs.within(banded, Seq("band", "bucket"), "id")
+        .select(col("id1"), col("id2"))
         .distinct()
       // verify candidates with exact Jaccard (arrays are already distinct)
       cand
@@ -557,12 +549,15 @@ object Dedup {
 
   /** SimHash near-dup pairs: 64-bit fingerprints, candidates from equal
     * 16-bit chunks, verified by hamming distance <= maxHamming (<= 3 for
-    * the pigeonhole guarantee with 4 chunks).
+    * the pigeonhole guarantee with 4 chunks). `maxPairEstimate` is the
+    * candidate-volume cap of [[hammingPairs]].
     */
   def simhashNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
-                          n: Int = 3, maxHamming: Int = 3): DataFrame =
+                          n: Int = 3, maxHamming: Int = 3,
+                          maxPairEstimate: Long = 50000000L): DataFrame =
     hammingPairs(spread(docs).select(col(idCol).as("id"),
-      simhash64(shingle_set(col(textCol), n)).as("sig")), maxHamming)
+      simhash64(shingle_set(col(textCol), n)).as("sig")), maxHamming,
+      maxPairEstimate)
 
   /** The 64-bit hamming blocker alone, over ANY (id, sig) signature
     * table — SimHash (d4), the image aHash (d23), or any other 64-bit
@@ -571,24 +566,15 @@ object Dedup {
     * equal), verified by bit_count before the distinct so the dedup
     * shuffle only carries true near-dups.
     *
-    * Bucket-volume guard (guide §2.5): the per-(chunk, v) posting arrays
-    * are UNbounded — a degenerate corpus (many all-zero simhashes, one
-    * hot 16-bit chunk value) makes one task materialize a |bucket|-sized
-    * array in a single row, a straight OOM/2 GB-row failure at 100 TB
-    * where the old self-join merely streamed |bucket|^2 rows. Candidate
-    * volume is EXACTLY sum over buckets of df*(df-1)/2 — one cheap
-    * combinable aggregate over the chunk table — so this refuses loudly
-    * past `maxPairEstimate` (which also bounds the largest single bucket
-    * at ~sqrt(2*cap) entries), the jaccardNearDupPairs/sharedWindowPairs
-    * discipline.
+    * Bucket-volume guard (guide §2.5): a degenerate corpus (many all-zero
+    * simhashes, one hot 16-bit chunk value) puts the corpus into one
+    * (chunk, v) array row, so the exact candidate volume is counted first
+    * and refused past `maxPairEstimate` ([[Pairs]]).
     *
     * The (id, sig) input is materialized ONCE via a lazy localCheckpoint
-    * (GC-released blocks — the docVectors lifecycle, no unpersist
-    * bookkeeping): sig columns are typically expensive per-row kernels
-    * (d4's simhash over shingles, d23/x18's image decode + aHash), and
-    * both the guard aggregate and the pair generation read them — without
-    * the checkpoint the guard would re-run the decode pass. One row of
-    * (id, long) per document: node-sized at any corpus scale.
+    * (GC-released blocks, no unpersist bookkeeping): sig columns are
+    * typically expensive per-row kernels (d4's simhash, d23's image
+    * decode + aHash), and both the guard and the generation read them.
     */
   def hammingPairs(sigs: DataFrame, maxHamming: Int = 3,
                    maxPairEstimate: Long = 50000000L): DataFrame = {
@@ -600,30 +586,22 @@ object Dedup {
       struct(lit(c).as("chunk"),
         shiftright(col("sig"), c * 16).bitwiseAND(lit(0xffffL)).as("v"))
     }
-    // per-(chunk, v) sorted (id, sig) arrays -> each colliding id1 < id2
-    // pair once (ids are unique, so the struct sort IS the id sort),
-    // instead of the chunk self-join's |bucket|^2 rows — the same
-    // guide §2.3/§2.4 restructure as the jaccard/minhash/wedge pair
-    // generators this round; the hamming verify runs BEFORE the
-    // distinct so its exchange only carries true near-dups (unchanged)
+    // per-(chunk, v) (id, sig) elements: ids are unique, so the struct
+    // order IS the id order; the hamming verify runs BEFORE the distinct
+    // so its exchange only carries true near-dups
     val chunked = sg
       .select(explode(array(chunkStructs: _*)).as("cc"),
         struct(col("id"), col("sig")).as("e"))
       .select(col("cc.chunk").as("chunk"), col("cc.v").as("v"), col("e"))
-    val est = chunked.groupBy(col("chunk"), col("v"))
-      .agg(count(lit(1)).as("df"))
-      .agg(sum(col("df") * (col("df") - lit(1L)))).head()
-    val pairVolume = (if (est.isNullAt(0)) 0L else est.getLong(0)) / 2
-    require(pairVolume <= maxPairEstimate,
+    Pairs.guard(chunked.groupBy(col("chunk"), col("v")).agg(count(lit(1)).as("df")),
+      "df", maxPairEstimate) { pairVolume =>
       s"hammingPairs would materialize ~$pairVolume candidate pairs from " +
         s"per-chunk posting buckets (> $maxPairEstimate): the signature " +
         "distribution is too degenerate for 16-bit chunk blocking (hot " +
         "chunk values own the corpus). Split or pre-filter the hot " +
-        "signatures, or raise maxPairEstimate deliberately")
-    chunked.groupBy(col("chunk"), col("v"))
-      .agg(sort_array(collect_list(col("e"))).as("es"))
-      .select(col("es"), posexplode(col("es")).as(Seq("i", "e1")))
-      .select(col("e1"), explode(expr("slice(es, i + 2, size(es))")).as("e2"))
+        "signatures, or raise maxPairEstimate deliberately"
+    }
+    Pairs.within(chunked, Seq("chunk", "v"), "e", ("es", "e1", "e2"))
       .filter(bit_count(col("e1.sig").bitwiseXOR(col("e2.sig"))) <= maxHamming)
       .select(col("e1.id").as("id1"), col("e2.id").as("id2"))
       .distinct()
@@ -700,12 +678,11 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val kept = maxDf.fold(dfs)(m => dfs.filter(col("df") <= m))
-      val est = kept.agg(sum(col("df") * (col("df") - lit(1L)))).head()
-      val pairVolume = (if (est.isNullAt(0)) 0L else est.getLong(0)) / 2
-      require(pairVolume <= maxPairEstimate,
+      Pairs.guard(kept, "df", maxPairEstimate) { pairVolume =>
         s"containmentPairs would shuffle ~$pairVolume candidate pairs " +
           s"after maxDf=$maxDf blocking (> $maxPairEstimate): tighten " +
-          "maxDf or raise maxPairEstimate deliberately")
+          "maxDf or raise maxPairEstimate deliberately"
+      }
       maxDf.foreach { _ =>
         ex = ex.join(kept.select(col("s")), "s").select(col("id"), col("s"))
       }
@@ -715,13 +692,8 @@ object Dedup {
     ex = ex.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val sizes = ex.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-      // per-shingle sorted posting arrays (bounded by maxDf) -> each
-      // id1 < id2 pair once, instead of the df^2-row posting self-join
-      val common = ex.groupBy(col("s"))
-        .agg(sort_array(collect_list(col("id"))).as("ids"))
-        .select(col("ids"), posexplode(col("ids")).as(Seq("i", "id1")))
-        .select(col("id1"),
-          explode(expr("slice(ids, i + 2, size(ids))")).as("id2"))
+      // per-shingle posting buckets (bounded by maxDf), each id1 < id2 pair once
+      val common = Pairs.within(ex, Seq("s"), "id")
         .groupBy(col("id1"), col("id2"))
         .agg(count(lit(1)).as("common"))
         .join(sizes.toDF("id1", "sz1"), "id1")

@@ -295,15 +295,15 @@ object Knn {
     * the pair space never materializes. Exposed separately so tests (and
     * capacity planning) can measure the candidate volume.
     *
-    * Bucket-volume guard (guide §2.5): the per-(band, bucket) id arrays
-    * are UNbounded — a degenerate corpus (e.g. near-identical embeddings
-    * hashing every row into one bucket per band) makes one task
-    * materialize a |bucket|-sized array in a single row, an OOM/2 GB-row
-    * failure at scale. Candidate volume is EXACTLY sum over buckets of
-    * df*(df-1)/2 — one cheap combinable aggregate over the banding — so
-    * this refuses loudly past `maxPairEstimate` (which also bounds the
-    * largest single bucket at ~sqrt(2*cap) ids), the Dedup pair-generator
-    * discipline. The generation plan for normal corpora is unchanged.
+    * Bucket-volume guard (guide §2.5): a degenerate corpus (e.g.
+    * near-identical embeddings hashing every row into one bucket per band)
+    * puts the corpus into one array row, so the exact candidate volume is
+    * counted first and refused past `maxPairEstimate` ([[Pairs]]).
+    *
+    * The (id, band, bucket) banding is materialized ONCE via a lazy
+    * localCheckpoint (GC-released blocks, the [[Dedup.hammingPairs]]
+    * lifecycle): `hyperplane_bands` runs over every row, and both the
+    * guard aggregate and the pair generation read it.
     */
   def lshCandidatePairs(corpus: DataFrame, idCol: String, embCol: String,
                         bands: Int, rowsPerBand: Int, seed: Long,
@@ -312,23 +312,17 @@ object Knn {
       .select(col(idCol).as("id"),
         posexplode(hyperplane_bands(col(embCol), bands, rowsPerBand, seed))
           .as(Seq("band", "bucket")))
-    val est = banded.groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("df"))
-      .agg(sum(col("df") * (col("df") - lit(1L)))).head()
-    val pairVolume = (if (est.isNullAt(0)) 0L else est.getLong(0)) / 2
-    require(pairVolume <= maxPairEstimate,
+      .localCheckpoint(false)
+    Pairs.guard(banded.groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("df")),
+      "df", maxPairEstimate) { pairVolume =>
       s"lshCandidatePairs would materialize ~$pairVolume candidate pairs " +
         s"from per-band posting buckets (> $maxPairEstimate): the " +
         "embedding distribution defeats hyperplane blocking (hot buckets " +
         "own the corpus). Use more rowsPerBand (rarer buckets), pre-dedup " +
-        "exact duplicates first, or raise maxPairEstimate deliberately")
-    // per-(band, bucket) sorted id arrays -> each colliding id1 < id2
-    // pair once, instead of the bucket self-join's |bucket|^2 rows
-    banded.groupBy(col("band"), col("bucket"))
-      .agg(sort_array(collect_list(col("id"))).as("ids"))
-      .select(col("ids"), posexplode(col("ids")).as(Seq("i", "id1")))
-      .select(col("id1"),
-        explode(expr("slice(ids, i + 2, size(ids))")).as("id2"))
+        "exact duplicates first, or raise maxPairEstimate deliberately"
+    }
+    Pairs.within(banded, Seq("band", "bucket"), "id")
+      .select(col("id1"), col("id2"))
       .distinct()
   }
 
@@ -345,12 +339,15 @@ object Knn {
     *
     * If `embCol` is an expensive derived expression, pre-materialize it
     * (`.select(...).cache()`) — the column is evaluated on both the banding
-    * and the verification branch.
+    * and the verification branch. `maxPairEstimate` is the candidate-volume
+    * cap of [[lshCandidatePairs]].
     */
   def lshNearDupPairs(corpus: DataFrame, idCol: String, embCol: String,
                       minSim: Double, bands: Int = 64, rowsPerBand: Int = 12,
-                      seed: Long = 42L): DataFrame = {
-    val cand = lshCandidatePairs(corpus, idCol, embCol, bands, rowsPerBand, seed)
+                      seed: Long = 42L,
+                      maxPairEstimate: Long = 50000000L): DataFrame = {
+    val cand = lshCandidatePairs(corpus, idCol, embCol, bands, rowsPerBand, seed,
+      maxPairEstimate)
     val emb = corpus.select(col(idCol), col(embCol))
     cand
       .join(emb.toDF("id1", "emb1"), "id1")
@@ -388,13 +385,10 @@ object Knn {
                     minSim: Double, nlist: Int, iters: Int = 5,
                     pairCap: Long = 50000000L): DataFrame = {
     val a = Ivf.build(corpus, idCol, embCol, nlist, iters).assigned
-    val volRow = a.groupBy(col("bucket")).agg(count(lit(1)).as("n"))
-      .agg(sum(col("n") * (col("n") - lit(1L))).as("twice_pairs"))
-      .head()
-    val pairs = if (volRow.isNullAt(0)) 0L else volRow.getLong(0) / 2
-    require(pairs <= pairCap,
+    Pairs.guard(a.groupBy(col("bucket")).agg(count(lit(1)).as("n")), "n", pairCap) { pairs =>
       s"semanticDedup: intra-cluster pair volume $pairs exceeds cap $pairCap" +
-        " — raise nlist (smaller clusters) or pairCap deliberately")
+        " — raise nlist (smaller clusters) or pairCap deliberately"
+    }
     val l = a.select(col("bucket"), col("id").as("id1"), col("emb").as("emb1"))
     val r = a.select(col("bucket"), col("id").as("id2"), col("emb").as("emb2"))
     val dropped = l.join(r, Seq("bucket"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Neighborhood-overlap link prediction (common-neighbor and Jaccard
@@ -10,11 +10,10 @@ import org.apache.spark.sql.functions._
   *
   * Shape: candidate pairs are exactly the WEDGES of the graph — for
   * each center c, every unordered pair of its neighbors — generated
-  * once each from per-center sorted adjacency arrays (one groupBy on
-  * the center key + posexplode/slice, no self-join) and counted with
-  * one combinable count, then anti-joined against the edge set so only
-  * genuinely new links remain, then degree-joined for the Jaccard
-  * denominator. All arithmetic is integer (counts, degrees, ppm
+  * once each by [[Pairs.within]] (one groupBy on the center key, no
+  * self-join) and counted with one combinable count, then anti-joined
+  * against the edge set so only genuinely new links remain, then
+  * degree-joined for the Jaccard denominator. All arithmetic is integer (counts, degrees, ppm
   * quotient), bit-stable across engines.
   *
   * Scale posture: wedge volume is Σ_c deg(c)·(deg(c)−1)/2 — quadratic
@@ -67,22 +66,16 @@ object LinkPredict {
     val deg = adj.groupBy(col("c")).agg(count(lit(1)).as("d"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // the guard aggregate also reads off the id range: ids in
-      // [0, 2^31) let the dominant wedge aggregation key on ONE packed
-      // long instead of two (guide §2.3 "narrower types" — half the key
-      // bytes through the wedge-volume exchange and a primitive-long
-      // hash in the aggregate); out-of-range or non-castable ids keep
-      // the two-column key, same results either way
-      val est = deg.agg(sum(col("d") * (col("d") - lit(1L))),
-        min(col("c").cast("long")), max(col("c").cast("long"))).head()
-      val wedgeVolume = (if (est.isNullAt(0)) 0L else est.getLong(0)) / 2
+      // the guard aggregate also reads off the id range, so the dominant
+      // wedge aggregation keys on ONE packed long when the ids fit
+      val est = deg.agg(Pairs.volume(col("d")), Pairs.idRange(col("c")): _*).head()
+      val wedgeVolume = est.getLong(0)
       require(wedgeVolume <= maxWedgeEstimate,
         s"commonNeighbors would enumerate ~$wedgeVolume wedges (sum of " +
           s"deg*(deg-1)/2 over centers) > maxWedgeEstimate=$maxWedgeEstimate; " +
           "cap hub degrees (commonNeighborsCapped) or sample centers, or " +
           "raise maxWedgeEstimate deliberately")
-      val packable = !est.isNullAt(1) && !est.isNullAt(2) &&
-        est.getLong(1) >= 0L && est.getLong(2) < (1L << 31)
+      val packable = Pairs.fits(est, 1)
       // pair-aggregation parallelism derived from the MEASURED wedge
       // volume (profiled at sf0.1: the wedge stage inherits the
       // adjacency exchange's AQE-coalesced partition count, so the
@@ -91,10 +84,8 @@ object LinkPredict {
       // combining is worthless here anyway — repartitioning the RAW
       // pairs to volume-scaled partitions and aggregating ONCE measured
       // 27 -> 11.4 s for the aggregation stage). ~1.5M pair rows
-      // (~12 MB packed) per task, floored at the session parallelism,
-      // capped to keep task counts bounded at any scale.
-      val parts = math.max(adj.sparkSession.sparkContext.defaultParallelism,
-        math.min(4096L, wedgeVolume / 1500000L + 1L).toInt)
+      // (~12 MB packed) per task.
+      val parts = Pairs.partitions(adj.sparkSession, wedgeVolume, 1500000L)
       // realize the k-row result eagerly so the finally can release the
       // cached tables without a later action re-running the whole plan
       // uncached (the LabelProp/Occupancy cleanup pattern)
@@ -140,39 +131,29 @@ object LinkPredict {
       val okCenters = deg.filter(col("d") <= lit(maxDegree)).select(col("c"))
       val cappedAdj = adj.join(okCenters, "c")
       // ONE pre-aggregate over the cached degree table reads off the
-      // capped wedge volume (for volume-scaled aggregation parallelism —
-      // the scoreWedges repartition-first treatment; the wedge stage
-      // otherwise inherits the adjacency exchange's AQE-coalesced
-      // partition count and the pair aggregate runs nearly
-      // unparallelized) and the id range (for the packed pair key).
-      val pre = deg.agg(
-        sum(when(col("d") <= lit(maxDegree), col("d") * (col("d") - lit(1L)))),
-        min(col("c").cast("long")), max(col("c").cast("long"))).head()
-      val cappedVolume = (if (pre.isNullAt(0)) 0L else pre.getLong(0)) / 2
-      val packable = !pre.isNullAt(1) && !pre.isNullAt(2) &&
-        pre.getLong(1) >= 0L && pre.getLong(2) < (1L << 31)
-      val parts = math.max(adj.sparkSession.sparkContext.defaultParallelism,
-        math.min(4096L, cappedVolume / 1500000L + 1L).toInt)
-      val idType = adj.schema("n").dataType
-      def pk(u: Column, v: Column): Column =
-        shiftleft(u.cast("long"), 32) + v.cast("long")
+      // capped wedge volume (aggregate parallelism, the scoreWedges
+      // repartition-first treatment) and the id range (packed pair key)
+      val pre = deg.agg(Pairs.volume(when(col("d") <= lit(maxDegree), col("d"))),
+        Pairs.idRange(col("c")): _*).head()
+      val packable = Pairs.fits(pre, 1)
+      val parts = Pairs.partitions(adj.sparkSession, pre.getLong(0), 1500000L)
+      val (pu, pv) = Pairs.unpack(col("pk"), adj.schema("n").dataType)
+      val wedges = Pairs.within(cappedAdj, Seq("c"), "n", ("ns", "u", "v"))
       // candidate pool: top k*refineFactor NEW pairs by capped count,
       // realized eagerly (R rows) so everything downstream is
       // candidate-bounded; (ccn desc, pk) ordering == (ccn desc, u, v)
-      // for the non-negative packed ids
       val gen = (if (packable)
-        wedgePairs(cappedAdj)
-          .select(pk(col("u"), col("v")).as("pk"))
+        wedges
+          .select(Pairs.pack(col("u"), col("v")).as("pk"))
           .repartition(parts, col("pk"))
           .groupBy(col("pk")).agg(count(lit(1)).as("ccn"))
-          .join(e.select(pk(col("a"), col("b")).as("pk")),
+          .join(e.select(Pairs.pack(col("a"), col("b")).as("pk")),
             Seq("pk"), "left_anti")
           .orderBy(col("ccn").desc, col("pk").asc)
           .limit(k * refineFactor)
-          .select(shiftrightunsigned(col("pk"), 32).cast(idType).as("u"),
-            col("pk").bitwiseAND(lit(0xFFFFFFFFL)).cast(idType).as("v"))
+          .select(pu.as("u"), pv.as("v"))
       else
-        wedgePairs(cappedAdj)
+        wedges.select(col("u"), col("v"))
           .repartition(parts, col("u"), col("v"))
           .groupBy(col("u"), col("v")).agg(count(lit(1)).as("ccn"))
           .join(e, col("u") === col("a") && col("v") === col("b"), "left_anti")
@@ -201,28 +182,12 @@ object LinkPredict {
     } finally { e.unpersist(); adj.unpersist(); deg.unpersist() }
   }
 
-  /** Wedge pairs (u < v) generated from per-center adjacency ARRAYS:
-    * one groupBy of the adjacency (neighbors sorted ascending — distinct
-    * per center, so u < v strictly), then posexplode + slice emits each
-    * unordered pair exactly once. The self-join formulation produced
-    * sum-of-d^2 join rows and filtered half away; this emits the
-    * d(d-1)/2 wedges directly and removes the join (guide §2.3/§2.4).
-    * Skew is unchanged (a center's wedges were already generated in one
-    * task by the join's hash(c) partitioning); array size = degree.
-    */
-  private def wedgePairs(adj: DataFrame): DataFrame =
-    adj.groupBy(col("c"))
-      .agg(sort_array(collect_list(col("n"))).as("ns"))
-      .select(col("ns"), posexplode(col("ns")).as(Seq("i", "u")))
-      .select(col("u"), explode(expr("slice(ns, i + 2, size(ns))")).as("v"))
-
   /** Shared scoring tail: count co-neighbors per wedge pair, drop
     * existing edges, join TRUE degrees, integer Jaccard, top-k.
-    * With `packed` (caller proved ids in [0, 2^31)), the pair key
-    * through the dominant exchange is ONE long (u << 32 | v); the edge
-    * anti-join runs on the same packed key (so the aggregate's
-    * partitioning is reused, no extra exchange), and the pair unpacks —
-    * cast back to the input id type — only after the anti-join.
+    * With `packed` (caller proved the ids fit, [[Pairs.fits]]), the pair
+    * key through the dominant exchange is ONE packed long; the edge
+    * anti-join runs on the same key (the aggregate's partitioning is
+    * reused), and the pair unpacks only after the anti-join.
     * With `aggParts` > 0, the RAW pairs repartition to that count
     * before ONE aggregation pass: distinct pairs run ~0.7x of wedges,
     * so the default partial-then-final plan pays a near-useless
@@ -241,24 +206,21 @@ object LinkPredict {
   private def scoreWedges(e: DataFrame, adj: DataFrame, deg: DataFrame,
                           k: Int, packed: Boolean = false,
                           aggParts: Int = 0): DataFrame = {
-    val idType = adj.schema("n").dataType
-    def pack(u: Column, v: Column): Column =
-      shiftleft(u.cast("long"), 32) + v.cast("long")
+    val wedges = Pairs.within(adj, Seq("c"), "n", ("ns", "u", "v"))
     val cn =
       if (packed) {
-        val raw = wedgePairs(adj).select(pack(col("u"), col("v")).as("pk"))
+        val (pu, pv) = Pairs.unpack(col("pk"), adj.schema("n").dataType)
+        val raw = wedges.select(Pairs.pack(col("u"), col("v")).as("pk"))
         (if (aggParts > 0) raw.repartition(aggParts, col("pk")) else raw)
           .groupBy(col("pk")).agg(count(lit(1)).as("cn"))
           // wedge pairs that are already edges are triangles, not
           // predictions — dropped on the packed key so the aggregate's
           // pk partitioning carries straight through
-          .join(e.select(pack(col("a"), col("b")).as("pk")),
+          .join(e.select(Pairs.pack(col("a"), col("b")).as("pk")),
             Seq("pk"), "left_anti")
-          .select(shiftrightunsigned(col("pk"), 32).cast(idType).as("u"),
-            col("pk").bitwiseAND(lit(0xFFFFFFFFL)).cast(idType).as("v"),
-            col("cn"))
+          .select(pu.as("u"), pv.as("v"), col("cn"))
       } else {
-        val raw = wedgePairs(adj)
+        val raw = wedges.select(col("u"), col("v"))
         (if (aggParts > 0) raw.repartition(aggParts, col("u"), col("v")) else raw)
           .groupBy(col("u"), col("v")).agg(count(lit(1)).as("cn"))
           // wedge pairs that are already edges are triangles, not predictions

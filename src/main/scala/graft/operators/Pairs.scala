@@ -1,0 +1,119 @@
+package graft.operators
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
+
+/** Bucket pair generation: every unordered pair of distinct elements that
+  * share a bucket, emitted once — the primitive under shingle posting
+  * lists (d2/d10/d19), LSH bands (d3/v8), simhash chunks (d4/d23),
+  * link-prediction wedges through a center (g5/g7/g7b) and triangle
+  * wedges at a pivot (g2/g8). This object decides how those pairs are
+  * generated, counted and keyed.
+  *
+  * Generation ([[within]]): each bucket's elements are grouped into ONE
+  * sorted array and posexplode + slice emits (arr[i], arr[j]) for i < j,
+  * exactly n(n-1)/2 rows per n-element bucket. The bucket self-join
+  * generated n^2 rows and filtered half of them plus the diagonal away:
+  * the array form generates half the rows (guide §2.3) through one
+  * groupBy exchange instead of the join's two (§2.4). Skew is no worse
+  * (the join already generated a bucket's pairs in one task).
+  *
+  * Volume ([[volume]], [[guard]]): the arrays are bounded by bucket size
+  * and nothing else, so one hot bucket becomes one |bucket|-sized row —
+  * an OOM / 2 GB-row failure at scale (guide §2.5). The pair count is
+  * EXACTLY the sum of n(n-1)/2 over bucket sizes, one combinable
+  * aggregate, so callers count first and refuse loudly past a cap (which
+  * also bounds the largest bucket at ~sqrt(2 * cap) elements).
+  *
+  * Packed keys ([[fits]], [[pack]], [[unpack]]): ids proven to lie in
+  * [0, 2^31) travel as ONE long (u << 32 | v) ordered like (u, v) — half
+  * the key bytes through the pair exchange and a primitive-long hash in
+  * the aggregate (guide §2.3 "narrower types"). Unproven ranges keep the
+  * two-column key; results are the same either way.
+  */
+object Pairs {
+
+  /** The bucket-size column [[within]] carries. */
+  val Size = "bucket_size"
+
+  /** Each unordered pair of distinct `elem` values that share a `keys`
+    * bucket, exactly once, lower element first. Elements must be distinct
+    * within a bucket (ids, or structs led by an id).
+    *
+    * Output: the bucket keys, the bucket size as a long ([[Size]]), and
+    * the pair (`as._2`, `as._3`); `as._1` names the bucket array. The keys
+    * and the size ride along so a filter on them (a degree gate) pushes
+    * below the generation and drops a bucket before any of its pairs
+    * exist; unread, they are pruned from the plan.
+    *
+    * With `orderBy`, a bucket's elements are ordered by (orderBy, elem)
+    * instead of by elem, and the first element of each pair is the lower
+    * one in that order (the triangle orientation order).
+    */
+  def within(df: DataFrame, keys: Seq[String], elem: String,
+             as: (String, String, String) = ("ids", "id1", "id2"),
+             orderBy: Option[String] = None): DataFrame = {
+    val (arr, first, second) = as
+    val k = keys.map(col)
+    val grouped = orderBy match {
+      case None =>
+        df.groupBy(k: _*).agg(sort_array(collect_list(col(elem))).as(arr))
+      case Some(o) =>
+        df.groupBy(k: _*)
+          .agg(sort_array(collect_list(struct(col(o), col(elem)))).as(arr + "s"))
+          .select(k :+ col(s"${arr}s.$elem").as(arr): _*)
+    }
+    grouped
+      .select(k ++ Seq(col(arr), size(col(arr)).cast("long").as(Size)): _*)
+      .select(k ++ Seq(col(arr), col(Size),
+        posexplode(col(arr)).as(Seq("i", first))): _*)
+      .select(k ++ Seq(col(Size), col(first),
+        explode(expr(s"slice($arr, i + 2, size($arr))")).as(second)): _*)
+  }
+
+  /** The number of pairs [[within]] emits from buckets of size `n`: the
+    * exact sum of n(n-1)/2, as a long, 0 over no rows. Null sizes (a
+    * `when` gate) count nothing.
+    */
+  def volume(n: Column): Column =
+    coalesce(shiftright(sum(n * (n - lit(1L))), 1), lit(0L))
+
+  /** Counts the pairs a per-bucket size table (`n` = bucket size) would
+    * generate and refuses past `cap` with the caller's `refusal` text,
+    * given the count.
+    */
+  def guard(sizes: DataFrame, n: String, cap: Long)(refusal: Long => String): Unit = {
+    val pairs = sizes.agg(volume(col(n))).head().getLong(0)
+    require(pairs <= cap, refusal(pairs))
+  }
+
+  /** Partitions for an aggregate over `pairs` raw pair rows: ~`perTask`
+    * rows each, at least the session parallelism, at most 4096. A pair
+    * stage otherwise inherits its upstream exchange's AQE-coalesced
+    * partition count and aggregates a quadratic volume nearly unparallelized.
+    */
+  def partitions(spark: SparkSession, pairs: Long, perTask: Long): Int =
+    math.max(spark.sparkContext.defaultParallelism,
+      math.min(4096L, pairs / perTask + 1L).toInt)
+
+  /** The id-range aggregates [[fits]] reads: min and max of `id` as longs. */
+  def idRange(id: Column): Seq[Column] = Seq(min(id.cast("long")), max(id.cast("long")))
+
+  /** Whether the ids whose [[idRange]] sits at `row(at)`, `row(at + 1)`
+    * lie in [0, 2^31), the precondition of [[pack]]. An empty or
+    * non-castable range (nulls) does not fit.
+    */
+  def fits(row: Row, at: Int): Boolean =
+    !row.isNullAt(at) && !row.isNullAt(at + 1) &&
+      row.getLong(at) >= 0L && row.getLong(at + 1) < (1L << 31)
+
+  /** One long for the pair (u, v) of ids that [[fits]]: u << 32 | v. For
+    * such ids the packed order is the (u, v) order.
+    */
+  def pack(u: Column, v: Column): Column = shiftleft(u.cast("long"), 32) + v.cast("long")
+
+  /** The (u, v) ids of a [[pack]]ed key, cast back to `idType`. */
+  def unpack(pk: Column, idType: DataType): (Column, Column) =
+    (shiftrightunsigned(pk, 32).cast(idType), pk.bitwiseAND(lit(0xFFFFFFFFL)).cast(idType))
+}

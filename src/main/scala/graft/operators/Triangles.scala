@@ -63,35 +63,23 @@ object Triangles {
     * orientation-minimum pivot; the closing edge is only ever probed in
     * its oriented direction, so no triangle is double-counted.
     *
-    * Wedges are generated from per-pivot adjacency ARRAYS with neighbors
-    * sorted by the orientation key (deg, id): for positions i < j the
+    * Wedges are the [[Pairs.within]] pairs of each pivot's neighbors,
+    * ordered by the orientation key (deg, id): for positions i < j the
     * closing edge, if present, can only be oriented ns[i] -> ns[j], so
-    * each wedge is emitted exactly ONCE. The previous self-join
-    * formulation generated both (v1, v2) and (v2, v1) — sum-of-d_out^2
-    * join output, 2x the wedge count — and let the closing join discard
-    * the wrong-order half. The array form halves both the generated rows
-    * and the bytes entering the closing join's exchange, and replaces the
-    * wedge self-join (two reads of the oriented subtree) with one groupBy
-    * of it (guide §2.3 "shuffle fewer bytes" / §2.4 "remove shuffles").
-    * Out-degree is O(sqrt m) under the orientation, so each adjacency
-    * array is O(sqrt m) — bounded regardless of skew.
+    * each wedge is emitted exactly ONCE, in the only order the closing
+    * join can match. Out-degree is O(sqrt m) under the orientation, so
+    * each adjacency array is O(sqrt m) — bounded regardless of skew.
     */
   private def wedgeClose(oriented: DataFrame): DataFrame = {
-    val adj = oriented
-      .groupBy(col("u"))
-      .agg(sort_array(collect_list(struct(col("dv"), col("v")))).as("nss"))
-      .select(col("u"), col("nss.v").as("ns"))
-    val wedges = adj
-      // (r19 note: hash-repartitioning the arrays table to spread the
-      // generate stage — the LinkPredict repartition-first treatment —
-      // was tried and measured NEUTRAL-to-worse here (g8x 2.4 -> 3.4 s):
-      // the orientation caps wedge volume at O(m^1.5) with small
-      // constants, so the extra exchange outweighs the parallelism win
-      // at this volume. The closing join's own exchange already spreads
-      // the triangle-counting work.)
-      .select(col("u"), col("ns"), posexplode(col("ns")).as(Seq("i", "v1")))
-      .select(col("u"), col("v1"),
-        explode(expr("slice(ns, i + 2, size(ns))")).as("v2"))
+    // (r19 note: hash-repartitioning the arrays table to spread the
+    // generate stage — the LinkPredict repartition-first treatment —
+    // was tried and measured NEUTRAL-to-worse here (g8x 2.4 -> 3.4 s):
+    // the orientation caps wedge volume at O(m^1.5) with small
+    // constants, so the extra exchange outweighs the parallelism win
+    // at this volume. The closing join's own exchange already spreads
+    // the triangle-counting work.)
+    val wedges = Pairs.within(oriented, Seq("u"), "v", ("ns", "v1", "v2"),
+      orderBy = Some("dv"))
     val tri = wedges
       .join(oriented.select(col("u").as("v1"), col("v").as("v2")), Seq("v1", "v2"))
       .select(col("u").as("x"), col("v1").as("y"), col("v2").as("z"))
@@ -126,22 +114,20 @@ object Triangles {
     */
   def perNodeBucketed(edges: DataFrame, srcCol: String, dstCol: String,
                       table: String, path: String,
-                      buckets: Int = 32,
-                      clusterFirst: Boolean = true): DataFrame = {
+                      buckets: Int = 32): DataFrame = {
     val spark = edges.sparkSession
     graft.sources.LayersTable.validateIdentifier(table)
     spark.sql(s"DROP TABLE IF EXISTS $table")
     val oriented = orient(edges, srcCol, dstCol)
-    // cluster by bucket key BEFORE the bucketed write (default): without
+    // cluster by bucket key BEFORE the bucketed write: without
     // this every upstream task opens a writer per bucket it touches —
     // tasks x buckets tiny files at scale (guide §6), and at gate scale
     // the AQE-coalesced single upstream task writes ALL buckets serially.
     // With it each task holds exactly one bucket: `buckets` files, a
     // parallel write, and the downstream bucket-layout read opens one
-    // file per bucket (the q39 repartition-before-bucketBy treatment).
-    // `clusterFirst=false` keeps the old shape for A/B measurement
-    // (OPTIMIZATION_r20.md, "chg 4 — g2b vs g2 re-adjudication").
-    (if (clusterFirst) oriented.repartition(buckets, col("u")) else oriented)
+    // file per bucket (the q39 repartition-before-bucketBy treatment;
+    // OPTIMIZATION_r20.md chg 4 measured the unclustered write slower).
+    oriented.repartition(buckets, col("u"))
       .write
       .mode("overwrite").format("parquet")
       .bucketBy(buckets, "u").sortBy("u")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.operators.Pairs
 
 /** Relational operator coverage over the TPC-H-ish synthetic tables:
   * scan, filter, projection, hash/sort aggregate, inner/semi/anti join,
@@ -177,16 +178,12 @@ object Relational extends QueryPack {
   private def dsum(c: Column): Column = sum(c.cast(DecimalType(18, 2))).cast("double")
   private def dsum(c: String): Column = dsum(col(c))
 
-  /** Co-purchase edge list (parts sharing an order, p1 < p2): each
-    * order's distinct parts grouped into ONE sorted array, pairs emitted
-    * by posexplode + slice — exactly k(k-1)/2 rows per k-part order,
-    * where the previous lo-on-lo self-join generated k^2 join rows and
-    * filtered half plus the diagonal away (guide §2.3 "shuffle fewer
-    * bytes" / §2.4 "remove shuffles outright": one groupBy exchange
-    * replaces the join's exchange pair). Pair multiset is identical to
-    * the join form: per order, each unordered pair once. Order sizes are
-    * bounded (TPC-H ships <= 7 lines/order), so the arrays are tiny.
-    * `maxLine` applies the g3/g4 sparsification filter before pairing.
+  /** Co-purchase edge list (parts sharing an order, p1 < p2): the
+    * [[graft.operators.Pairs.within]] pairs of each order's distinct
+    * parts — per order, each unordered pair once, k(k-1)/2 rows per
+    * k-part order. Order sizes are bounded (TPC-H ships <= 7
+    * lines/order), so the arrays are tiny. `maxLine` applies the g3/g4
+    * sparsification filter before pairing.
     */
   private def coPurchasePairs(s: SparkSession, d: String,
                               maxLine: Option[Int] = None): DataFrame = {
@@ -194,10 +191,8 @@ object Relational extends QueryPack {
     val lo = maxLine.fold(li)(m => li.filter(col("l_linenumber") <= m))
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
       .distinct()
-    lo.groupBy(col("o"))
-      .agg(sort_array(collect_list(col("p"))).as("ps"))
-      .select(col("ps"), posexplode(col("ps")).as(Seq("i", "p1")))
-      .select(col("p1"), explode(expr("slice(ps, i + 2, size(ps))")).as("p2"))
+    Pairs.within(lo, Seq("o"), "p", ("ps", "p1", "p2"))
+      .select(col("p1"), col("p2"))
   }
 
   /** q53's oracle: one FNV -> splitmix64 -> trailing-zeros chain per
@@ -765,31 +760,17 @@ object Relational extends QueryPack {
           .unionAll(e.select(col("b").as("c"), col("a").as("n")))
         // ONE pre-aggregate over the cached edges reads off the FULL
         // wedge volume (this gate runs the unguarded exact baseline, so
-        // the sweep is sized to the exact arm) and the id range for the
-        // packed ONE-long pair key — the volume-scaled parallelism and
-        // proof-then-pack discipline its g7bx production arm already
-        // uses (guide §2.3/§2.5), replacing the blind 4x-cores constant
+        // the aggregate parallelism is sized to the exact arm) and the id
+        // range for the packed pair key
         val pre = adj.groupBy(col("c")).agg(count(lit(1)).as("dd"))
-          .agg(sum(col("dd") * (col("dd") - lit(1L))),
-            min(col("c").cast("long")), max(col("c").cast("long"))).head()
-        val wedgeVolume = (if (pre.isNullAt(0)) 0L else pre.getLong(0)) / 2
-        val packable = !pre.isNullAt(1) && !pre.isNullAt(2) &&
-          pre.getLong(1) >= 0L && pre.getLong(2) < (1L << 31)
-        val parts = math.max(s.sparkContext.defaultParallelism,
-          math.min(4096L, wedgeVolume / 900000L + 1L).toInt)
-        def pkc(u: org.apache.spark.sql.Column, v: org.apache.spark.sql.Column) =
-          shiftleft(u.cast("long"), 32) + v.cast("long")
-        // per-center sorted adjacency arrays: the center's degree is
-        // size(ns) (neighbors are distinct), and posexplode + slice emits
-        // each wedge pair once — no deg join, no wedge self-join (the
-        // LinkPredict.wedgePairs shape with the degree carried along)
-        val adjList = adj.groupBy(col("c"))
-          .agg(sort_array(collect_list(col("n"))).as("ns"))
-          .select(col("ns"), size(col("ns")).cast("long").as("dg"))
-        val wedges = adjList
-          .select(col("ns"), col("dg"), posexplode(col("ns")).as(Seq("i", "u")))
-          .select(col("u"), col("dg"),
-            explode(expr("slice(ns, i + 2, size(ns))")).as("v"))
+          .agg(Pairs.volume(col("dd")), Pairs.idRange(col("c")): _*).head()
+        val packable = Pairs.fits(pre, 1)
+        val parts = Pairs.partitions(s, pre.getLong(0), 900000L)
+        // wedge pairs per center with the center's degree (its bucket
+        // size: neighbors are distinct) carried along — no deg join, no
+        // wedge self-join
+        val wedges = Pairs.within(adj, Seq("c"), "n", ("ns", "u", "v"))
+          .select(col("u"), col(Pairs.Size).as("dg"), col("v"))
         val sums = Seq(
           sum(when(col("dg") <= 100L, 1L).otherwise(0L)).as("ccn100"),
           sum(when(col("dg") <= 140L, 1L).otherwise(0L)).as("ccn140"),
@@ -797,19 +778,16 @@ object Relational extends QueryPack {
           count(lit(1)).as("cn"))
         // raw-wedge repartition before the pair aggregate (the
         // LinkPredict.scoreWedges lesson: distinct pairs ~0.7x wedges,
-        // so map-side combining at the generate stage's AQE-coalesced
-        // parallelism spills for nothing); on the packed key the groupBy
-        // takes the primitive-long fast path and the anti-join reuses
-        // the aggregate's partitioning. The pairs stay PACKED through
-        // the top-k arms and the semi-join — (x desc, pk) == (x desc,
-        // u, v) for the proven non-negative sub-2^31 ids, and the output
-        // is counts only, so nothing ever unpacks.
+        // so map-side combining spills for nothing); the anti-join reuses
+        // the aggregate's partitioning. The pairs stay PACKED through the
+        // top-k arms and the semi-join — (x desc, pk) == (x desc, u, v)
+        // for packed ids, and the output is counts only.
         val scored =
           (if (packable)
-            wedges.select(pkc(col("u"), col("v")).as("pkey"), col("dg"))
+            wedges.select(Pairs.pack(col("u"), col("v")).as("pkey"), col("dg"))
               .repartition(parts, col("pkey"))
               .groupBy(col("pkey")).agg(sums.head, sums.tail: _*)
-              .join(e.select(pkc(col("a"), col("b")).as("pkey")),
+              .join(e.select(Pairs.pack(col("a"), col("b")).as("pkey")),
                 Seq("pkey"), "left_anti")
           else
             // fallback key is a STRUCT (ids unproven packable — maybe
@@ -2367,46 +2345,30 @@ object Relational extends QueryPack {
         val adj = e.select(col("a").as("c"), col("b").as("n"))
           .unionAll(e.select(col("b").as("c"), col("a").as("n")))
         // ONE pre-aggregate over the cached edges reads off the capped
-        // wedge volume (volume-scaled aggregation parallelism — the
-        // scoreWedges treatment replaces the blind 4x-cores constant)
-        // and the id range (for the packed ONE-long pair key through the
-        // dominant exchange, guide §2.3 "narrower types" — the
-        // commonNeighborsCapped proof-then-pack discipline)
+        // wedge volume (aggregate parallelism) and the id range (packed key)
         val pre = adj.groupBy(col("c")).agg(count(lit(1)).as("dd"))
-          .agg(sum(when(col("dd") <= 180L, col("dd") * (col("dd") - lit(1L)))),
-            min(col("c").cast("long")), max(col("c").cast("long"))).head()
-        val cappedVolume = (if (pre.isNullAt(0)) 0L else pre.getLong(0)) / 2
-        val packable = !pre.isNullAt(1) && !pre.isNullAt(2) &&
-          pre.getLong(1) >= 0L && pre.getLong(2) < (1L << 31)
-        val parts = math.max(s.sparkContext.defaultParallelism,
-          math.min(4096L, cappedVolume / 900000L + 1L).toInt)
-        val idType = e.schema("a").dataType
-        def pk(u: org.apache.spark.sql.Column, v: org.apache.spark.sql.Column) =
-          shiftleft(u.cast("long"), 32) + v.cast("long")
-        // per-center sorted adjacency arrays (degree = size, wedges via
-        // posexplode + slice — the g7b shape), Dmax-gated BEFORE any
-        // wedge is generated so volume stays n*Dmax*(Dmax-1)/2
-        val adjList = adj.groupBy(col("c"))
-          .agg(sort_array(collect_list(col("n"))).as("ns"))
-          .select(col("ns"), size(col("ns")).cast("long").as("dg"))
-          .filter(col("dg") <= 180L)
-        val wedges = adjList
-          .select(col("ns"), col("dg"), posexplode(col("ns")).as(Seq("i", "u")))
-          .select(col("u"), col("dg"),
-            explode(expr("slice(ns, i + 2, size(ns))")).as("v"))
+          .agg(Pairs.volume(when(col("dd") <= 180L, col("dd"))),
+            Pairs.idRange(col("c")): _*).head()
+        val packable = Pairs.fits(pre, 1)
+        val parts = Pairs.partitions(s, pre.getLong(0), 900000L)
+        val (pu, pv) = Pairs.unpack(col("pkey"), e.schema("a").dataType)
+        // wedge pairs per center with the degree carried along (the g7b
+        // shape); the Dmax gate on it pushes below the generation, so no
+        // hub wedge exists and volume stays n*Dmax*(Dmax-1)/2
+        val wedges = Pairs.within(adj, Seq("c"), "n", ("ns", "u", "v"))
+          .filter(col(Pairs.Size) <= 180L)
+          .select(col("u"), col(Pairs.Size).as("dg"), col("v"))
         val sums = Seq(
           sum(when(col("dg") <= 100L, 1L).otherwise(0L)).as("ccn100"),
           sum(when(col("dg") <= 140L, 1L).otherwise(0L)).as("ccn140"),
           count(lit(1)).as("ccn180"))
-        // raw-wedge repartition before the aggregate (the g7b note); on
-        // the packed key the groupBy takes the primitive-long fast path
-        // and the anti-join reuses the aggregate's pk partitioning
+        // raw-wedge repartition before the aggregate (the g7b note)
         val scored =
           if (packable)
-            wedges.select(pk(col("u"), col("v")).as("pkey"), col("dg"))
+            wedges.select(Pairs.pack(col("u"), col("v")).as("pkey"), col("dg"))
               .repartition(parts, col("pkey"))
               .groupBy(col("pkey")).agg(sums.head, sums.tail: _*)
-              .join(e.select(pk(col("a"), col("b")).as("pkey")),
+              .join(e.select(Pairs.pack(col("a"), col("b")).as("pkey")),
                 Seq("pkey"), "left_anti")
           else
             wedges.repartition(parts, col("u"), col("v"))
@@ -2424,14 +2386,11 @@ object Relational extends QueryPack {
         try {
           Seq("ccn100", "ccn140", "ccn180").map { ccn =>
             val top = scoredP.filter(col(ccn) > 0L)
-            // (ccn desc, pkey) == (ccn desc, u, v) for the proven
-            // non-negative sub-2^31 ids; unpack after the 200-row limit
+            // (ccn desc, pkey) == (ccn desc, u, v); unpack after the limit
             if (packable)
               top.orderBy(col(ccn).desc, col("pkey")).limit(200)
                 .select(lit(ccn.drop(3).toLong).as("max_degree"),
-                  shiftrightunsigned(col("pkey"), 32).cast(idType).as("u"),
-                  col("pkey").bitwiseAND(lit(0xFFFFFFFFL)).cast(idType).as("v"),
-                  col(ccn).as("ccn"))
+                  pu.as("u"), pv.as("v"), col(ccn).as("ccn"))
             else
               top.orderBy(col(ccn).desc, col("u"), col("v")).limit(200)
                 .select(lit(ccn.drop(3).toLong).as("max_degree"),

@@ -1,0 +1,111 @@
+package graft
+
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Properties, Test}
+import org.scalacheck.Prop.forAll
+
+import graft.operators.Pairs
+
+/** Properties of the bucket pair primitive over random bucketed tables
+  * (distinct elements per bucket, empty tables and singleton buckets
+  * included): [[Pairs.within]] emits exactly the multiset of the bucket
+  * self-join with `a.elem < b.elem`, for long ids, struct elements (the
+  * hamming (id, sig) shape) and an ordering column (the triangle
+  * (dv, v) shape); [[Pairs.volume]] counts exactly the rows emitted; and
+  * the packed pair key round-trips the ids [[Pairs.fits]] admits. Each
+  * case runs Spark jobs, so the case count is kept small.
+  */
+object PairsSpec extends Properties("graft.pairs") {
+
+  override def overrideParameters(p: Test.Parameters): Test.Parameters =
+    p.withMinSuccessfulTests(12).withWorkers(1)
+
+  private lazy val spark = SparkTestSession.spark
+
+  /** (bucket, id) rows: up to 6 buckets of up to 12 distinct ids each. */
+  private val bucketed: Gen[Seq[(Int, Long)]] = for {
+    nb <- Gen.choose(0, 6)
+    buckets <- Gen.listOfN(nb, Gen.containerOf[Set, Long](Gen.choose(0L, 30L))
+      .map(_.take(12)))
+  } yield buckets.zipWithIndex.flatMap { case (ids, b) => ids.toSeq.map(b -> _) }
+
+  private def sorted[T](rows: Seq[T])(implicit o: Ordering[T]): Seq[T] = rows.sorted
+
+  property("within == bucket self-join with a.id < b.id (long ids)") = forAll(bucketed) { rows =>
+    import spark.implicits._
+    val df = rows.toDF("b", "id")
+    val got = Pairs.within(df, Seq("b"), "id")
+      .select(col("b"), col(Pairs.Size), col("id1"), col("id2")).as[(Int, Long, Long, Long)]
+      .collect().toSeq
+    val want = df.as("x").join(df.as("y"), col("x.b") === col("y.b") && col("x.id") < col("y.id"))
+      .select(col("x.b"), col("x.id"), col("y.id")).as[(Int, Long, Long)].collect().toSeq
+    val sizes = rows.groupBy(_._1).map { case (b, ids) => b -> ids.size.toLong }
+    sorted(got.map { case (b, _, u, v) => (b, u, v) }) == sorted(want) &&
+      got.forall { case (b, n, _, _) => n == sizes(b) }
+  }
+
+  property("within == bucket self-join with a.e < b.e (struct elements)") = forAll(bucketed) { rows =>
+    import spark.implicits._
+    // (id, sig) elements: the sig is a function of the id, as a signature is
+    val df = rows.map { case (b, id) => (b, id, id * 7919L % 13L) }.toDF("b", "id", "sig")
+      .select(col("b"), struct(col("id"), col("sig")).as("e"))
+    val got = Pairs.within(df, Seq("b"), "e", ("es", "e1", "e2"))
+      .select(col("b"), col("e1.id"), col("e1.sig"), col("e2.id"), col("e2.sig"))
+      .as[(Int, Long, Long, Long, Long)].collect().toSeq
+    val want = df.as("x").join(df.as("y"), col("x.b") === col("y.b") && col("x.e") < col("y.e"))
+      .select(col("x.b"), col("x.e.id"), col("x.e.sig"), col("y.e.id"), col("y.e.sig"))
+      .as[(Int, Long, Long, Long, Long)].collect().toSeq
+    sorted(got) == sorted(want)
+  }
+
+  property("within orderBy == self-join on (dv, v) order (triangle orientation)") =
+    forAll(bucketed) { rows =>
+      import spark.implicits._
+      val df = rows.map { case (u, v) => (u, v, (v * 31L) % 5L) }.toDF("u", "v", "dv")
+      val got = Pairs.within(df, Seq("u"), "v", ("ns", "v1", "v2"), orderBy = Some("dv"))
+        .select(col("u"), col("v1"), col("v2")).as[(Int, Long, Long)].collect().toSeq
+      val want = df.as("x").join(df.as("y"), col("x.u") === col("y.u") &&
+          struct(col("x.dv"), col("x.v")) < struct(col("y.dv"), col("y.v")))
+        .select(col("x.u"), col("x.v"), col("y.v")).as[(Int, Long, Long)].collect().toSeq
+      sorted(got) == sorted(want)
+    }
+
+  property("volume == rows within emits (0 when empty)") = forAll(bucketed) { rows =>
+    import spark.implicits._
+    val df = rows.toDF("b", "id")
+    val sizes = df.groupBy(col("b")).agg(count(lit(1)).as("n"))
+    sizes.agg(Pairs.volume(col("n"))).head().getLong(0) ==
+      Pairs.within(df, Seq("b"), "id").count()
+  }
+
+  property("a filter on the carried bucket size runs before any pair is generated") = Prop {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate}
+    val plan = Pairs.within(Seq((1, 1L), (1, 2L), (2, 3L)).toDF("b", "id"), Seq("b"), "id")
+      .filter(col(Pairs.Size) <= 1L).queryExecution.optimizedPlan
+    val filters = plan.collect { case f: Filter => f }
+    filters.nonEmpty && filters.forall(_.find(_.isInstanceOf[Generate]).isEmpty)
+  }
+
+  private val id31: Gen[Long] = Gen.oneOf(Gen.choose(0L, (1L << 31) - 1),
+    Gen.oneOf(0L, 1L, (1L << 31) - 1))
+
+  property("pack/unpack round-trips ids in [0, 2^31), packed order == (u, v) order") =
+    forAll(Gen.listOfN(8, Gen.zip(id31, id31))) { ids =>
+      import spark.implicits._
+      val (pu, pv) = Pairs.unpack(col("pk"), org.apache.spark.sql.types.LongType)
+      val df = ids.toDF("u", "v")
+      val range = df.select(Pairs.idRange(col("u")) ++ Pairs.idRange(col("v")): _*).head()
+      val fit = Pairs.fits(range, 0) && Pairs.fits(range, 2)
+      val back = df.select(Pairs.pack(col("u"), col("v")).as("pk"))
+        .orderBy(col("pk")).select(pu, pv).as[(Long, Long)].collect().toSeq
+      fit && back == sorted(ids)
+    }
+
+  property("fits rejects -1, 2^31 and an empty range") = Prop {
+    Pairs.fits(Row(0L, (1L << 31) - 1), 0) && !Pairs.fits(Row(-1L, 5L), 0) &&
+      !Pairs.fits(Row(0L, 1L << 31), 0) && !Pairs.fits(Row(null, null), 0) &&
+      Pairs.fits(Row("x", 3L, 4L), 1)
+  }
+}

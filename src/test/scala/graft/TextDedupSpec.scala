@@ -355,6 +355,29 @@ class TextDedupSpec extends AnyFunSuite {
     assert(ok.size === 12 * 11 / 2, "all identical sigs must all pair")
   }
 
+  test("minhashLshNearDupPairs bucket-volume guard refuses a degenerate corpus") {
+    // 40 identical docs share every band bucket: 32 bands * 40*39/2 =
+    // 24960 candidate pairs from one array row per band
+    val docs = textDf((1L to 40L).map(i => (i, "c1 c2 c3 c4")): _*)
+    val e = intercept[IllegalArgumentException] {
+      Dedup.minhashLshNearDupPairs(docs, "doc_id", "text", n = 3,
+        maxPairEstimate = 100L)
+    }
+    assert(e.getMessage.contains("maxPairEstimate"),
+      s"guard message must name the knob: ${e.getMessage}")
+  }
+
+  test("simhashNearDupPairs forwards maxPairEstimate: a tiny cap is refused, naming the knob") {
+    // 12 identical docs -> one simhash -> 4 chunks * 12*11/2 = 264 pairs
+    val docs = textDf((1L to 12L).map(i => (i, "t1 t2 t3 t4 t5 t6 t7 t8")): _*)
+    val e = intercept[IllegalArgumentException] {
+      Dedup.simhashNearDupPairs(docs, "doc_id", "text", 3, maxHamming = 3,
+        maxPairEstimate = 100L)
+    }
+    assert(e.getMessage.contains("maxPairEstimate"),
+      s"guard message must name the knob: ${e.getMessage}")
+  }
+
   test("jaccard maxDf blocking: ubiquitous shingle pruned, sizes share the filtered universe") {
     // every doc carries the boilerplate shingle "c1 c2 c3"; docs 1/2 are
     // near-dups of each other beyond it, doc 3 shares ONLY the boilerplate

@@ -1133,6 +1133,58 @@ class VectorSpec extends AnyFunSuite {
     assert(ok.size === 12 * 11 / 2, "identical embeddings must all pair")
   }
 
+  test("lshNearDupPairs forwards maxPairEstimate: a tiny cap is refused, naming the knob") {
+    import spark.implicits._
+    val vec = Array(1f, 2f, 3f, 4f)
+    val degenerate = (1L to 12L).map(i => (i, vec)).toDF("doc_id", "vec")
+    val e = intercept[IllegalArgumentException] {
+      Knn.lshNearDupPairs(degenerate, "doc_id", "vec", minSim = 0.85,
+        bands = 4, rowsPerBand = 2, maxPairEstimate = 100L).collect()
+    }
+    assert(e.getMessage.contains("maxPairEstimate"),
+      s"guard message must name the knob: ${e.getMessage}")
+  }
+
+  test("lshCandidatePairs evaluates the banding once: the corpus file is read n rows, not 2n") {
+    import spark.implicits._
+    import org.apache.spark.scheduler._
+    val n = 300L
+    val rnd = new scala.util.Random(11)
+    val dir = java.nio.file.Files.createTempDirectory("graft-lsh-once").resolve("corpus").toString
+    (1L to n).map(i => (i, Array.fill(8)(rnd.nextGaussian().toFloat)))
+      .toDF("doc_id", "vec").write.parquet(dir)
+    val corpus = spark.read.parquet(dir)
+    // records read by stages that scan the file; stages reading the
+    // materialized banding count its cached blocks, which are not the file
+    val fileRows = new java.util.concurrent.atomic.AtomicLong(0L)
+    val markerJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
+          fileRows.addAndGet(e.stageInfo.taskMetrics.inputMetrics.recordsRead)
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "drain"))
+          markerJob.set(e.jobId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob.get) drained.countDown()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val cand = Knn.lshCandidatePairs(corpus, "doc_id", "vec",
+        bands = 4, rowsPerBand = 2, seed = 42L).count()
+      assert(cand > 0L)
+      // events reach a listener in order: once the marker job's end
+      // arrives, every earlier stage completion has been counted
+      sc.setJobDescription("drain")
+      sc.parallelize(Seq(1), 1).count()
+      sc.setJobDescription(null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    assert(fileRows.get === n, "the guard and the pair generation must share one banding pass")
+  }
+
   test("LSH blocking prunes: candidates << n^2 and superset of true pairs") {
     val dv = graft.queries.Vectors.docVectors(spark, "/root/testdata/sf0.01")
     val n = dv.count()
