@@ -1,6 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.GraftColumnBridge.{cachedRelation, dataFrame, expression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Ascending, RowOrdering, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions._
@@ -32,11 +38,19 @@ import graft.functions.Geo
   *  - documented deviation: a deterministic (dist, id) tie-break; the
   *    reference's top-N heapsort leaves ties unordered (SURVEY.md §2.5 V2).
   *
-  * Physical plan at any scale: parquet scan (text-column pruning keeps the
-  * 4 KB embeddings column out of the projection until the distance is
-  * computed) -> filters -> codegen cosine distance -> TakeOrderedAndProject
-  * (per-partition top-(skip+limit) heaps, driver merge) -> project. No
-  * shuffle of the corpus, embarrassingly parallel across files.
+  * Two physical paths, one set of expressions:
+  *  - a small corpus (a `LocalRelation`, or a materialized cache under
+  *    [[LocalMaxBytes]]) is answered on the driver from a copy of its rows:
+  *    the filters and the distance fold into a `LocalRelation` in the
+  *    optimizer (Spark's `ConvertToLocalRelation`), the candidates sort by
+  *    Spark's (dist, id) ordering and the page is sliced off. No job runs,
+  *    so a request costs its Catalyst passes, not a job's scheduling;
+  *  - anything else (uncached, parquet-backed, over the cap) plans as a
+  *    scan (text-column pruning keeps the 4 KB embeddings column out of the
+  *    projection until the distance is computed) -> filters -> codegen
+  *    cosine distance -> TakeOrderedAndProject (per-partition
+  *    top-(skip+limit) heaps, driver merge) -> project. No shuffle of the
+  *    corpus, embarrassingly parallel across files.
   */
 object Search {
 
@@ -104,34 +118,121 @@ object Search {
     */
   val DeepSkipThreshold = 1000
 
-  /** Assemble the logical plan. Filters absent from the request are
+  /** Assemble the request's plan. Filters absent from the request are
     * omitted from the plan (not evaluated as no-ops) — reference P5.
     */
-  def plan(layers: DataFrame, req: SearchRequest): DataFrame = {
+  def plan(layers: DataFrame, req: SearchRequest): DataFrame =
+    page(layers, req).fold(dataFrame(layers.sparkSession, _), identity)
+
+  /** The request's page: computed on the driver when `layers` has a driver
+    * copy, else the distributed plan that computes it. */
+  private def page(layers: DataFrame, req: SearchRequest): Either[LocalRelation, DataFrame] = {
     validate(req)
     // Locale.ROOT: Spark's lower() is locale-independent, so the client-side
     // probe lowering must be too (default-locale toLowerCase turns 'I' into
     // a dotless 'ı' under a Turkish JVM and silently matches nothing).
     val probes = req.typeFilter.getOrElse(Nil).filter(_.nonEmpty)
       .map(_.toLowerCase(java.util.Locale.ROOT))
-    val point = req.inputPoint.map(_.to4326)
-
-    var df = layers
-    if (probes.nonEmpty)
-      df = df.filter(lower(col("type")).isin(probes: _*))
-    point.foreach { p =>
-      df = df.filter(st_intersects(col("geom"),
-        st_point(lit(p.longitude), lit(p.latitude))))
+    val filters =
+      (if (probes.nonEmpty) Seq(lower(col("type")).isin(probes: _*)) else Nil) ++
+        req.inputPoint.map(_.to4326).map(p =>
+          st_intersects(col("geom"), st_point(lit(p.longitude), lit(p.latitude))))
+    val dist = cosine_distance(col("embeddings"), vector_lit(req.probe))
+    driverCopy(layers) match {
+      case Some(corpus) => Left(localPage(layers.sparkSession, corpus, filters, dist, req))
+      case None =>
+        val ranked = filters.foldLeft(layers)(_.filter(_)).withColumn("dist", dist)
+        Right(
+          if (req.skip <= DeepSkipThreshold)
+            ranked
+              .orderBy(col("dist").asc, col("id").asc)
+              .offset(req.skip)
+              .limit(req.limit)
+              .select(TextFields.map(col): _*)
+          else deepPage(ranked, req))
     }
-    val ranked = df.withColumn("dist",
-      cosine_distance(col("embeddings"), vector_lit(req.probe)))
-    if (req.skip <= DeepSkipThreshold)
-      ranked
-        .orderBy(col("dist").asc, col("id").asc)
-        .offset(req.skip)
-        .limit(req.limit)
-        .select(TextFields.map(col): _*)
-    else deepPage(ranked, req)
+  }
+
+  /** The largest cached corpus, in cached bytes, that is answered from a
+    * driver copy. Measured on 4 cores (CHANGES.md): the driver path costs
+    * ~10 ms of Catalyst passes plus ~4 us a row, the distributed path
+    * 70-130 ms at any of these sizes, so they cross at 29-31 MB of cache
+    * (64- and 256-dim rows). The cap sits at about half the crossover,
+    * which also bounds the copy's share of the driver heap. */
+  val LocalMaxBytes: Long = 16L << 20
+
+  /** Rows of each small cached corpus, keyed weakly on the cache entry's
+    * buffers: `unpersist` drops the entry, so a later request over the
+    * same Dataset goes back to the distributed plan and the copy becomes
+    * garbage with the buffers. */
+  private val driverCopies = new java.util.WeakHashMap[AnyRef, Seq[InternalRow]]()
+
+  /** The corpus as a `LocalRelation` when requests over it take the driver
+    * path: `layers` itself when it is one, else a copy of its cache entry
+    * when that is fully materialized and under [[LocalMaxBytes]],
+    * collected on the first call for that entry (one job). */
+  private def driverCopy(layers: DataFrame): Option[LocalRelation] =
+    layers.queryExecution.analyzed match {
+      case local: LocalRelation => Some(local)
+      case analyzed =>
+        cachedRelation(layers).flatMap { cached =>
+          val entry = cached.cacheBuilder
+          // under the entry's lock, so an unpersist cannot clear the
+          // buffers between the check and the read
+          val buffers = entry.synchronized {
+            if (entry.isCachedColumnBuffersLoaded &&
+                entry.sizeInBytesStats.value <= LocalMaxBytes)
+              Some(entry.cachedColumnBuffers)
+            else None
+          }
+          buffers.map { key =>
+            val rows = driverCopies.synchronized {
+              Option(driverCopies.get(key)).getOrElse {
+                val collected = dataFrame(layers.sparkSession, cached)
+                  .queryExecution.executedPlan.executeCollect().toSeq
+                driverCopies.put(key, collected)
+                collected
+              }
+            }
+            LocalRelation(analyzed.output, rows)
+          }
+        }
+    }
+
+  /** Collect `layers`' driver copy now, so the first request does not pay
+    * for it; true when requests over `layers` take the driver path. */
+  def collectDriverCopy(layers: DataFrame): Boolean = driverCopy(layers).isDefined
+
+  /** One page from a driver copy: the request's filters and distance as a
+    * Filter + Project over the copy, folded into a `LocalRelation` of
+    * candidates by Spark's `ConvertToLocalRelation` (no job runs), ordered
+    * by Spark's (dist, id) ordering and sliced to [skip, skip + limit).
+    * The plan is analysed over a row-less twin of the copy and the rows go
+    * in after: every analyzer and optimizer pass over a `LocalRelation`
+    * walks its rows, which made those passes, not the request's own
+    * evaluation, the cost of a request. */
+  private def localPage(spark: SparkSession, corpus: LocalRelation, filters: Seq[Column],
+                        dist: Column, req: SearchRequest): LocalRelation = {
+    val shape = LocalRelation(corpus.output)
+    val filtered = filters.map(expression(spark, _)).reduceOption(And(_, _))
+      .fold[LogicalPlan](shape)(Filter(_, shape))
+    val ranked = Project(
+      TextFields.map(UnresolvedAttribute.quoted) :+ Alias(expression(spark, dist), "dist")(), filtered)
+    val bound = dataFrame(spark, ranked).queryExecution.analyzed
+      .transformUp { case _: LocalRelation => corpus }
+    // the rule folds one operator a pass: the Filter, then the Project
+    val (out, rows) = ConvertToLocalRelation(ConvertToLocalRelation(bound)) match {
+      case candidates: LocalRelation => (candidates.output, candidates.data.toArray)
+      case unfolded => // an expression the rule cannot evaluate: run it as a query
+        val exec = dataFrame(spark, unfolded).queryExecution.executedPlan
+        (exec.output, exec.executeCollect())
+    }
+    java.util.Arrays.sort(rows, RowOrdering.create(
+      Seq(SortOrder(out.last, Ascending), SortOrder(out.head, Ascending)), out))
+    val text = out.take(TextFields.size)
+    val toText = UnsafeProjection.create(text, out)
+    val page = rows.slice(req.skip, math.min(rows.length.toLong, req.skip.toLong + req.limit).toInt)
+    LocalRelation(text, page.map(toText(_).copy()).toSeq)
   }
 
   /** Deep-skip pagination: a range-partitioned global sort plus
@@ -159,9 +260,15 @@ object Search {
   def search(layers: DataFrame, req: SearchRequest): SearchResponse = {
     validate(req) // request-level errors propagate (HTTP-422 analogue)
     try {
-      val rows = plan(layers, req).collect().toSeq.map { r: Row =>
-        LayerResult(r.getString(0), r.getString(1), r.getString(2),
-          r.getString(3), r.getString(4), r.getString(5))
+      val rows = page(layers, req) match {
+        case Left(local) => local.data.map { r =>
+          def str(i: Int) = if (r.isNullAt(i)) null else r.getUTF8String(i).toString
+          LayerResult(str(0), str(1), str(2), str(3), str(4), str(5))
+        }
+        case Right(df) => df.collect().toSeq.map { r: Row =>
+          LayerResult(r.getString(0), r.getString(1), r.getString(2),
+            r.getString(3), r.getString(4), r.getString(5))
+        }
       }
       SearchResponse(Some(rows), None)
     } catch {

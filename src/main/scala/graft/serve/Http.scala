@@ -15,10 +15,19 @@ object Http {
     */
   val MaxBodyBytes: Int = 4 * 1024 * 1024
 
+  /** How much of a refused body is read and dropped before the connection
+    * closes. Closing a socket that still holds unread request bytes sends
+    * an RST, which can destroy the 413 before the client reads it; the
+    * JDK server itself drains only ~64 KB. Past this bound the connection
+    * is cut anyway.
+    */
+  private val MaxDiscardBytes: Long = 2L * MaxBodyBytes
+
   /** Answer one exchange and close it: 405 unless POST, 413 past
-    * [[MaxBodyBytes]], otherwise `handle(body)`'s status and reply (a
-    * `None` reply sends the status with no body). `refuse` wraps a
-    * refusal message in the endpoint's error envelope.
+    * [[MaxBodyBytes]] (with `Connection: close`), otherwise
+    * `handle(body)`'s status and reply (a `None` reply sends the status
+    * with no body). `refuse` wraps a refusal message in the endpoint's
+    * error envelope.
     */
   def post(ex: HttpExchange, refuse: String => JValue)
           (handle: String => (Int, Option[JValue])): Unit =
@@ -28,7 +37,10 @@ object Http {
           (405, Some(refuse("method not allowed: POST to this endpoint")))
         else readBody(ex) match {
           case Some(b) => handle(b)
-          case None => (413, Some(refuse(s"request body exceeds $MaxBodyBytes bytes")))
+          case None =>
+            discard(ex.getRequestBody)
+            ex.getResponseHeaders.set("Connection", "close")
+            (413, Some(refuse(s"request body exceeds $MaxBodyBytes bytes")))
         }
       body match {
         case Some(b) =>
@@ -52,5 +64,15 @@ object Http {
       val raw = ex.getRequestBody.readNBytes(MaxBodyBytes + 1)
       if (raw.length > MaxBodyBytes) None else Some(new String(raw, UTF_8))
     }
+  }
+
+  /** Read and drop what is left of a refused body, up to
+    * [[MaxDiscardBytes]]; nothing read here is kept. */
+  private def discard(in: java.io.InputStream): Unit = {
+    val buf = new Array[Byte](64 * 1024)
+    var left = MaxDiscardBytes
+    var n = 0
+    while (left > 0 && { n = in.read(buf, 0, math.min(buf.length.toLong, left).toInt); n > 0 })
+      left -= n
   }
 }

@@ -28,9 +28,10 @@ import graft.operators.Search.{Point, SearchRequest}
   *
   * Scale posture: the endpoint is presentation, not data plane — request
   * bodies are probe-sized (capped at [[Http.MaxBodyBytes]], 413 past it)
-  * and responses are limit<=10 rows, so the only
-  * cluster-sized work is the `Search.plan` scan itself. Handlers run on
-  * a bounded pool; concurrent requests are safe (Spark actions are
+  * and responses are limit<=10 rows. `Search.plan` answers a small corpus
+  * from a driver copy with no Spark job, and scans a larger one with one
+  * job per request. Handlers run on a bounded pool; concurrent requests
+  * are safe (the driver copy is shared read-only, and Spark actions are
   * thread-safe on a shared session).
   */
 object SearchServer {

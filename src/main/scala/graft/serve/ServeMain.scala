@@ -15,9 +15,10 @@ import org.apache.spark.sql.SparkSession
   * quantized-MLP artifact loads behind the encoder (the x4 contract —
   * a trained export drops in); without one the hashing encoder runs at
   * the corpus' embedding width (the x3 default). Both servers share
-  * ONE SparkSession and ONE cached layers plan; requests are
-  * probe-sized, so the only corpus-scale work is the scan inside
-  * `Search.plan`.
+  * ONE SparkSession and ONE cached layers plan. Boot materializes the
+  * cache and, when it is under `Search.LocalMaxBytes`, collects the
+  * driver copy that answers every request without a Spark job; a larger
+  * corpus is scanned by one job per request (`Search.plan`).
   */
 object ServeMain {
 
@@ -29,6 +30,7 @@ object ServeMain {
       : (com.sun.net.httpserver.HttpServer, com.sun.net.httpserver.HttpServer) = {
     val raw = spark.read.parquet(path)
     val layers = graft.sources.LayersTable.fromGeoParquet(raw).cache()
+    val rows = layers.count() // materializes the cache
     val dim = layers.select("embeddings").head().getSeq[Float](0).length
     val encoder: String => Array[Float] = weightsPath match {
       case Some(wp) =>
@@ -43,10 +45,13 @@ object ServeMain {
       case None =>
         q => graft.operators.Embed.embedQuery(q, dim)
     }
+    val served =
+      if (graft.operators.Search.collectDriverCopy(layers)) "from a driver copy, no job per request"
+      else s"by a Spark job per request (cache over ${graft.operators.Search.LocalMaxBytes >> 20} MiB)"
     val http = SearchServer.start(layers, encoder, port = httpPort)
     val mcp = new McpServer(layers, encoder).startHttp(port = mcpPort)
     println(s"[serve] /search on ${http.getAddress.getPort}, " +
-      s"/mcp on ${mcp.getAddress.getPort}; corpus ${layers.count()} layers, dim $dim")
+      s"/mcp on ${mcp.getAddress.getPort}; corpus $rows layers, dim $dim, served $served")
     (http, mcp)
   }
 

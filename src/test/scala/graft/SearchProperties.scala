@@ -1,0 +1,114 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types._
+import org.scalacheck.{Gen, Prop, Properties, Test}
+import org.scalacheck.Prop.forAllNoShrink
+
+import graft.functions.Geo
+import graft.operators.Search
+import graft.operators.Search.{Point, SearchRequest}
+
+/** The driver path of [[Search.plan]] returns the pages the distributed
+  * path does. One random corpus is searched three ways: as a
+  * `LocalRelation`, as a materialized cache (both take the driver path)
+  * and as a parquet-backed copy (the distributed path, deep-skip
+  * pagination included). Corpora hold exact distance ties, zero vectors
+  * (NaN distances), and ids outside the BMP, where UTF-8 byte order and
+  * `String.compareTo` disagree; requests cover empty and `""`-only type
+  * filters, EPSG:3857 points, shallow and deep skips, and limits 1-10.
+  * Each case writes a corpus of ~1,000 rows, so few cases run.
+  */
+object SearchProperties extends Properties("graft.search") {
+
+  override def overrideParameters(p: Test.Parameters): Test.Parameters =
+    p.withMinSuccessfulTests(5).withWorkers(1)
+
+  private lazy val spark = SparkTestSession.spark
+
+  private val schema = StructType(Seq(
+    StructField("id", StringType), StructField("name", StringType),
+    StructField("type", StringType), StructField("description", StringType),
+    StructField("url", StringType), StructField("metadata_text", StringType),
+    StructField("embeddings", ArrayType(FloatType, containsNull = false)),
+    StructField("geom", BinaryType)))
+
+  private val types = Seq("Feature Layer", "feature layer", "Table", "Raster Layer", "")
+
+  /** A box around the origin (where small EPSG:3857 points land), one
+    * around Sanford, FL, and one that holds neither. */
+  private val polygons = Seq(
+    "POLYGON ((-1 -1, 1 -1, 1 1, -1 1, -1 -1))",
+    "POLYGON ((-81.4 28.7, -81.1 28.7, -81.1 28.9, -81.4 28.9, -81.4 28.7))",
+    "POLYGON ((10 10, 12 10, 12 12, 10 12, 10 10))")
+    .map(wkt => Geo.toWkb(Geo.fromWkt(wkt)))
+
+  /** Components from a small set: many rows share a vector (exact ties),
+    * and some are all zero. */
+  private val genVec: Gen[Array[Float]] =
+    Gen.listOfN(4, Gen.oneOf(-1f, 0f, 0f, 1f, 2f)).map(_.toArray)
+
+  /** ASCII, a BMP character above the surrogates (U+FF21) and a
+    * supplementary one (U+1F600): Spark orders UTF-8 bytes, so U+FF21
+    * sorts first there and last under `String.compareTo`. */
+  private val genIdPrefix: Gen[String] =
+    Gen.oneOf("L", "l", "Ａ", "😀", "😀Ａ")
+
+  /** A corpus; a falsified case prints its size, not its rows. */
+  private final case class Corpus(rows: Seq[Row]) {
+    override def toString: String = s"Corpus(${rows.size} rows)"
+  }
+
+  private val genCorpus: Gen[Corpus] = for {
+    n <- Gen.choose(1005, 1040)
+    rows <- Gen.listOfN(n, for {
+      prefix <- genIdPrefix
+      t <- Gen.oneOf(types)
+      v <- genVec
+      g <- Gen.oneOf(polygons)
+    } yield (prefix, t, v, g))
+  } yield Corpus(rows.zipWithIndex.map { case ((prefix, t, v, g), i) =>
+    Row(s"$prefix${i % 97}-$i", s"name-$i", t, s"desc-$i", s"u/$i", s"m-$i", v.toSeq, g)
+  })
+
+  private val genRequest: Gen[SearchRequest] = for {
+    probe <- Gen.frequency(4 -> genVec, 1 -> Gen.const(Array.fill(4)(0f)))
+    typeFilter <- Gen.oneOf(
+      Gen.const(None), Gen.const(Some(Nil)), Gen.const(Some(Seq(""))),
+      Gen.someOf(types).map(ts => Some(ts.toSeq.map(_.toUpperCase(java.util.Locale.ROOT)))))
+    point <- Gen.oneOf(
+      Gen.const(None),
+      Gen.const(Some(Point(-81.27, 28.80))),
+      Gen.const(Some(Point(0.25, -0.5))),
+      Gen.zip(Gen.choose(-150.0, 150.0), Gen.choose(-80.0, 80.0))
+        .map { case (x, y) => Some(Point(x, y, epsg = 3857)) })
+    skip <- Gen.frequency(
+      3 -> Gen.choose(0, 30),
+      1 -> Gen.choose(Search.DeepSkipThreshold + 1, Search.DeepSkipThreshold + 40))
+    limit <- Gen.choose(Search.MinLimit, Search.MaxLimit)
+  } yield SearchRequest(probe, typeFilter, point, skip, limit)
+
+  property("driver-path pages equal distributed pages") =
+    forAllNoShrink(genCorpus, Gen.listOfN(6, genRequest)) { (corpus, reqs) =>
+      val local = spark.createDataFrame(java.util.Arrays.asList(corpus.rows: _*), schema)
+      val dir = java.nio.file.Files.createTempDirectory("graft-search-prop")
+        .resolve("layers").toString
+      local.write.parquet(dir)
+      val parquet: DataFrame = spark.read.parquet(dir)
+      val cached = local.repartition(3).cache()
+      try {
+        cached.count()
+        val paths = Search.collectDriverCopy(local) && Search.collectDriverCopy(cached) &&
+          !Search.collectDriverCopy(parquet)
+        Prop(paths) :| "path choice" && Prop.all(reqs.map { r =>
+          val expected = Search.search(parquet, r)
+          val got = Seq(Search.search(local, r), Search.search(cached, r))
+          Prop(expected.error.isEmpty && got.forall(_ == expected)) :|
+            s"probe ${r.probe.toSeq} type ${r.typeFilter} point ${r.inputPoint} " +
+              s"skip ${r.skip} limit ${r.limit}: distributed " +
+              s"${expected.layers.map(_.map(_.id))} ${expected.error}, " +
+              s"driver ${got.map(g => g.layers.map(_.map(_.id)) -> g.error)}"
+        }: _*)
+      } finally cached.unpersist(blocking = true)
+    }
+}

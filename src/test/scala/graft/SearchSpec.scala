@@ -159,4 +159,79 @@ class SearchSpec extends AnyFunSuite {
     assert(resp.layers.isEmpty)
     assert(resp.error.isDefined)
   }
+
+  // --- the driver path: small corpora answered without a Spark job ---
+
+  private def req(limit: Int, skip: Int = 0) = SearchRequest(probe, limit = limit, skip = skip)
+
+  /** Jobs that `f` runs under its own job group, counted by a listener.
+    * A marker job drains the listener bus before the count is read. */
+  private def jobsOf(f: => Unit): Int = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val group = Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        if (group == "search-jobs") jobs.incrementAndGet()
+        if (group == "search-jobs-drain") drained.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("search-jobs", "search-jobs")
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup("search-jobs-drain", "search-jobs-drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("driver path: a small cached corpus runs no Spark job per request after the first") {
+    val cached = layers.repartition(2).cache()
+    try {
+      cached.count() // materializes the cache
+      val first = Search.search(cached, req(limit = 3))
+      assert(first.layers.get.map(_.id) === Seq("L1", "L2", "L4"))
+      val jobs = jobsOf {
+        for (k <- 1 to 5; skip <- Seq(0, 2))
+          assert(Search.search(cached, req(limit = k, skip = skip)) ===
+            Search.search(layers, req(limit = k, skip = skip)))
+      }
+      assert(jobs === 0)
+    } finally cached.unpersist(blocking = true)
+  }
+
+  test("driver path: LocalRelation and materialized caches under the cap take it; unpersist drops it") {
+    assert(Search.collectDriverCopy(layers)) // a createDataFrame LocalRelation
+    val cached = layers.repartition(2).cache()
+    assert(!Search.collectDriverCopy(cached), "an unmaterialized cache plans the job")
+    cached.count()
+    assert(Search.collectDriverCopy(cached))
+    val plan = Search.plan(cached, req(limit = 2)).queryExecution.executedPlan
+    assert(plan.isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec], plan.toString)
+    cached.unpersist(blocking = true)
+    assert(!Search.collectDriverCopy(cached))
+    assert(Search.search(cached, req(limit = 3)).layers.get.map(_.id) === Seq("L1", "L2", "L4"))
+  }
+
+  test("driver path: a parquet-backed corpus still plans TakeOrderedAndProject") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-search-pq").resolve("layers").toString
+    layers.write.parquet(dir)
+    val pq = spark.read.parquet(dir)
+    assert(!Search.collectDriverCopy(pq))
+    val plan = Search.plan(pq, req(limit = 3, skip = 1)).queryExecution.executedPlan.toString
+    assert(plan.contains("TakeOrderedAndProject"), plan)
+    assert(Search.search(pq, req(limit = 3)).layers.get.map(_.id) === Seq("L1", "L2", "L4"))
+  }
+
+  test("driver path: an execution error still lands in the envelope") {
+    // 3-dim probe vs the fixture's 4-dim rows, as in ServeSpec
+    val bad = SearchRequest(Array(1f, 0f, 0f))
+    val resp = Search.search(layers, bad)
+    assert(resp.layers.isEmpty)
+    assert(resp.error.exists(_.contains("dimension mismatch")), resp.error)
+  }
 }
