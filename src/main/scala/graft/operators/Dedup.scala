@@ -1,6 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions.{minhash_signature, simhash64}
@@ -217,118 +221,85 @@ object Dedup {
       .orderBy(col("id1"), col("id2"))
   }
 
+  /** The largest pair list [[nearDupClusters]] resolves on the driver.
+    * A collected long pair costs ~84 bytes of driver heap as an
+    * `UnsafeRow` and ~56 more as the union-find's sorted endpoints, so
+    * the cap holds the driver path to ~150 MB. Time does not set it: at
+    * 10^6 pairs the driver path took 4 s and star contraction 26 s
+    * (4 cores; measurements in CHANGES.md).
+    */
+  val LocalMaxPairs: Int = 1000000
+
   /** Near-dup CLUSTERS from a pair list: connected components over the
     * pair graph, labeled by each component's minimum id — the step that
     * turns pairwise near-dup evidence (d2/d3/d4/v8 outputs) into "keep
-    * one per cluster" decisions. Returns (id, keeper) for every id that
-    * appears in at least one pair.
+    * one per cluster" decisions. Returns (id, keeper) ordered by id, for
+    * every id that shares a pair with a different id. A pair with a null
+    * id or with two equal ids adds no edge, so an id seen only in such
+    * pairs is absent. Ids compare by Spark's ordering for their type (for
+    * strings, UTF-8 byte order), so `keeper` is the component's SQL `min`.
     *
-    * Algorithm: iterative min-label propagation (each round every node
-    * takes the min of its own and its neighbors' labels), which converges
-    * in O(component diameter) rounds — near-dup components are tiny
-    * chains/cliques in practice, so a handful. The edge set carries
-    * TAGGED SELF-LOOPS (own = a==b), so one join + one aggregate per
-    * round computes min over N(a) ∪ {a} AND recovers a's previous label
-    * (the self-loop row) in the same pass — the convergence witness
-    * piggybacks on the propagation aggregate (round-4 advice: the old
-    * shape ran a separate union branch plus a hash-sum witness scan per
-    * round). Labels persist per round and the previous round is
-    * unpersisted, so lineage and memory stay bounded. For graphs with
-    * giant components, swap in the large-star/small-star variant
-    * (O(log n) rounds) — same interface.
+    * One bounded collect of at most [[LocalMaxPairs]] + 1 pair rows comes
+    * first. A list that fits is resolved by a union-find on the driver and
+    * returned as a `LocalRelation`: no further job runs. A longer list is
+    * contracted on the cluster by [[starClusters]], whose `checkpointDir`
+    * this forwards. The driver pass settles every component in one round;
+    * the contraction needs O(log n) rounds. A call that would need more
+    * than `maxRounds` refuses rather than returning labels that have not
+    * converged; raise `maxRounds` to let it run on.
     */
-  def nearDupClusters(pairs: DataFrame, idCol1: String = "id1",
-                      idCol2: String = "id2", maxRounds: Int = 20): DataFrame = {
-    // Materialize the incoming pair list ONCE before anything references
-    // it. The pair plan is typically the expensive near-dup join
-    // (d2/d3/d4/v8); it appears under BOTH the edge orientation union
-    // branches and again under the seed-label subtree, and the first
-    // round's job would otherwise evaluate the whole join per reference
-    // (the sf1 sweep measured d7 at ~260 s against d2's ~14 s for this
-    // reason — the pair list itself is a few thousand rows). persist +
-    // count, not localCheckpoint: lineage stays recomputable on block
-    // loss (the round-5 knnJoin advice), and the count is O(|pairs|).
-    val pc = pairs.select(col(idCol1).as("a0"), col(idCol2).as("b0"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pc.count(): Unit
-    // every persisted handle the loop holds, unpersisted in the finally on
-    // ANY exit path except the final `labels` on success (the result reads
-    // its already-materialized cache; the caller's action releases it with
-    // the session). Without this, a failed round leaked pc/withSelf/round
-    // caches for the session's lifetime (round-6 advice).
-    var withSelf: DataFrame = null
-    var kept: DataFrame = null // persisted handle (labels drops the flag column)
-    var prevKept: DataFrame = null
-    var done = false
-    try {
-      val edges = pc.select(col("a0").as("a"), col("b0").as("b"))
-        .union(pc.select(col("b0").as("a"), col("a0").as("b")))
-        .distinct()
-      withSelf = edges.select(col("a"), col("b"), lit(false).as("own"))
-        .union(edges.select(col("a"), col("a").as("b"), lit(true).as("own")).distinct())
-        .persist()
-      // seed = one propagation over identity labels: label(n) = min(n, N(n))
-      var labels = withSelf
-        .groupBy(col("a"))
-        .agg(min(col("b")).as("label"))
-        .select(col("a").as("node"), col("label"))
-        .persist()
-      kept = labels
-      var rounds = 0
-      var converged = false
-      while (!converged && rounds < maxRounds) {
-        val next = withSelf
-          .join(labels.withColumnRenamed("node", "b"), "b")
-          .groupBy(col("a"))
-          .agg(min(col("label")).as("label"),
-            // a's own previous label rides the self-loop row
-            min(when(col("own"), col("label"))).as("prev"))
-          .select(col("a").as("node"), col("label"),
-            (col("label") =!= col("prev")).as("moved"))
-          .persist()
-        prevKept = kept
-        kept = next
-        // the materializing action IS the convergence check (null on empty)
-        val moved = next.agg(sum(when(col("moved"), 1L).otherwise(0L))).head()
-        val changed = if (moved.isNullAt(0)) 0L else moved.getLong(0)
-        if (prevKept != null) prevKept.unpersist() // null right after a truncation round
-        prevKept = null
-        labels = next.select(col("node"), col("label"))
-        converged = changed == 0L
-        rounds += 1
-        // periodic lineage truncation: each round's plan re-embeds the
-        // pair-join subtree through the previous labels, so a DEEP
-        // component chain (many rounds) grows the plan string past the
-        // heap even though the data is tiny (the KCore lesson — AQE
-        // stringifies the full plan per job). Every 4th round cuts the
-        // chain; shallow corpora (the common case, and every standing
-        // bench number) never reach this branch.
-        if (!converged && rounds % 4 == 0) {
-          val cut = labels.localCheckpoint(true)
-          kept.unpersist()
-          kept = null
-          labels = cut
-        }
-      }
-      done = true
-      labels.select(col("node").as("id"), col("label").as("keeper"))
-        .orderBy(col("id"))
-    } finally {
-      if (withSelf != null) withSelf.unpersist()
-      pc.unpersist()
-      if (!done) {
-        if (kept != null) kept.unpersist()
-        if (prevKept != null) prevKept.unpersist()
-      }
-    }
+  def nearDupClusters(pairs: DataFrame, idCol1: String = "id1", idCol2: String = "id2",
+                      maxRounds: Int = 20, checkpointDir: Option[String] = None): DataFrame = {
+    require(maxRounds >= 1, s"nearDupClusters needs maxRounds >= 1, got maxRounds = $maxRounds")
+    val edges = canonicalEdges(pairs, idCol1, idCol2)
+    val probe = edges.limit(LocalMaxPairs + 1).queryExecution.executedPlan.executeCollect()
+    if (probe.length <= LocalMaxPairs) localClusters(edges, probe)
+    else starClusters(pairs, idCol1, idCol2, maxRounds, checkpointDir)
   }
 
-  /** The giant-component scale path for [[nearDupClusters]]: alternating
-    * large-star / small-star rounds (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond" — public), which converge in
-    * O(log n) rounds regardless of component diameter, where plain
-    * min-label propagation needs O(diameter). Same output contract:
-    * (id, keeper = component minimum) for every id in a pair.
+  /** Each pair as (a = lower id, b = higher id), pairs that add no edge
+    * dropped: `least`/`greatest` skip a null, so a pair with one null id
+    * becomes (x, x), and `=!=` drops it, the (x, x) pairs and the all-null
+    * ones alike. */
+  private def canonicalEdges(pairs: DataFrame, idCol1: String, idCol2: String): DataFrame =
+    pairs.select(least(col(idCol1), col(idCol2)).as("a"),
+        greatest(col(idCol1), col(idCol2)).as("b"))
+      .filter(col("a") =!= col("b"))
+
+  /** Union-find over collected (a, b) edges. Endpoints are ranked by
+    * Spark's ordering, every root links under the lower-ranked one, so a
+    * component's root is its minimum. Output schema is the star path's:
+    * `id` as nullable as the edge columns, `keeper` nullable (a `min`). */
+  private def localClusters(edges: DataFrame, rows: Array[InternalRow]): DataFrame = {
+    val a = edges.queryExecution.analyzed.output.head
+    val ord = TypeUtils.getInterpretedOrdering(a.dataType)
+    val ends = Array.tabulate[Any](2 * rows.length)(i => rows(i >> 1).get(i & 1, a.dataType))
+      .sorted(ord)
+    val ids = ends.indices.collect {
+      case i if i == 0 || ord.compare(ends(i - 1), ends(i)) != 0 => ends(i).asInstanceOf[AnyRef]
+    }.toArray
+    def rank(v: Any): Int = java.util.Arrays.binarySearch(ids, v.asInstanceOf[AnyRef], ord)
+    val parent = Array.range(0, ids.length)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    rows.foreach { r =>
+      val (u, v) = (find(rank(r.get(0, a.dataType))), find(rank(r.get(1, a.dataType))))
+      if (u != v) parent(math.max(u, v)) = math.min(u, v)
+    }
+    val out = Seq(AttributeReference("id", a.dataType, a.nullable)(),
+      AttributeReference("keeper", a.dataType, nullable = true)())
+    GraftColumnBridge.dataFrame(edges.sparkSession,
+      LocalRelation(out, ids.indices.map(i => InternalRow(ids(i), ids(find(i))))))
+  }
+
+  /** The cluster path of [[nearDupClusters]]: alternating large-star /
+    * small-star rounds (Kiveris et al., "Connected Components in
+    * MapReduce and Beyond" — public), which converge in O(log n) rounds
+    * regardless of component diameter. Same output contract as
+    * [[nearDupClusters]]; refuses past `maxRounds` rounds.
     *
     *  - large-star(u): every strictly-larger neighbor of u re-attaches to
     *    min(neighbors(u) + u);
@@ -337,12 +308,12 @@ object Dedup {
     *
     * Each operation is one shuffle (group per node for the min + an
     * edge-side join) — no neighbor lists are ever collected, so hot nodes
-    * cost a join key, not memory. Convergence witness: (count, hash sum)
-    * of the canonical edge set, checked per round; rounds are also capped.
+    * cost a join key, not memory. Convergence witness: (count, hash sums)
+    * of the canonical edge set, checked per round.
     */
-  def nearDupClustersStars(pairs: DataFrame, idCol1: String = "id1",
-                           idCol2: String = "id2", maxRounds: Int = 30,
-                           checkpointDir: Option[String] = None): DataFrame = {
+  private[graft] def starClusters(pairs: DataFrame, idCol1: String = "id1",
+                                  idCol2: String = "id2", maxRounds: Int = 20,
+                                  checkpointDir: Option[String] = None): DataFrame = {
     // canonical undirected edges, no self loops. Each round references
     // its input ~16 times (two star ops, each reading the edge set for
     // both orientations and the per-node min), so lineage MUST be
@@ -363,18 +334,14 @@ object Dedup {
       val obs = org.apache.spark.sql.Observation()
       val observed = df.observe(obs, count(lit(1)).as("n"),
         sum(hash(col("a"), col("b")).cast("long")).as("h"),
-        sum(col("a")).as("sa"), sum(col("b")).as("sb"))
+        sum(hash(col("a")).cast("long")).as("ha"), sum(hash(col("b")).cast("long")).as("hb"))
       val cut = if (checkpointDir.isDefined) observed.checkpoint()
         else observed.localCheckpoint()
       def at(k: String) =
         Option(obs.get(k)).map(_.asInstanceOf[Long]).getOrElse(0L)
-      (cut, (at("n"), at("h"), at("sa"), at("sb")))
+      (cut, (at("n"), at("h"), at("ha"), at("hb")))
     }
-    var (e, prev) = truncateObserved(pairs
-      .select(least(col(idCol1), col(idCol2)).as("a"),
-        greatest(col(idCol1), col(idCol2)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct())
+    var (e, prev) = truncateObserved(canonicalEdges(pairs, idCol1, idCol2).distinct())
 
     // one star operation: re-attach `keepLarger` (large-star) or the
     // complementary (small-star) neighbors of every node to that node's
@@ -395,11 +362,12 @@ object Dedup {
     }
 
     // Four independent aggregates of the canonical edge set (observed
-    // during each round's checkpoint, see truncateObserved): cardinality,
-    // a hash sum, and the two endpoint sums. A (count, hash-sum) pair can
-    // in principle collide across different edge sets; requiring the
-    // endpoint sums to also match makes a false convergence practically
-    // impossible — and the witness costs NO extra pass at all.
+    // during each round's checkpoint, see truncateObserved): cardinality
+    // and three hash sums (over the edge and over each endpoint), all
+    // defined for any id type. A (count, hash-sum) pair can in principle
+    // collide across different edge sets; requiring the endpoint sums to
+    // also match makes a false convergence practically impossible — and
+    // the witness costs NO extra pass at all.
     var rounds = 0
     var converged = false
     while (!converged && rounds < maxRounds) {
@@ -409,6 +377,8 @@ object Dedup {
       prev = w
       rounds += 1
     }
+    require(converged, s"nearDupClusters: star contraction did not converge within " +
+      s"maxRounds = $maxRounds rounds; raise maxRounds for components this deep")
     // converged edge set is a star forest rooted at component minima
     e.select(col("b").as("id"), col("a").as("keeper"))
       .union(e.select(col("a").as("id"), col("a").as("keeper")))

@@ -371,9 +371,10 @@ object Knn {
     * published algorithm's accepted miss).
     *
     * "Drop if ANY lower-id neighbor" is deliberately transitive-free:
-    * one SQL statement, deterministic, no iteration. For full
-    * connected-component semantics use [[Dedup.nearDupClusters]] over
-    * emitted pairs.
+    * one SQL statement, deterministic, no iteration. For transitive
+    * clusters use [[Dedup.nearDupClusters]] over emitted pairs (a driver
+    * union-find for short pair lists, star contraction rounds past
+    * [[Dedup.LocalMaxPairs]]).
     *
     * Clustering reuses [[Ivf.build]]'s deterministic k-means (seeded
     * sample, fixed iterations) so the oracle replays the assignment

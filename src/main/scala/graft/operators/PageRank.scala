@@ -34,7 +34,7 @@ import org.apache.spark.storage.StorageLevel
   * aggregate (one long to the driver per iteration, the standard Pregel
   * shape). Rank lineage is cut by persist-per-iteration with eager
   * materialization; for hundreds of iterations compose with a reliable
-  * checkpoint dir as [[graft.operators.Dedup.nearDupClustersStars]] does.
+  * checkpoint dir as [[graft.operators.Dedup.nearDupClusters]] does.
   */
 object PageRank {
 

@@ -1222,8 +1222,8 @@ object Relational extends QueryPack {
     // over plain parquet): lineitem rewritten clustered on
     // (l_partkey, l_suppkey), then a selective filter on BOTH columns
     // reads it back — the gate pins that the layout changed NOTHING
-    // (oracle over the ORIGINAL table); ZOrderSkipBench measures the
-    // row-group skipping the layout exists for
+    // (oracle over the ORIGINAL table); the row-group skipping the
+    // layout exists for is measured in BASELINE.md (round 12)
     "q45_zorder_layout" -> { (s, d) =>
       val path = s"/dev/shm/graft_zorder_${new java.io.File(d).getName}"
       // hermetic rep: remove any previous layout FIRST so every run

@@ -1315,8 +1315,9 @@ object Text extends QueryPack {
 
     // Near-dup clusters: d2's verified pairs resolved into connected
     // components, one keeper (min doc_id) per component — the decision
-    // step of the dedup pipeline. Min-label propagation (O(diameter)
-    // rounds); the oracle states the same closure as a recursive CTE.
+    // step of the dedup pipeline. A pair list under Dedup.LocalMaxPairs
+    // resolves on the driver, a longer one by star contraction; the
+    // oracle states the same closure as a recursive CTE.
     "d7_dedup_clusters" -> { (s, d) =>
       // maxPairEstimate raised DELIBERATELY (the named escape hatch):
       // d7's subject is cluster resolution, so it keeps the exact pair
@@ -1330,21 +1331,21 @@ object Text extends QueryPack {
         .orderBy(col("doc_id"))
     },
 
-    // The giant-component SCALE path for cluster resolution, under the
-    // oracle on a corpus where plain min-label propagation CANNOT finish:
-    // chain pairs (doc_id, doc_id+1) within blocks of 64 consecutive ids
-    // build path components of diameter up to 63 — past nearDupClusters'
-    // 20-round default — while large-star/small-star contraction closes
-    // them in O(log 64) ~ 6 rounds. Component count scales with the
-    // corpus (one per 64 ids), so the oracle's reachability closure stays
-    // LINEAR (<= 63 reach rows per node) at every sf.
+    // Deep components under the oracle: chain pairs (doc_id, doc_id+1)
+    // within blocks of 64 consecutive ids build path components of
+    // diameter up to 63, which label propagation would need ~63 rounds
+    // for; the driver union-find settles them in one pass and star
+    // contraction (past Dedup.LocalMaxPairs pairs) in O(log 64) ~ 6
+    // rounds. Component count scales with the corpus (one per 64 ids),
+    // so the oracle's reachability closure stays LINEAR (<= 63 reach
+    // rows per node) at every sf.
     "d8_dedup_clusters_stars" -> { (s, d) =>
       val docs = Tables.documents(s, d).select(col("doc_id"))
       val pairs = docs.as("a").join(docs.as("b"),
           col("b.doc_id") === col("a.doc_id") + 1 &&
             col("a.doc_id") % 64 =!= lit(63))
         .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
-      Dedup.nearDupClustersStars(pairs)
+      Dedup.nearDupClusters(pairs)
         .select(col("id").as("doc_id"), col("keeper"))
         .orderBy(col("doc_id"))
     },

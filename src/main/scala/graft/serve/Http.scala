@@ -1,13 +1,41 @@
 package graft.serve
 
+import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.{Executors, ThreadFactory}
+import java.util.concurrent.atomic.AtomicInteger
 
-import com.sun.net.httpserver.HttpExchange
+import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
-/** The request path `/search` and `/mcp` share: method check, body cap,
-  * reply. Each endpoint supplies only its error envelope and its handler.
+/** The request path `/search` and `/mcp` share: server start, method
+  * check, body cap, reply. Each endpoint supplies only its path, its
+  * error envelope and its handler.
   */
 object Http {
+
+  /** Handler threads per server; requests past this many wait in the
+    * server's queue. */
+  private val PoolSize = 8
+
+  /** Serve POST `path` on `port` (0 = ephemeral; read the bound port off
+    * the returned server) through [[post]], on a pool of [[PoolSize]]
+    * daemon threads: `stop` ends the server's own thread, and the idle
+    * pool keeps no JVM alive.
+    */
+  def serve(port: Int, path: String, refuse: String => JValue)
+           (handle: String => (Int, Option[JValue])): HttpServer = {
+    val server = HttpServer.create(new InetSocketAddress(port), 0)
+    server.createContext(path, (ex: HttpExchange) => post(ex, refuse)(handle))
+    val n = new AtomicInteger()
+    val daemons: ThreadFactory = { r =>
+      val t = new Thread(r, s"graft-http$path-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }
+    server.setExecutor(Executors.newFixedThreadPool(PoolSize, daemons))
+    server.start()
+    server
+  }
 
   /** Hard cap on a POST body (4 MiB) — far above any legitimate search
     * request or JSON-RPC tool call, far below anything that could
@@ -29,7 +57,7 @@ object Http {
     * with no body). `refuse` wraps a refusal message in the endpoint's
     * error envelope.
     */
-  def post(ex: HttpExchange, refuse: String => JValue)
+  private def post(ex: HttpExchange, refuse: String => JValue)
           (handle: String => (Int, Option[JValue])): Unit =
     try {
       val (status, body) =

@@ -1,10 +1,9 @@
 package graft.serve
 
 import java.io.{BufferedReader, InputStream, InputStreamReader, OutputStream, PrintWriter}
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 
-import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import com.sun.net.httpserver.HttpServer
 import org.apache.spark.sql.DataFrame
 
 import graft.operators.Search
@@ -96,7 +95,6 @@ final class McpServer(layers: DataFrame, encoder: String => Array[Float]) {
     val args = p.get("arguments").getOrElse(JObj.of())
     try {
       val req = SearchServer.decodeRequest(args, encoder)
-      Search.validate(req)
       val envelope = SearchServer.markdownifyAllStrings(
         SearchServer.encodeResponse(Search.search(layers, req)))
       result(id, JObj.of(
@@ -135,26 +133,18 @@ final class McpServer(layers: DataFrame, encoder: String => Array[Float]) {
     *    which the spec permits);
     *  - a body past [[Http.MaxBodyBytes]] → 413, before buffering.
     * Port 0 = ephemeral; read the bound port off the returned server.
-    * Handlers run on a bounded pool; concurrent calls are safe (Spark
-    * actions are thread-safe on a shared session).
+    * Handlers run on [[Http.serve]]'s bounded pool; concurrent calls are
+    * safe (Spark actions are thread-safe on a shared session).
     */
-  def startHttp(port: Int = 8081, poolSize: Int = 8): HttpServer = {
-    val server = HttpServer.create(new InetSocketAddress(port), 0)
-    server.createContext("/mcp", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit =
-        Http.post(ex, error(JNull, -32600, _)) { body =>
-          val resp =
-            try McpServer.this.handle(Json.parse(body))
-            catch { case e: JsonParseException =>
-              Some(error(JNull, -32700, s"parse error: ${e.getMessage}")) }
-          // a notification gets NO body — 202 per the MCP spec
-          (if (resp.isDefined) 200 else 202, resp)
-        }
-    })
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(poolSize))
-    server.start()
-    server
-  }
+  def startHttp(port: Int = 8081): HttpServer =
+    Http.serve(port, "/mcp", error(JNull, -32600, _)) { body =>
+      val resp =
+        try handle(Json.parse(body))
+        catch { case e: JsonParseException =>
+          Some(error(JNull, -32700, s"parse error: ${e.getMessage}")) }
+      // a notification gets NO body — 202 per the MCP spec
+      (if (resp.isDefined) 200 else 202, resp)
+    }
 
   /** Serve line-delimited JSON-RPC until EOF (the MCP stdio transport). */
   def serve(in: InputStream, out: OutputStream): Unit = {

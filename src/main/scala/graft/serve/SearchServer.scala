@@ -1,8 +1,6 @@
 package graft.serve
 
-import java.net.InetSocketAddress
-
-import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import com.sun.net.httpserver.HttpServer
 import org.apache.spark.sql.DataFrame
 
 import graft.operators.Search
@@ -117,28 +115,18 @@ object SearchServer {
 
   /** Start the endpoint on `port` (0 = ephemeral; read the bound port off
     * the returned server). Caller owns the layers plan and the encoder —
-    * the server adds no engine state of its own.
+    * the server adds no engine state of its own. `Search.search`
+    * validates the request outside its envelope, so a violation is a 422
+    * like a decode failure.
     */
-  def start(layers: DataFrame, encoder: String => Array[Float],
-            port: Int = 8080, poolSize: Int = 8): HttpServer = {
-    val server = HttpServer.create(new InetSocketAddress(port), 0)
-    server.createContext("/search", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit =
-        Http.post(ex, detail) { body =>
-          try {
-            val req = decodeRequest(Json.parse(body), encoder)
-            Search.validate(req) // 422 analogue, like the decode
-            (200, Some(encodeResponse(Search.search(layers, req))))
-          } catch {
-            case e: JsonParseException => (422, Some(detail(e.getMessage)))
-            case e: IllegalArgumentException => (422, Some(detail(e.getMessage)))
-          }
-        }
-    })
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(poolSize))
-    server.start()
-    server
-  }
+  def start(layers: DataFrame, encoder: String => Array[Float], port: Int = 8080): HttpServer =
+    Http.serve(port, "/search", detail) { body =>
+      try (200, Some(encodeResponse(Search.search(layers, decodeRequest(Json.parse(body), encoder)))))
+      catch {
+        case e: JsonParseException => (422, Some(detail(e.getMessage)))
+        case e: IllegalArgumentException => (422, Some(detail(e.getMessage)))
+      }
+    }
 
   private def detail(msg: String): JObj =
     JObj.of("detail" -> JArr(Vector(JObj.of("msg" -> JStr(msg)))))

@@ -21,7 +21,8 @@ import org.apache.spark.sql.functions._
   * codegen'd array scan over the broadcast-literal boundaries; the
   * interleave is pure integer shifts. Layout changes NOTHING
   * semantically — the q45 gate pins content equality through the
-  * round trip, ZOrderSkipBench measures the skipping win.
+  * round trip; the skipping win (87.7% of row groups skipped for a
+  * probe on the second column, 4M rows) is recorded in BASELINE.md.
   */
 object ZOrderLayout {
 

@@ -164,38 +164,13 @@ class SearchSpec extends AnyFunSuite {
 
   private def req(limit: Int, skip: Int = 0) = SearchRequest(probe, limit = limit, skip = skip)
 
-  /** Jobs that `f` runs under its own job group, counted by a listener.
-    * A marker job drains the listener bus before the count is read. */
-  private def jobsOf(f: => Unit): Int = {
-    import org.apache.spark.scheduler._
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val group = Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-        if (group == "search-jobs") jobs.incrementAndGet()
-        if (group == "search-jobs-drain") drained.countDown()
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("search-jobs", "search-jobs")
-      try f finally sc.clearJobGroup()
-      sc.setJobGroup("search-jobs-drain", "search-jobs-drain")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
-    jobs.get
-  }
-
   test("driver path: a small cached corpus runs no Spark job per request after the first") {
     val cached = layers.repartition(2).cache()
     try {
       cached.count() // materializes the cache
       val first = Search.search(cached, req(limit = 3))
       assert(first.layers.get.map(_.id) === Seq("L1", "L2", "L4"))
-      val jobs = jobsOf {
+      val jobs = SparkTestSession.jobsOf {
         for (k <- 1 to 5; skip <- Seq(0, 2))
           assert(Search.search(cached, req(limit = k, skip = skip)) ===
             Search.search(layers, req(limit = k, skip = skip)))

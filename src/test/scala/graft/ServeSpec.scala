@@ -314,6 +314,30 @@ class ServeSpec extends AnyFunSuite {
     } finally { http.stop(0); mcp.stop(0) }
   }
 
+  test("ServeMain.start: once both servers stop, no non-daemon thread of theirs runs") {
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Files.createTempDirectory("graft-serve-stop").toString + "/layers"
+    layers.write.mode("overwrite").parquet(dir)
+    def threads() = Thread.getAllStackTraces.keySet.asScala.toSet
+    val before = threads()
+    val (http, mcp) = ServeMain.start(spark, dir, httpPort = 0, mcpPort = 0)
+    try {
+      // one request each, so each server's pool has started a thread
+      val client = HttpClient.newHttpClient()
+      for ((server, path, body) <- Seq(
+          (http, "search", """{"request_string":"red"}"""),
+          (mcp, "mcp", """{"jsonrpc":"2.0","id":1,"method":"tools/list"}"""))) {
+        val r = client.send(HttpRequest.newBuilder(
+          URI.create(s"http://127.0.0.1:${server.getAddress.getPort}/$path"))
+          .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+          HttpResponse.BodyHandlers.ofString())
+        assert(r.statusCode === 200)
+      }
+    } finally { http.stop(0); mcp.stop(0) }
+    val left = (threads() -- before).filter(t => t.isAlive && !t.isDaemon)
+    assert(left.isEmpty, s"still running: ${left.map(_.getName).mkString(", ")}")
+  }
+
   test("ServeMain.start: boots with an .onnx encoder artifact (the F8 loaded-model seam)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-serve-onnx").toString
     layers.write.mode("overwrite").parquet(s"$dir/layers")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -504,49 +505,48 @@ class TextDedupSpec extends AnyFunSuite {
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L, 21L -> 20L))
   }
 
-  test("nearDupClustersStars (large-star/small-star) equals min-label propagation") {
+  test("star contraction equals the driver union-find") {
     import spark.implicits._
     // chain (worst case for propagation, easy for star contraction),
     // triangle, isolated pair
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
       (10L, 11L), (11L, 12L), (10L, 12L), (20L, 21L)).toDF("id1", "id2")
-    val viaStars = Dedup.nearDupClustersStars(pairs)
+    val viaStars = Dedup.starClusters(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaLabels = Dedup.nearDupClusters(pairs)
+    val viaDriver = Dedup.nearDupClusters(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaStars === viaLabels)
+    assert(viaStars === viaDriver)
     // one seeded random graph as cross-validation
     val rng = new scala.util.Random(11)
     val rand = Seq.fill(12)((rng.nextInt(14).toLong, rng.nextInt(14).toLong))
       .filter { case (a, b) => a != b }.distinct.toDF("id1", "id2")
-    val s2 = Dedup.nearDupClustersStars(rand)
+    val s2 = Dedup.starClusters(rand)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val l2 = Dedup.nearDupClusters(rand)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(s2 === l2)
   }
 
-  test("nearDupClustersStars closes a 64-chain exactly where default-round propagation cannot") {
+  test("star contraction closes a 64-chain; past maxRounds both paths refuse") {
     import spark.implicits._
     // the d8 gate geometry: a path of diameter 63 needs ~63 propagation
-    // rounds (> nearDupClusters' 20-round default) but only O(log 64)
-    // star-contraction rounds — the designed giant-component scale story
+    // rounds but only O(log 64) star-contraction rounds
     val chain = (100L until 163L).map(i => (i, i + 1)).toDF("id1", "id2")
-    val viaStars = Dedup.nearDupClustersStars(chain)
+    val viaStars = Dedup.starClusters(chain)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaStars === (100L to 163L).map(_ -> 100L).toMap)
-    // the fixture genuinely needs more than 3 contraction rounds — a
-    // 3-round cap leaves part of the chain attached to a non-minimum, so
-    // the widened 4-way convergence witness is exercised on real rounds,
-    // never on an instantly-stable graph
-    val capped = Dedup.nearDupClustersStars(chain, maxRounds = 3)
+    // the fixture genuinely needs more than 3 contraction rounds, so the
+    // 4-way convergence witness is exercised on real rounds: a 3-round
+    // cap refuses instead of returning the unconverged labels
+    val capped = intercept[IllegalArgumentException](Dedup.starClusters(chain, maxRounds = 3))
+    assert(capped.getMessage.contains("maxRounds = 3"))
+    // the driver pass is one round: it answers within any maxRounds >= 1
+    // and refuses below
+    val viaDriver = Dedup.nearDupClusters(chain, maxRounds = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(capped !== viaStars)
-    // propagation inside its round budget has NOT reached the chain tail:
-    // the far end still carries a non-minimum label
-    val viaLabels = Dedup.nearDupClusters(chain, maxRounds = 10)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaLabels(163L) !== 100L)
+    assert(viaDriver === viaStars)
+    val none = intercept[IllegalArgumentException](Dedup.nearDupClusters(chain, maxRounds = 0))
+    assert(none.getMessage.contains("maxRounds = 0"))
   }
 
   test("BM25 matches hand-computed scores; tf raises, length normalizes, absent term drops") {
@@ -663,13 +663,56 @@ class TextDedupSpec extends AnyFunSuite {
     assert(hit.collect().map(_.getString(0)).toSeq === Seq("a"))
   }
 
-  test("nearDupClustersStars reliable-checkpoint path matches localCheckpoint") {
+  test("nearDupClusters: self-pairs and null ids add no edge on either path") {
+    import spark.implicits._
+    val pairs = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), Some(2L)), (Some(5L), Some(5L)),
+      (Some(7L), None), (None, Some(8L)), (None, None), (Some(3L), Some(2L)))
+      .toDF("id1", "id2")
+    val want = Seq(Row(1L, 1L), Row(2L, 1L), Row(3L, 1L))
+    val driver = Dedup.nearDupClusters(pairs)
+    val stars = Dedup.starClusters(pairs)
+    assert(driver.collect().toSeq === want)
+    assert(stars.collect().toSeq === want)
+    assert(driver.schema === stars.schema)
+    // non-nullable ids keep a non-nullable `id` on both paths
+    val strict = Seq((4L, 3L), (3L, 9L)).toDF("id1", "id2")
+    assert(Dedup.nearDupClusters(strict).schema === Dedup.starClusters(strict).schema)
+    assert(!Dedup.nearDupClusters(strict).schema("id").nullable)
+  }
+
+  test("nearDupClusters under the cap: one job, then a local result") {
+    val pairs = spark.range(0, 200, 1, 1)
+      .select(col("id").as("id1"), (col("id") % 17).as("id2"))
+    var got: org.apache.spark.sql.DataFrame = null
+    assert(SparkTestSession.jobsOf { got = Dedup.nearDupClusters(pairs) } === 1)
+    assert(got.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    var rows: Array[Row] = null
+    assert(SparkTestSession.jobsOf { rows = got.collect() } === 0)
+    // i ~ i % 17: every id joins the component of its residue
+    assert(rows.toSeq === (0L until 200L).map(i => Row(i, i % 17)))
+  }
+
+  test("nearDupClusters past LocalMaxPairs pairs takes the star path") {
+    // a star of LocalMaxPairs + 1 edges round hub 0: one bounded collect
+    // sees the overflow, and contraction converges in its first round
+    val n = Dedup.LocalMaxPairs + 1L
+    val pairs = spark.range(1, n + 1).select(lit(0L).as("id1"), col("id").as("id2"))
+    val got = Dedup.nearDupClusters(pairs)
+    assert(!got.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    val summary = got.agg(count(lit(1)), max(col("keeper")), max(col("id"))).head()
+    assert(summary === Row(n + 1, 0L, n))
+  }
+
+  test("star contraction: reliable checkpoints match localCheckpoint") {
     import spark.implicits._
     // the fault-tolerant variant for long-running 100 TB contractions:
     // same algorithm, rounds truncated via durable checkpoint() files
     val chain = (100L until 163L).map(i => (i, i + 1)).toDF("id1", "id2")
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val durable = Dedup.nearDupClustersStars(chain, checkpointDir = Some(dir))
+    val durable = Dedup.starClusters(chain, checkpointDir = Some(dir))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(durable === (100L to 163L).map(_ -> 100L).toMap)
     // the rounds really went through the reliable checkpoint dir
@@ -679,8 +722,7 @@ class TextDedupSpec extends AnyFunSuite {
 
   test("nearDupClusters equals union-find on random graphs (seeded)") {
     import spark.implicits._
-    // kept small: every propagation round is a real shuffle job, so trial
-    // count x graph diameter bounds this test's wall time
+    // ClusterProperties covers larger graphs, string ids and both paths
     val rng = new scala.util.Random(7)
     for (trial <- 1 to 2) {
       val n = 16

@@ -17,6 +17,31 @@ object SparkTestSession {
     Session("local[4]", Some("/dev/shm/graft-spark"))
   }
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Jobs that `f` runs under its own job group, counted by a listener.
+    * A marker job drains the listener bus before the count is read. */
+  def jobsOf(f: => Unit): Int = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val group = Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        if (group == "counted-jobs") jobs.incrementAndGet()
+        if (group == "counted-jobs-drain") drained.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("counted-jobs", "counted-jobs")
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup("counted-jobs-drain", "counted-jobs-drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
 }
 
 class VectorSpec extends AnyFunSuite {
