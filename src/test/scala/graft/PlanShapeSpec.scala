@@ -296,8 +296,8 @@ class PlanShapeSpec extends AnyFunSuite {
   test("g5 link prediction: equi-join wedges + TakeOrdered exit, never a nested loop") {
     // the gate's result is eagerly realized (the cache-lifecycle fix
     // checkpoints the k rows before unpersisting e/adj/deg), so its
-    // own plan is a Scan of the realized rows — pin the LAZY scoring
-    // plan the operator wraps instead, on the same co-purchase edges
+    // own plan is a Scan of the realized rows — pin the executed plan of
+    // that localCheckpoint instead, on the same co-purchase edges
     import org.apache.spark.sql.functions.col
     val lo = graft.Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
@@ -306,9 +306,11 @@ class PlanShapeSpec extends AnyFunSuite {
       .filter(col("p1") < col("p2"))
       .select(col("p1"), col("p2"))
       .distinct()
-    val plan = graft.operators.LinkPredict
-      .commonNeighborsPlan(edges, "p1", "p2", k = 20)
-      .queryExecution.executedPlan.toString
+    val (_, ran) = Explain.executedPlans(spark)(
+      graft.operators.LinkPredict.commonNeighbors(edges, "p1", "p2", k = 20))
+    val checkpoints = ran.collect { case ("localCheckpoint", p) => p.toString }
+    assert(checkpoints.size === 1, s"g5 ran ${ran.map(_._1)}")
+    val plan = checkpoints.head
     assert(plan.contains("TakeOrderedAndProject"), s"g5 lost the heap exit:\n$plan")
     for (bad <- Seq("CartesianProduct", "BroadcastNestedLoopJoin"))
       assert(!plan.contains(bad), s"g5 grew a $bad:\n$plan")
