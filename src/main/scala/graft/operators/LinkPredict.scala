@@ -26,20 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object LinkPredict {
 
-  /** The LAZY scoring plan (no caching, no guard, no checkpoint) —
-    * the shape PlanShapeSpec pins (equi-join wedges + TakeOrdered
-    * exit); [[commonNeighbors]] wraps it with the persist / wedge-guard
-    * / eager-realize / unpersist lifecycle.
-    */
-  def commonNeighborsPlan(edges: DataFrame, aCol: String, bCol: String,
-                          k: Int = 20): DataFrame = {
-    val e = edges.select(col(aCol).as("a"), col(bCol).as("b"))
-    val adj = e.select(col("a").as("c"), col("b").as("n"))
-      .unionAll(e.select(col("b").as("c"), col("a").as("n")))
-    val deg = adj.groupBy(col("c")).agg(count(lit(1)).as("d"))
-    scoreWedges(e, adj, deg, k)
-  }
-
   /** Top-`k` non-adjacent pairs by common-neighbor count over an
     * undirected edge list (`aCol` < `bCol`, deduped). Output:
     * (a, b, cn, deg_a, deg_b, jac_ppm), ordered by cn desc then (a, b).
@@ -66,8 +52,9 @@ object LinkPredict {
     val deg = adj.groupBy(col("c")).agg(count(lit(1)).as("d"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // the guard aggregate also reads off the id range, so the dominant
-      // wedge aggregation keys on ONE packed long when the ids fit
+      // the guard aggregate also reads off the id range the pair key is
+      // built from (one packed long through the dominant wedge aggregation
+      // when the ids fit)
       val est = deg.agg(Pairs.volume(col("d")), Pairs.idRange(col("c")): _*).head()
       val wedgeVolume = est.getLong(0)
       require(wedgeVolume <= maxWedgeEstimate,
@@ -75,7 +62,7 @@ object LinkPredict {
           s"deg*(deg-1)/2 over centers) > maxWedgeEstimate=$maxWedgeEstimate; " +
           "cap hub degrees (commonNeighborsCapped) or sample centers, or " +
           "raise maxWedgeEstimate deliberately")
-      val packable = Pairs.fits(est, 1)
+      val key = Pairs.Key(est, 1, adj.schema("n").dataType)
       // pair-aggregation parallelism derived from the MEASURED wedge
       // volume (profiled at sf0.1: the wedge stage inherits the
       // adjacency exchange's AQE-coalesced partition count, so the
@@ -89,8 +76,7 @@ object LinkPredict {
       // realize the k-row result eagerly so the finally can release the
       // cached tables without a later action re-running the whole plan
       // uncached (the LabelProp/Occupancy cleanup pattern)
-      scoreWedges(e, adj, deg, k, packed = packable, aggParts = parts)
-        .localCheckpoint(true)
+      scoreWedges(e, adj, deg, k, key, parts).localCheckpoint(true)
     } finally { e.unpersist(); adj.unpersist(); deg.unpersist() }
   }
 
@@ -132,34 +118,23 @@ object LinkPredict {
       val cappedAdj = adj.join(okCenters, "c")
       // ONE pre-aggregate over the cached degree table reads off the
       // capped wedge volume (aggregate parallelism, the scoreWedges
-      // repartition-first treatment) and the id range (packed pair key)
+      // repartition-first treatment) and the id range (pair key)
       val pre = deg.agg(Pairs.volume(when(col("d") <= lit(maxDegree), col("d"))),
         Pairs.idRange(col("c")): _*).head()
-      val packable = Pairs.fits(pre, 1)
+      val key = Pairs.Key(pre, 1, adj.schema("n").dataType)
       val parts = Pairs.partitions(adj.sparkSession, pre.getLong(0), 1500000L)
-      val (pu, pv) = Pairs.unpack(col("pk"), adj.schema("n").dataType)
-      val wedges = Pairs.within(cappedAdj, Seq("c"), "n", ("ns", "u", "v"))
+      val (pu, pv) = key.ids(col("pk"))
       // candidate pool: top k*refineFactor NEW pairs by capped count,
       // realized eagerly (R rows) so everything downstream is
       // candidate-bounded; (ccn desc, pk) ordering == (ccn desc, u, v)
-      val gen = (if (packable)
-        wedges
-          .select(Pairs.pack(col("u"), col("v")).as("pk"))
-          .repartition(parts, col("pk"))
-          .groupBy(col("pk")).agg(count(lit(1)).as("ccn"))
-          .join(e.select(Pairs.pack(col("a"), col("b")).as("pk")),
-            Seq("pk"), "left_anti")
-          .orderBy(col("ccn").desc, col("pk").asc)
-          .limit(k * refineFactor)
-          .select(pu.as("u"), pv.as("v"))
-      else
-        wedges.select(col("u"), col("v"))
-          .repartition(parts, col("u"), col("v"))
-          .groupBy(col("u"), col("v")).agg(count(lit(1)).as("ccn"))
-          .join(e, col("u") === col("a") && col("v") === col("b"), "left_anti")
-          .orderBy(col("ccn").desc, col("u").asc, col("v").asc)
-          .limit(k * refineFactor)
-          .select(col("u"), col("v")))
+      val gen = Pairs.within(cappedAdj, Seq("c"), "n", ("ns", "u", "v"))
+        .select(key.of(col("u"), col("v")).as("pk"))
+        .repartition(parts, col("pk"))
+        .groupBy(col("pk")).agg(count(lit(1)).as("ccn"))
+        .join(e.select(key.of(col("a"), col("b")).as("pk")), Seq("pk"), "left_anti")
+        .orderBy(col("ccn").desc, col("pk").asc)
+        .limit(k * refineFactor)
+        .select(pu.as("u"), pv.as("v"))
         .localCheckpoint(true)
       // exact rescore: per candidate pair, count the centers adjacent
       // to BOTH endpoints over the FULL adjacency. Join volume is
@@ -184,16 +159,21 @@ object LinkPredict {
 
   /** Shared scoring tail: count co-neighbors per wedge pair, drop
     * existing edges, join TRUE degrees, integer Jaccard, top-k.
-    * With `packed` (caller proved the ids fit, [[Pairs.fits]]), the pair
-    * key through the dominant exchange is ONE packed long; the edge
-    * anti-join runs on the same key (the aggregate's partitioning is
-    * reused), and the pair unpacks only after the anti-join.
-    * With `aggParts` > 0, the RAW pairs repartition to that count
-    * before ONE aggregation pass: distinct pairs run ~0.7x of wedges,
-    * so the default partial-then-final plan pays a near-useless
-    * map-side hash (spilling, at the upstream stage's AQE-coalesced
-    * parallelism) to save ~30% of exchange rows — measured 2.4x slower
-    * than exchanging the raw pairs at volume-scaled parallelism.
+    * The pair travels through the dominant exchange as ONE `key` column
+    * ([[Pairs.Key]], a packed long when the ids fit); the edge anti-join
+    * runs on the same key (the aggregate's partitioning is reused), and
+    * the pair splits back into ids only after the anti-join.
+    * The RAW pairs repartition to `aggParts` before ONE aggregation pass:
+    * distinct pairs run ~0.7x of wedges, so the default
+    * partial-then-final plan pays a near-useless map-side hash (spilling,
+    * at the upstream stage's AQE-coalesced parallelism) to save ~30% of
+    * exchange rows — measured 2.4x slower than exchanging the raw pairs
+    * at volume-scaled parallelism.
+    *
+    * `adj` must hold every edge in both directions, so that each wedge
+    * through a center is generated and every pair endpoint has a degree
+    * row. Its one caller, [[commonNeighbors]], builds it as the union of
+    * both directions of `e`, so this holds by construction.
     *
     * The top-k on (cn desc, u, v) runs BEFORE the degree joins: the
     * ordering never reads degrees or Jaccard, and the inner joins drop
@@ -204,29 +184,18 @@ object LinkPredict {
     * orderBy restores the k-row total order the joins may permute.
     */
   private def scoreWedges(e: DataFrame, adj: DataFrame, deg: DataFrame,
-                          k: Int, packed: Boolean = false,
-                          aggParts: Int = 0): DataFrame = {
-    val wedges = Pairs.within(adj, Seq("c"), "n", ("ns", "u", "v"))
-    val cn =
-      if (packed) {
-        val (pu, pv) = Pairs.unpack(col("pk"), adj.schema("n").dataType)
-        val raw = wedges.select(Pairs.pack(col("u"), col("v")).as("pk"))
-        (if (aggParts > 0) raw.repartition(aggParts, col("pk")) else raw)
-          .groupBy(col("pk")).agg(count(lit(1)).as("cn"))
-          // wedge pairs that are already edges are triangles, not
-          // predictions — dropped on the packed key so the aggregate's
-          // pk partitioning carries straight through
-          .join(e.select(Pairs.pack(col("a"), col("b")).as("pk")),
-            Seq("pk"), "left_anti")
-          .select(pu.as("u"), pv.as("v"), col("cn"))
-      } else {
-        val raw = wedges.select(col("u"), col("v"))
-        (if (aggParts > 0) raw.repartition(aggParts, col("u"), col("v")) else raw)
-          .groupBy(col("u"), col("v")).agg(count(lit(1)).as("cn"))
-          // wedge pairs that are already edges are triangles, not predictions
-          .join(e, col("u") === col("a") && col("v") === col("b"), "left_anti")
-      }
-    cn.orderBy(col("cn").desc, col("u").asc, col("v").asc)
+                          k: Int, key: Pairs.Key, aggParts: Int): DataFrame = {
+    val (pu, pv) = key.ids(col("pk"))
+    Pairs.within(adj, Seq("c"), "n", ("ns", "u", "v"))
+      .select(key.of(col("u"), col("v")).as("pk"))
+      .repartition(aggParts, col("pk"))
+      .groupBy(col("pk")).agg(count(lit(1)).as("cn"))
+      // wedge pairs that are already edges are triangles, not
+      // predictions — dropped on the pair key so the aggregate's
+      // partitioning carries straight through
+      .join(e.select(key.of(col("a"), col("b")).as("pk")), Seq("pk"), "left_anti")
+      .select(pu.as("u"), pv.as("v"), col("cn"))
+      .orderBy(col("cn").desc, col("u").asc, col("v").asc)
       .limit(k)
       .join(deg.select(col("c").as("u"), col("d").as("deg_a")), "u")
       .join(deg.select(col("c").as("v"), col("d").as("deg_b")), "v")

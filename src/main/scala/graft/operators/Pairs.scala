@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types._
 
 /** Bucket pair generation: every unordered pair of distinct elements that
   * share a bucket, emitted once — the primitive under shingle posting
@@ -26,11 +26,15 @@ import org.apache.spark.sql.types.DataType
   * aggregate, so callers count first and refuse loudly past a cap (which
   * also bounds the largest bucket at ~sqrt(2 * cap) elements).
   *
-  * Packed keys ([[fits]], [[pack]], [[unpack]]): ids proven to lie in
-  * [0, 2^31) travel as ONE long (u << 32 | v) ordered like (u, v) — half
-  * the key bytes through the pair exchange and a primitive-long hash in
-  * the aggregate (guide §2.3 "narrower types"). Unproven ranges keep the
-  * two-column key; results are the same either way.
+  * Pair keys ([[Key]]): a caller keys its pairs on ONE column, whose
+  * shape this object picks from the id range the caller's guard
+  * aggregate already reads ([[idRange]]). Integral ids proven to lie in
+  * [0, 2^31) travel as ONE long (u << 32 | v) — half the key bytes
+  * through the pair exchange and a primitive-long hash in the aggregate
+  * (guide §2.3 "narrower types"). Any other ids (negative, past 2^31,
+  * strings) travel as struct(u, v). Both shapes order like (u, v), so a
+  * caller's repartition, aggregate, edge anti-join and (x desc, key)
+  * top-k are written once, and results are the same either way.
   */
 object Pairs {
 
@@ -97,23 +101,65 @@ object Pairs {
     math.max(spark.sparkContext.defaultParallelism,
       math.min(4096L, pairs / perTask + 1L).toInt)
 
-  /** The id-range aggregates [[fits]] reads: min and max of `id` as longs. */
-  def idRange(id: Column): Seq[Column] = Seq(min(id.cast("long")), max(id.cast("long")))
+  /** The id-range aggregates a [[Key]] is built from: min and max of `id`
+    * as longs. Ids that do not cast (strings) give nulls, not an error.
+    */
+  def idRange(id: Column): Seq[Column] =
+    Seq(min(id.try_cast("long")), max(id.try_cast("long")))
+
+  /** The key of a pair of ids (u, v): ONE column that orders like (u, v),
+    * so `repartition(key)`, `groupBy(key)`, a `left_anti` join on the key
+    * and `orderBy(x desc, key)` mean what they would on the two columns.
+    * Build it with [[Key.apply]].
+    *
+    * The packed long ([[pack]]) is used when the ids are integral and
+    * their range [[fits]]; otherwise the key is `struct(u AS u, v AS v)`.
+    * Struct equality matches null fields to each other where the
+    * two-column `u = a AND v = b` never matches a null, but
+    * [[within]] drops null elements (`collect_list`), so no wedge id is
+    * null and an anti-join on either key shape drops the same rows as the
+    * two-column join.
+    */
+  final class Key private (packed: Boolean, idType: DataType) {
+
+    /** The key of the pair (u, v). */
+    def of(u: Column, v: Column): Column =
+      if (packed) pack(u, v) else struct(u.as("u"), v.as("v"))
+
+    /** The (u, v) ids of the key `k`, as the id type. */
+    def ids(k: Column): (Column, Column) =
+      if (packed) unpack(k, idType) else (k("u").cast(idType), k("v").cast(idType))
+  }
+
+  object Key {
+
+    /** The key for ids of `idType` whose [[idRange]] sits at `range(at)`,
+      * `range(at + 1)`.
+      */
+    def apply(range: Row, at: Int, idType: DataType): Key = {
+      val integral = idType match {
+        case ByteType | ShortType | IntegerType | LongType => true
+        case _ => false
+      }
+      new Key(integral && fits(range, at), idType)
+    }
+  }
 
   /** Whether the ids whose [[idRange]] sits at `row(at)`, `row(at + 1)`
     * lie in [0, 2^31), the precondition of [[pack]]. An empty or
     * non-castable range (nulls) does not fit.
     */
-  def fits(row: Row, at: Int): Boolean =
+  private[graft] def fits(row: Row, at: Int): Boolean =
     !row.isNullAt(at) && !row.isNullAt(at + 1) &&
       row.getLong(at) >= 0L && row.getLong(at + 1) < (1L << 31)
 
   /** One long for the pair (u, v) of ids that [[fits]]: u << 32 | v. For
     * such ids the packed order is the (u, v) order.
     */
-  def pack(u: Column, v: Column): Column = shiftleft(u.cast("long"), 32) + v.cast("long")
+  private[graft] def pack(u: Column, v: Column): Column =
+    shiftleft(u.cast("long"), 32) + v.cast("long")
 
   /** The (u, v) ids of a [[pack]]ed key, cast back to `idType`. */
-  def unpack(pk: Column, idType: DataType): (Column, Column) =
+  private[graft] def unpack(pk: Column, idType: DataType): (Column, Column) =
     (shiftrightunsigned(pk, 32).cast(idType), pk.bitwiseAND(lit(0xFFFFFFFFL)).cast(idType))
 }

@@ -761,10 +761,10 @@ object Relational extends QueryPack {
         // ONE pre-aggregate over the cached edges reads off the FULL
         // wedge volume (this gate runs the unguarded exact baseline, so
         // the aggregate parallelism is sized to the exact arm) and the id
-        // range for the packed pair key
+        // range for the pair key
         val pre = adj.groupBy(col("c")).agg(count(lit(1)).as("dd"))
           .agg(Pairs.volume(col("dd")), Pairs.idRange(col("c")): _*).head()
-        val packable = Pairs.fits(pre, 1)
+        val key = Pairs.Key(pre, 1, e.schema("a").dataType)
         val parts = Pairs.partitions(s, pre.getLong(0), 900000L)
         // wedge pairs per center with the center's degree (its bucket
         // size: neighbors are distinct) carried along — no deg join, no
@@ -779,26 +779,13 @@ object Relational extends QueryPack {
         // raw-wedge repartition before the pair aggregate (the
         // LinkPredict.scoreWedges lesson: distinct pairs ~0.7x wedges,
         // so map-side combining spills for nothing); the anti-join reuses
-        // the aggregate's partitioning. The pairs stay PACKED through the
-        // top-k arms and the semi-join — (x desc, pk) == (x desc, u, v)
-        // for packed ids, and the output is counts only.
-        val scored =
-          (if (packable)
-            wedges.select(Pairs.pack(col("u"), col("v")).as("pkey"), col("dg"))
-              .repartition(parts, col("pkey"))
-              .groupBy(col("pkey")).agg(sums.head, sums.tail: _*)
-              .join(e.select(Pairs.pack(col("a"), col("b")).as("pkey")),
-                Seq("pkey"), "left_anti")
-          else
-            // fallback key is a STRUCT (ids unproven packable — maybe
-            // not castable at all): struct ordering is lexicographic by
-            // field, so (x desc, pkey) == (x desc, u, v) here too
-            wedges.repartition(parts, col("u"), col("v"))
-              .groupBy(col("u"), col("v")).agg(sums.head, sums.tail: _*)
-              .join(e, col("u") === col("a") && col("v") === col("b"),
-                "left_anti")
-              .select(struct(col("u"), col("v")).as("pkey"), col("ccn100"),
-                col("ccn140"), col("ccn180"), col("cn")))
+        // the aggregate's partitioning. The pairs stay KEYED through the
+        // top-k arms and the semi-join — (x desc, pkey) == (x desc, u, v)
+        // (Pairs.Key), and the output is counts only.
+        val scored = wedges.select(key.of(col("u"), col("v")).as("pkey"), col("dg"))
+          .repartition(parts, col("pkey"))
+          .groupBy(col("pkey")).agg(sums.head, sums.tail: _*)
+          .join(e.select(key.of(col("a"), col("b")).as("pkey")), Seq("pkey"), "left_anti")
           .persist()
         try {
           val exact20 = scored.orderBy(col("cn").desc, col("pkey"))
@@ -2345,13 +2332,13 @@ object Relational extends QueryPack {
         val adj = e.select(col("a").as("c"), col("b").as("n"))
           .unionAll(e.select(col("b").as("c"), col("a").as("n")))
         // ONE pre-aggregate over the cached edges reads off the capped
-        // wedge volume (aggregate parallelism) and the id range (packed key)
+        // wedge volume (aggregate parallelism) and the id range (pair key)
         val pre = adj.groupBy(col("c")).agg(count(lit(1)).as("dd"))
           .agg(Pairs.volume(when(col("dd") <= 180L, col("dd"))),
             Pairs.idRange(col("c")): _*).head()
-        val packable = Pairs.fits(pre, 1)
+        val key = Pairs.Key(pre, 1, e.schema("a").dataType)
         val parts = Pairs.partitions(s, pre.getLong(0), 900000L)
-        val (pu, pv) = Pairs.unpack(col("pkey"), e.schema("a").dataType)
+        val (pu, pv) = key.ids(col("pkey"))
         // wedge pairs per center with the degree carried along (the g7b
         // shape); the Dmax gate on it pushes below the generation, so no
         // hub wedge exists and volume stays n*Dmax*(Dmax-1)/2
@@ -2362,41 +2349,27 @@ object Relational extends QueryPack {
           sum(when(col("dg") <= 100L, 1L).otherwise(0L)).as("ccn100"),
           sum(when(col("dg") <= 140L, 1L).otherwise(0L)).as("ccn140"),
           count(lit(1)).as("ccn180"))
-        // raw-wedge repartition before the aggregate (the g7b note)
-        val scored =
-          if (packable)
-            wedges.select(Pairs.pack(col("u"), col("v")).as("pkey"), col("dg"))
-              .repartition(parts, col("pkey"))
-              .groupBy(col("pkey")).agg(sums.head, sums.tail: _*)
-              .join(e.select(Pairs.pack(col("a"), col("b")).as("pkey")),
-                Seq("pkey"), "left_anti")
-          else
-            wedges.repartition(parts, col("u"), col("v"))
-              .groupBy(col("u"), col("v")).agg(sums.head, sums.tail: _*)
-              .join(e, col("u") === col("a") && col("v") === col("b"),
-                "left_anti")
+        // raw-wedge repartition before the aggregate (the g7b note).
         // (r19 note: a single-pass 3 x topk_by(200) ungrouped aggregate
         // was tried in place of persist + 3 TakeOrdered and measured 2x
         // SLOWER — 63.9 s vs 32.6 s at sf0.1: the TypedImperativeAggregate
         // heap runs interpreted per row over the ~40M scored pairs while
         // TakeOrderedAndProject stays inside whole-stage codegen. The
         // persist shape stands.)
-        val scoredP = scored
+        val scored = wedges.select(key.of(col("u"), col("v")).as("pkey"), col("dg"))
+          .repartition(parts, col("pkey"))
+          .groupBy(col("pkey")).agg(sums.head, sums.tail: _*)
+          .join(e.select(key.of(col("a"), col("b")).as("pkey")), Seq("pkey"), "left_anti")
           .persist() // ONE wedge pass feeds all three cap arms (the gate's shape)
         try {
           Seq("ccn100", "ccn140", "ccn180").map { ccn =>
-            val top = scoredP.filter(col(ccn) > 0L)
-            // (ccn desc, pkey) == (ccn desc, u, v); unpack after the limit
-            if (packable)
-              top.orderBy(col(ccn).desc, col("pkey")).limit(200)
-                .select(lit(ccn.drop(3).toLong).as("max_degree"),
-                  pu.as("u"), pv.as("v"), col(ccn).as("ccn"))
-            else
-              top.orderBy(col(ccn).desc, col("u"), col("v")).limit(200)
-                .select(lit(ccn.drop(3).toLong).as("max_degree"),
-                  col("u"), col("v"), col(ccn).as("ccn"))
+            // (ccn desc, pkey) == (ccn desc, u, v); split after the limit
+            scored.filter(col(ccn) > 0L)
+              .orderBy(col(ccn).desc, col("pkey")).limit(200)
+              .select(lit(ccn.drop(3).toLong).as("max_degree"),
+                pu.as("u"), pv.as("v"), col(ccn).as("ccn"))
           }.reduce(_ unionAll _).localCheckpoint(true)
-        } finally scoredP.unpersist()
+        } finally scored.unpersist()
       } finally e.unpersist()
     },
 

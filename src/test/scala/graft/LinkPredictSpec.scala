@@ -86,6 +86,25 @@ class LinkPredictSpec extends AnyFunSuite {
     assert(asMap((2L, 4L)) === ((3L, 3L, 3L, 1000000L)))
   }
 
+  test("commonNeighborsCapped: ids past 2^31 (struct pair key) give the shifted packed result") {
+    import spark.implicits._
+    // the sweep test's random graph: ties in the capped count make the
+    // (ccn desc, key) candidate cut matter, and a shift keeps (u, v) order
+    val rnd = new scala.util.Random(7)
+    val base = (1 to 300).map { _ =>
+      val a = rnd.nextInt(40).toLong; val b = rnd.nextInt(40).toLong
+      (math.min(a, b), math.max(a, b))
+    }.filter(p => p._1 != p._2).distinct
+    val off = 1L << 32
+    def run(edges: Seq[(Long, Long)]) = LinkPredict.commonNeighborsCapped(
+      edges.toDF("a", "b"), "a", "b", maxDegree = 8L, k = 10, refineFactor = 3)
+      .collect().map(r => (0 until 6).map(r.getLong)).toSeq
+    val small = run(base)
+    val big = run(base.map { case (a, b) => (a + off, b + off) })
+    assert(small.nonEmpty)
+    assert(big === small.map(r => Seq(r(0) + off, r(1) + off) ++ r.drop(2)))
+  }
+
   test("commonNeighborsCapped: the g7b one-pass sweep equals per-D operator runs") {
     import spark.implicits._
     // pseudo-random sparse graph, no self-loops, a < b

@@ -13,8 +13,9 @@ import graft.operators.Pairs
   * self-join with `a.elem < b.elem`, for long ids, struct elements (the
   * hamming (id, sig) shape) and an ordering column (the triangle
   * (dv, v) shape); [[Pairs.volume]] counts exactly the rows emitted; and
-  * the packed pair key round-trips the ids [[Pairs.fits]] admits. Each
-  * case runs Spark jobs, so the case count is kept small.
+  * the packed pair key round-trips the ids [[Pairs.fits]] admits; and a
+  * [[Pairs.Key]] of either shape round-trips its ids and orders like
+  * (u, v). Each case runs Spark jobs, so the case count is kept small.
   */
 object PairsSpec extends Properties("graft.pairs") {
 
@@ -107,5 +108,32 @@ object PairsSpec extends Properties("graft.pairs") {
     Pairs.fits(Row(0L, (1L << 31) - 1), 0) && !Pairs.fits(Row(-1L, 5L), 0) &&
       !Pairs.fits(Row(0L, 1L << 31), 0) && !Pairs.fits(Row(null, null), 0) &&
       Pairs.fits(Row("x", 3L, 4L), 1)
+  }
+
+  property("Key.of/Key.ids round-trip, orderBy(key) == orderBy(u, v), both shapes (seeded)") = {
+    import spark.implicits._
+    // three seeded pair lists per id domain: ids in [0, 2^31) (packed key);
+    // shifted below 0, shifted past 2^31, and decimal strings, whose order
+    // is not the numeric one (struct key)
+    val shifts = Seq(0L, -(1L << 31), 1L << 31)
+    val rnd = new scala.util.Random(20231108L)
+    def id(): Long = if (rnd.nextInt(4) == 0) rnd.nextInt(3).toLong else rnd.nextInt(Int.MaxValue).toLong
+    Prop.all((0 until 12).map { c =>
+      val domain = c % 4
+      val pairs = Seq.fill(1 + rnd.nextInt(10))((id(), id()))
+      val df =
+        if (domain == 3) pairs.map { case (u, v) => (u.toString, v.toString) }.toDF("u", "v")
+        else pairs.map { case (u, v) => (u + shifts(domain), v + shifts(domain)) }.toDF("u", "v")
+      val ids = df.select(explode(array(col("u"), col("v"))).as("id"))
+      val range = ids.agg(Pairs.idRange(col("id")).head, Pairs.idRange(col("id")).tail: _*).head()
+      val key = Pairs.Key(range, 0, df.schema("u").dataType)
+      val (ku, kv) = key.ids(col("k"))
+      val keyed = df.select(key.of(col("u"), col("v")).as("k"))
+      val back = keyed.orderBy(col("k")).select(ku.as("u"), kv.as("v"))
+      val packed = keyed.schema("k").dataType == org.apache.spark.sql.types.LongType
+      Prop(packed == (domain == 0) && back.schema.map(_.dataType) == df.schema.map(_.dataType) &&
+        back.collect().toSeq == df.orderBy(col("u"), col("v")).collect().toSeq) :|
+        s"domain $domain, pairs $pairs"
+    }: _*)
   }
 }
