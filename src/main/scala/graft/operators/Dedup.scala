@@ -481,19 +481,10 @@ object Dedup {
                              minJaccard: Double = 0.5,
                              maxPairEstimate: Long = 50000000L): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val rows = numHashes / bands
     val sh = shingled(docs, idCol, textCol, n).cache()
     try {
       val sig = sh.withColumn("sig", minhash_signature(col("shingles"), numHashes))
-      // one row per (doc, band); bucket key = hash of the band's slice
-      // (static band count -> plain column expressions, no lambda needed)
-      val bandStructs = (0 until bands).map { b =>
-        struct(lit(b).as("band"), hash(slice(col("sig"), b * rows + 1, rows)).as("bucket"))
-      }
-      val banded = sig
-        .select(col("id"), explode(array(bandStructs: _*)).as("bb"))
-        .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-        .localCheckpoint(false)
+      val banded = lshBanded(sig, numHashes, bands).localCheckpoint(false)
       Pairs.guard(banded.groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("df")),
         "df", maxPairEstimate) { pairVolume =>
         s"minhashLshNearDupPairs would materialize ~$pairVolume candidate " +

@@ -364,7 +364,7 @@ object Knn {
     *
     * Why clustering first: all-pairs is n^2; with k balanced clusters
     * the pair space shrinks k-fold (sum of n_i^2 ~ n^2/k), and the
-    * comparison join's shuffle key is the cluster id, so each cluster's
+    * pair generation's shuffle key is the cluster id, so each cluster's
     * pairs co-locate on one reducer — no global pair space ever exists.
     * The trade is the same as SemDeDup's: a cross-cluster near-dup pair
     * is not examined (by design — cluster-boundary pairs are the
@@ -379,8 +379,8 @@ object Knn {
     * Clustering reuses [[Ivf.build]]'s deterministic k-means (seeded
     * sample, fixed iterations) so the oracle replays the assignment
     * exactly (IvfSql); the pair volume is counted per-cluster BEFORE the
-    * join and refused past `pairCap` naming the knob — the d2 guard
-    * posture.
+    * pairs are generated ([[Pairs.within]], one row per unordered pair)
+    * and refused past `pairCap` naming the knob — the d2 guard posture.
     */
   def semanticDedup(corpus: DataFrame, idCol: String, embCol: String,
                     minSim: Double, nlist: Int, iters: Int = 5,
@@ -390,12 +390,12 @@ object Knn {
       s"semanticDedup: intra-cluster pair volume $pairs exceeds cap $pairCap" +
         " — raise nlist (smaller clusters) or pairCap deliberately"
     }
-    val l = a.select(col("bucket"), col("id").as("id1"), col("emb").as("emb1"))
-    val r = a.select(col("bucket"), col("id").as("id2"), col("emb").as("emb2"))
-    val dropped = l.join(r, Seq("bucket"))
-      .filter(col("id1") < col("id2"))
-      .filter(lit(1.0) - cosine_distance(col("emb1"), col("emb2")) > minSim)
-      .select(col("id2").as("__dropped_id"))
+    // (id, emb) elements: ids are unique, so the struct order IS the id
+    // order and each within-cluster pair comes once, lower id first
+    val dropped = Pairs.within(a.select(col("bucket"), struct(col("id"), col("emb")).as("e")),
+        Seq("bucket"), "e", ("es", "e1", "e2"))
+      .filter(lit(1.0) - cosine_distance(col("e1.emb"), col("e2.emb")) > minSim)
+      .select(col("e2.id").as("__dropped_id"))
       .distinct()
     corpus.join(dropped, corpus(idCol) === dropped("__dropped_id"), "left_anti")
   }

@@ -83,19 +83,24 @@ object BmpFixture {
     s"$m:$l"
   }
 
-  /** The blob table, served from the materialized sidecar (built on
-    * first use per dataset, invalidated when the source fingerprint
-    * changes). The cache dir is keyed by a hash of the CANONICAL dataset
-    * path — two datasets whose directories share a basename get separate
-    * sidecars under the shared /dev/shm root.
+  /** The sidecar directory of dataset `d`, under the /dev/shm root the
+    * other gate scratch paths use. It is keyed by a hash of the CANONICAL
+    * dataset path — two datasets whose directories share a basename get
+    * separate sidecars.
     */
-  def blobs(s: SparkSession, d: String): DataFrame = {
-    val base = sys.env.getOrElse("GRAFT_FIXTURE_DIR", "/dev/shm")
+  private[graft] def sidecarDir(d: String): java.io.File = {
     val canon = new java.io.File(d).getCanonicalPath
     val pathKey = java.security.MessageDigest.getInstance("MD5")
       .digest(canon.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-    val dir = new java.io.File(base,
-      s"graft_bmp_${new java.io.File(d).getName}_$pathKey")
+    new java.io.File("/dev/shm", s"graft_bmp_${new java.io.File(d).getName}_$pathKey")
+  }
+
+  /** The blob table, served from the materialized sidecar
+    * ([[sidecarDir]]: built on first use per dataset, invalidated when the
+    * source fingerprint changes).
+    */
+  def blobs(s: SparkSession, d: String): DataFrame = {
+    val dir = sidecarDir(d)
     val success = new java.io.File(dir, "_SUCCESS")
     val fpFile = new java.io.File(dir, "_SRC_FP")
     val src = new java.io.File(d, "documents.parquet")

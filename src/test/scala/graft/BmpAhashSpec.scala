@@ -74,13 +74,8 @@ class BmpAhashSpec extends AnyFunSuite {
     val sidecar = graft.sources.BmpFixture.blobs(spark, d)
       .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
     assert(sidecar === inline)
-    // second call reuses the materialized copy (no rewrite: _SUCCESS mtime
-    // stable); dir name mirrors BmpFixture's basename + canonical-path-hash key
-    val canon = new java.io.File(d).getCanonicalPath
-    val pathKey = java.security.MessageDigest.getInstance("MD5")
-      .digest(canon.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-    val marker = new java.io.File(
-      s"/dev/shm/graft_bmp_${new java.io.File(d).getName}_$pathKey", "_SUCCESS")
+    // second call reuses the materialized copy (no rewrite: _SUCCESS mtime stable)
+    val marker = new java.io.File(graft.sources.BmpFixture.sidecarDir(d), "_SUCCESS")
     assert(marker.isFile)
     val m0 = marker.lastModified
     graft.sources.BmpFixture.blobs(spark, d).count()
