@@ -26,7 +26,7 @@ class LinkPredictSpec extends AnyFunSuite {
   test("commonNeighbors: packed and unpacked pair keys agree (ids past 2^31 take the fallback)") {
     import spark.implicits._
     // same diamond twice: small ids exercise the packed (u << 32 | v)
-    // aggregation path, the +2^32 shift forces the two-column fallback —
+    // pair key, the +2^32 shift forces the struct(u, v) key —
     // results must be the shifted image of each other
     val base = Seq((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L))
     val off = 1L << 32

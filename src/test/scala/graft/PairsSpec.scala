@@ -13,7 +13,7 @@ import graft.operators.Pairs
   * self-join with `a.elem < b.elem`, for long ids, struct elements (the
   * hamming (id, sig) shape) and an ordering column (the triangle
   * (dv, v) shape); [[Pairs.volume]] counts exactly the rows emitted; and
-  * the packed pair key round-trips the ids [[Pairs.fits]] admits; and a
+  * the packed pair key round-trips the ids [[Pairs.fits]] admits. A
   * [[Pairs.Key]] of either shape round-trips its ids and orders like
   * (u, v). Each case runs Spark jobs, so the case count is kept small.
   */
