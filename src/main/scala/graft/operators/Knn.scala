@@ -381,11 +381,15 @@ object Knn {
     * exactly (IvfSql); the pair volume is counted per-cluster BEFORE the
     * pairs are generated ([[Pairs.within]], one row per unordered pair)
     * and refused past `pairCap` naming the knob — the d2 guard posture.
+    * The (id, emb, bucket) assignment is materialized ONCE via a lazy
+    * localCheckpoint (the [[lshCandidatePairs]] banding lifecycle): the
+    * nearest-centroid pass runs over every row once, and both the guard
+    * aggregate and the pair generation read it.
     */
   def semanticDedup(corpus: DataFrame, idCol: String, embCol: String,
                     minSim: Double, nlist: Int, iters: Int = 5,
                     pairCap: Long = 50000000L): DataFrame = {
-    val a = Ivf.build(corpus, idCol, embCol, nlist, iters).assigned
+    val a = Ivf.build(corpus, idCol, embCol, nlist, iters).assigned.localCheckpoint(false)
     Pairs.guard(a.groupBy(col("bucket")).agg(count(lit(1)).as("n")), "n", pairCap) { pairs =>
       s"semanticDedup: intra-cluster pair volume $pairs exceeds cap $pairCap" +
         " — raise nlist (smaller clusters) or pairCap deliberately"

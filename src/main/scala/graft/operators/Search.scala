@@ -4,10 +4,11 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.GraftColumnBridge.{cachedRelation, dataFrame, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Ascending, RowOrdering, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Ascending, AttributeReference, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 import graft.functions.GraftFunctions._
 import graft.functions.Geo
@@ -158,23 +159,29 @@ object Search {
     * ~10 ms of Catalyst passes plus ~4 us a row, the distributed path
     * 70-130 ms at any of these sizes, so they cross at 29-31 MB of cache
     * (64- and 256-dim rows). The cap sits at about half the crossover,
-    * which also bounds the copy's share of the driver heap. */
+    * which also bounds the copy's share of the driver heap. Those figures
+    * predate the narrower page of [[localPage]]; the crossover has not been
+    * measured again since. */
   val LocalMaxBytes: Long = 16L << 20
 
-  /** Rows of each small cached corpus, keyed weakly on the cache entry's
-    * buffers: `unpersist` drops the entry, so a later request over the
-    * same Dataset goes back to the distributed plan and the copy becomes
-    * garbage with the buffers. */
-  private val driverCopies = new java.util.WeakHashMap[AnyRef, Seq[InternalRow]]()
+  /** The numbered rows of each small corpus, keyed weakly on what owns
+    * them: a cache entry's buffers (`unpersist` drops the entry, so a later
+    * request over the same Dataset goes back to the distributed plan and
+    * the copy becomes garbage with the buffers) or, for a `LocalRelation`
+    * corpus, its Dataset's QueryExecution. Both keys compare by identity. */
+  private val driverCopies = new java.util.WeakHashMap[AnyRef, IndexedSeq[InternalRow]]()
 
   /** The corpus as a `LocalRelation` when requests over it take the driver
-    * path: `layers` itself when it is one, else a copy of its cache entry
-    * when that is fully materialized and under [[LocalMaxBytes]],
-    * collected on the first call for that entry (one job). */
-  private def driverCopy(layers: DataFrame): Option[LocalRelation] =
-    layers.queryExecution.analyzed match {
-      case local: LocalRelation => Some(local)
-      case analyzed =>
+    * path: the rows of `layers` itself when it is one, else of its cache
+    * entry when that is fully materialized and under [[LocalMaxBytes]]
+    * (collected with one job). The rows are copied once per corpus, each
+    * with its ordinal appended as a last, non-null int column, so a page
+    * can rank `(ordinal, id, dist)` alone and fetch its text by ordinal. */
+  private def driverCopy(layers: DataFrame): Option[LocalRelation] = {
+    val analyzed = layers.queryExecution.analyzed
+    val source: Option[(AnyRef, () => Seq[InternalRow])] = analyzed match {
+      case local: LocalRelation => Some((layers.queryExecution, () => local.data))
+      case _ =>
         cachedRelation(layers).flatMap { cached =>
           val entry = cached.cacheBuilder
           // under the entry's lock, so an unpersist cannot clear the
@@ -185,54 +192,63 @@ object Search {
               Some(entry.cachedColumnBuffers)
             else None
           }
-          buffers.map { key =>
-            val rows = driverCopies.synchronized {
-              Option(driverCopies.get(key)).getOrElse {
-                val collected = dataFrame(layers.sparkSession, cached)
-                  .queryExecution.executedPlan.executeCollect().toSeq
-                driverCopies.put(key, collected)
-                collected
-              }
-            }
-            LocalRelation(analyzed.output, rows)
-          }
+          buffers.map(key => (key, () =>
+            dataFrame(layers.sparkSession, cached).queryExecution.executedPlan.executeCollect().toSeq))
         }
     }
+    source.map { case (key, rows) =>
+      val output = analyzed.output :+ AttributeReference("__ordinal", IntegerType, nullable = false)()
+      val numbered = driverCopies.synchronized {
+        Option(driverCopies.get(key)).getOrElse {
+          val withOrdinal = UnsafeProjection.create(output, output)
+          val copy = rows().iterator.zipWithIndex.map { case (r, i) =>
+            withOrdinal(new JoinedRow(r, InternalRow(i))).copy(): InternalRow
+          }.toIndexedSeq
+          driverCopies.put(key, copy)
+          copy
+        }
+      }
+      LocalRelation(output, numbered)
+    }
+  }
 
   /** Collect `layers`' driver copy now, so the first request does not pay
     * for it; true when requests over `layers` take the driver path. */
   def collectDriverCopy(layers: DataFrame): Boolean = driverCopy(layers).isDefined
 
   /** One page from a driver copy: the request's filters and distance as a
-    * Filter + Project over the copy, folded into a `LocalRelation` of
-    * candidates by Spark's `ConvertToLocalRelation` (no job runs), ordered
-    * by Spark's (dist, id) ordering and sliced to [skip, skip + limit).
-    * The plan is analysed over a row-less twin of the copy and the rows go
-    * in after: every analyzer and optimizer pass over a `LocalRelation`
-    * walks its rows, which made those passes, not the request's own
-    * evaluation, the cost of a request. */
+    * Filter + Project of `(ordinal, id, dist)` over the copy, folded into a
+    * `LocalRelation` of candidates by Spark's `ConvertToLocalRelation` (no
+    * job runs), ordered by Spark's (dist, id) ordering and sliced to
+    * [skip, skip + limit); only the page's rows have their text fields
+    * projected, fetched by ordinal. The plan is analysed over a row-less
+    * twin of the copy and the rows go in after: every analyzer and
+    * optimizer pass over a `LocalRelation` walks its rows, which made those
+    * passes, not the request's own evaluation, the cost of a request. */
   private def localPage(spark: SparkSession, corpus: LocalRelation, filters: Seq[Column],
                         dist: Column, req: SearchRequest): LocalRelation = {
     val shape = LocalRelation(corpus.output)
     val filtered = filters.map(expression(spark, _)).reduceOption(And(_, _))
       .fold[LogicalPlan](shape)(Filter(_, shape))
-    val ranked = Project(
-      TextFields.map(UnresolvedAttribute.quoted) :+ Alias(expression(spark, dist), "dist")(), filtered)
-    val bound = dataFrame(spark, ranked).queryExecution.analyzed
+    // the text fields are in the analysed list only to resolve them
+    val Project(list, child) = dataFrame(spark, Project(
+      TextFields.map(UnresolvedAttribute.quoted) :+ corpus.output.last :+
+        Alias(expression(spark, dist), "dist")(), filtered)).queryExecution.analyzed: @unchecked
+    val ranked = Project(Seq(list(TextFields.size), list.head, list.last), child)
       .transformUp { case _: LocalRelation => corpus }
     // the rule folds one operator a pass: the Filter, then the Project
-    val (out, rows) = ConvertToLocalRelation(ConvertToLocalRelation(bound)) match {
+    val (out, rows) = ConvertToLocalRelation(ConvertToLocalRelation(ranked)) match {
       case candidates: LocalRelation => (candidates.output, candidates.data.toArray)
       case unfolded => // an expression the rule cannot evaluate: run it as a query
         val exec = dataFrame(spark, unfolded).queryExecution.executedPlan
         (exec.output, exec.executeCollect())
     }
     java.util.Arrays.sort(rows, RowOrdering.create(
-      Seq(SortOrder(out.last, Ascending), SortOrder(out.head, Ascending)), out))
-    val text = out.take(TextFields.size)
-    val toText = UnsafeProjection.create(text, out)
+      Seq(SortOrder(out(2), Ascending), SortOrder(out(1), Ascending)), out))
+    val text = list.take(TextFields.size).map(_.toAttribute)
+    val toText = UnsafeProjection.create(text, corpus.output)
     val page = rows.slice(req.skip, math.min(rows.length.toLong, req.skip.toLong + req.limit).toInt)
-    LocalRelation(text, page.map(toText(_).copy()).toSeq)
+    LocalRelation(text, page.map(r => toText(corpus.data(r.getInt(0))).copy()).toSeq)
   }
 
   /** Deep-skip pagination: a range-partitioned global sort plus

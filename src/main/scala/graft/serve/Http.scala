@@ -10,8 +10,22 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 /** The request path `/search` and `/mcp` share: server start, method
   * check, body cap, reply. Each endpoint supplies only its path, its
   * error envelope and its handler.
+  *
+  * The accepted sockets run with TCP_NODELAY. The JDK server sends a
+  * reply's headers as one TCP segment and its body as a second small
+  * write; with Nagle's algorithm on, that write waits for the client to
+  * ACK the headers, and clients delay that ACK (~40 ms on Linux), so every
+  * kept-alive reply stalled for longer than the request's own work.
   */
 object Http {
+
+  // The JDK server reads this once, in `sun.net.httpserver.ServerConfig`'s
+  // static initializer, at the first `HttpServer.create` in the JVM. It is
+  // JVM-wide: set here, before any server exists, it covers every launcher
+  // and the test JVM alike. Nothing else may create a
+  // `com.sun.net.httpserver.HttpServer` before this object is initialized
+  // (no suite or main does; Spark's UI is off and runs on Jetty anyway).
+  System.setProperty("sun.net.httpserver.nodelay", "true")
 
   /** Handler threads per server; requests past this many wait in the
     * server's queue. */

@@ -42,6 +42,18 @@ class BenchSpec extends AnyFunSuite with Matchers {
     Bench.rerunOrder(names, meas, Map.empty) shouldBe Seq("b_new_noclean")
   }
 
+  test("the 3x tier goes round-robin: each suspect once per sweep, MaxSlowTries sweeps") {
+    // the six sf0.1 suspects of a uniformly slow host: the first sweep
+    // re-measures every one of them before any gets a second try
+    val slow = Seq("d9", "g5", "g7", "g7b", "g7bx", "g7x")
+    Bench.sweepOrder(slow).take(slow.size).toSeq shouldBe slow
+    val order = Bench.sweepOrder(Seq("g5", "g7bx")).toSeq
+    order.take(4) shouldBe Seq("g5", "g7bx", "g5", "g7bx")
+    order.count(_ == "g5") shouldBe Bench.MaxSlowTries
+    order.count(_ == "g7bx") shouldBe Bench.MaxSlowTries
+    Bench.sweepOrder(Nil).isEmpty shouldBe true
+  }
+
   test("the 3x trigger carries the 50 ms jitter slack") {
     val names = Seq("q")
     val base = Map("q" -> 0.02)

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.scalacheck.Prop.forAllNoShrink
@@ -17,7 +18,8 @@ import graft.operators.Search.{Point, SearchRequest}
   * (NaN distances), and ids outside the BMP, where UTF-8 byte order and
   * `String.compareTo` disagree; requests cover empty and `""`-only type
   * filters, EPSG:3857 points, shallow and deep skips, and limits 1-10.
-  * Each case writes a corpus of ~1,000 rows, so few cases run.
+  * Each case writes a corpus of ~1,000 rows, so few cases run. A second
+  * property pins the page's edges over small corpora of tied distances.
   */
 object SearchProperties extends Properties("graft.search") {
 
@@ -88,27 +90,69 @@ object SearchProperties extends Properties("graft.search") {
     limit <- Gen.choose(Search.MinLimit, Search.MaxLimit)
   } yield SearchRequest(probe, typeFilter, point, skip, limit)
 
+  /** Edge cases of the driver page, over a corpus of a few dozen rows
+    * whose vectors take two values, so nearly every distance is shared and
+    * the id tie-break orders the page. Requests either keep every row (so
+    * the candidate count is the corpus size, and skips sit just before, at
+    * and past it, on both the offset and the deep-skip paths) or carry a
+    * type filter or a point that keeps no row. */
+  private val genTieCorpus: Gen[Corpus] = for {
+    n <- Gen.choose(12, 60)
+    rows <- Gen.listOfN(n, for {
+      prefix <- genIdPrefix
+      v <- Gen.oneOf(Array(1f, 0f, 0f, 0f), Array(1f, 1f, 0f, 0f))
+      g <- Gen.oneOf(polygons)
+    } yield (prefix, v, g))
+  } yield Corpus(rows.zipWithIndex.map { case ((prefix, v, g), i) =>
+    Row(s"$prefix${i % 7}-$i", s"name-$i", types(i % types.size), s"desc-$i", s"u/$i", s"m-$i",
+      v.toSeq, g)
+  })
+
+  private def genEdgeRequest(n: Int): Gen[SearchRequest] = for {
+    probe <- genVec
+    limit <- Gen.choose(Search.MinLimit, Search.MaxLimit)
+    (typeFilter, point, skip) <- Gen.oneOf(
+      Gen.oneOf(0, n - limit, n - 1, n, n + 1, Search.DeepSkipThreshold + 1)
+        .map(skip => (None, None, math.max(0, skip))),
+      Gen.oneOf(
+        (Some(Seq("no such type")), None),
+        (None, Some(Point(50.0, 50.0))),
+        (Some(Seq("TABLE")), Some(Point(50.0, 50.0))))
+        .flatMap { case (t, p) => Gen.oneOf(0, n).map(skip => (t, p, skip)) })
+  } yield SearchRequest(probe, typeFilter, point, skip, limit)
+
+  /** Searches `rows` as a `LocalRelation`, as a materialized cache (both
+    * the driver path) and as a parquet copy (the distributed path), and
+    * requires identical responses from all three. */
+  private def pagesAgree(corpus: Corpus, reqs: Seq[SearchRequest]): Prop = {
+    val local = spark.createDataFrame(java.util.Arrays.asList(corpus.rows: _*), schema)
+    val dir = java.nio.file.Files.createTempDirectory("graft-search-prop")
+      .resolve("layers").toString
+    local.write.parquet(dir)
+    val parquet: DataFrame = spark.read.parquet(dir)
+    val cached = local.repartition(3).cache()
+    try {
+      cached.count()
+      val paths = local.queryExecution.analyzed.isInstanceOf[LocalRelation] &&
+        Search.collectDriverCopy(local) && Search.collectDriverCopy(cached) &&
+        !Search.collectDriverCopy(parquet)
+      Prop(paths) :| "path choice" && Prop.all(reqs.map { r =>
+        val expected = Search.search(parquet, r)
+        val got = Seq(Search.search(local, r), Search.search(cached, r))
+        Prop(expected.error.isEmpty && got.forall(_ == expected)) :|
+          s"probe ${r.probe.toSeq} type ${r.typeFilter} point ${r.inputPoint} " +
+            s"skip ${r.skip} limit ${r.limit}: distributed " +
+            s"${expected.layers.map(_.map(_.id))} ${expected.error}, " +
+            s"driver ${got.map(g => g.layers.map(_.map(_.id)) -> g.error)}"
+      }: _*)
+    } finally cached.unpersist(blocking = true)
+  }
+
   property("driver-path pages equal distributed pages") =
-    forAllNoShrink(genCorpus, Gen.listOfN(6, genRequest)) { (corpus, reqs) =>
-      val local = spark.createDataFrame(java.util.Arrays.asList(corpus.rows: _*), schema)
-      val dir = java.nio.file.Files.createTempDirectory("graft-search-prop")
-        .resolve("layers").toString
-      local.write.parquet(dir)
-      val parquet: DataFrame = spark.read.parquet(dir)
-      val cached = local.repartition(3).cache()
-      try {
-        cached.count()
-        val paths = Search.collectDriverCopy(local) && Search.collectDriverCopy(cached) &&
-          !Search.collectDriverCopy(parquet)
-        Prop(paths) :| "path choice" && Prop.all(reqs.map { r =>
-          val expected = Search.search(parquet, r)
-          val got = Seq(Search.search(local, r), Search.search(cached, r))
-          Prop(expected.error.isEmpty && got.forall(_ == expected)) :|
-            s"probe ${r.probe.toSeq} type ${r.typeFilter} point ${r.inputPoint} " +
-              s"skip ${r.skip} limit ${r.limit}: distributed " +
-              s"${expected.layers.map(_.map(_.id))} ${expected.error}, " +
-              s"driver ${got.map(g => g.layers.map(_.map(_.id)) -> g.error)}"
-        }: _*)
-      } finally cached.unpersist(blocking = true)
+    forAllNoShrink(genCorpus, Gen.listOfN(6, genRequest))(pagesAgree)
+
+  property("driver-path pages equal distributed pages: ties, skips at and past the candidates, empty filters") =
+    forAllNoShrink(genTieCorpus.flatMap(c => Gen.listOfN(8, genEdgeRequest(c.rows.size)).map(c -> _))) {
+      case (corpus, reqs) => pagesAgree(corpus, reqs)
     }
 }

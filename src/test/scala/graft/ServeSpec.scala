@@ -338,6 +338,65 @@ class ServeSpec extends AnyFunSuite {
     assert(left.isEmpty, s"still running: ${left.map(_.getName).mkString(", ")}")
   }
 
+  /** One kept-alive HTTP/1.1 connection that sends each request in one
+    * write and reads the reply by its Content-Length: the shape of the
+    * benchmark's Python `http.client` connection. */
+  private final class KeptAlive(port: Int) extends AutoCloseable {
+    private val sock = new java.net.Socket("127.0.0.1", port)
+    private val in = new java.io.BufferedInputStream(sock.getInputStream)
+    private val out = sock.getOutputStream
+
+    def post(path: String, body: String): (Int, String) = {
+      val b = body.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      out.write((s"POST $path HTTP/1.1\r\nHost: 127.0.0.1\r\n" +
+        s"Content-Type: application/json\r\nContent-Length: ${b.length}\r\n\r\n")
+        .getBytes(java.nio.charset.StandardCharsets.US_ASCII) ++ b)
+      out.flush()
+      val head = new StringBuilder
+      while (!head.endsWith("\r\n\r\n")) {
+        val c = in.read()
+        assert(c >= 0, s"connection closed after: $head")
+        head += c.toChar
+      }
+      val lines = head.toString.split("\r\n")
+      val length = lines.tail.collectFirst {
+        case h if h.toLowerCase(java.util.Locale.ROOT).startsWith("content-length:") =>
+          h.substring(h.indexOf(':') + 1).trim.toInt
+      }.getOrElse(0)
+      (lines.head.split(" ")(1).toInt,
+        new String(in.readNBytes(length), java.nio.charset.StandardCharsets.UTF_8))
+    }
+
+    def close(): Unit = sock.close()
+  }
+
+  test("ServeMain.start: kept-alive replies do not wait for the client's delayed ACK") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-serve-nodelay").toString + "/layers"
+    layers.write.mode("overwrite").parquet(dir)
+    val (http, mcp) = ServeMain.start(spark, dir, httpPort = 0, mcpPort = 0)
+    try {
+      val search = """{"request_string":"red","limit":2}"""
+      val tool = """{"jsonrpc":"2.0","id":1,"method":"tools/call","params":{""" +
+        """"name":"gis_layer_search","arguments":{"request_string":"red","limit":2}}}"""
+      for ((server, path, body) <- Seq((http, "/search", search), (mcp, "/mcp", tool))) {
+        val conn = new KeptAlive(server.getAddress.getPort)
+        try {
+          (1 to 5).foreach(_ => conn.post(path, body)) // codegen and class loading
+          val ms = (1 to 25).map { _ =>
+            val t0 = System.nanoTime()
+            val (status, reply) = conn.post(path, body)
+            val t = (System.nanoTime() - t0) / 1e6
+            assert(status === 200 && reply.contains("\"id\":\"L1\""), reply)
+            t
+          }.sorted
+          // a stalled reply waits ~40 ms for the ACK; the request's own
+          // work over this corpus is a few ms
+          assert(ms(ms.size / 2) < 15.0, s"$path median ${ms(ms.size / 2)} ms; all: $ms")
+        } finally conn.close()
+      }
+    } finally { http.stop(0); mcp.stop(0) }
+  }
+
   test("ServeMain.start: boots with an .onnx encoder artifact (the F8 loaded-model seam)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-serve-onnx").toString
     layers.write.mode("overwrite").parquet(s"$dir/layers")

@@ -48,6 +48,38 @@ class VectorSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
   import SparkTestSession.sfDir
 
+  /** Records read by the completed stages that scan a file and that
+    * `counted` selects, while `f` runs. Events reach a listener in order:
+    * once a marker job's end arrives, every earlier stage completion has
+    * been counted. */
+  private def fileRowsRead(counted: org.apache.spark.scheduler.StageInfo => Boolean)
+                          (f: => Unit): Long = {
+    import org.apache.spark.scheduler._
+    val rows = new java.util.concurrent.atomic.AtomicLong(0L)
+    val markerJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD") && counted(e.stageInfo))
+          rows.addAndGet(e.stageInfo.taskMetrics.inputMetrics.recordsRead)
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "drain"))
+          markerJob.set(e.jobId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob.get) drained.countDown()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      f
+      sc.setJobDescription("drain")
+      sc.parallelize(Seq(1), 1).count()
+      sc.setJobDescription(null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    rows.get
+  }
+
   private def vecDf(rows: Seq[(Long, Array[Float])]) = {
     import spark.implicits._
     rows.toDF("id", "emb")
@@ -1172,42 +1204,20 @@ class VectorSpec extends AnyFunSuite {
 
   test("lshCandidatePairs evaluates the banding once: the corpus file is read n rows, not 2n") {
     import spark.implicits._
-    import org.apache.spark.scheduler._
     val n = 300L
     val rnd = new scala.util.Random(11)
     val dir = java.nio.file.Files.createTempDirectory("graft-lsh-once").resolve("corpus").toString
     (1L to n).map(i => (i, Array.fill(8)(rnd.nextGaussian().toFloat)))
       .toDF("doc_id", "vec").write.parquet(dir)
     val corpus = spark.read.parquet(dir)
-    // records read by stages that scan the file; stages reading the
-    // materialized banding count its cached blocks, which are not the file
-    val fileRows = new java.util.concurrent.atomic.AtomicLong(0L)
-    val markerJob = new java.util.concurrent.atomic.AtomicInteger(-1)
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
-          fileRows.addAndGet(e.stageInfo.taskMetrics.inputMetrics.recordsRead)
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "drain"))
-          markerJob.set(e.jobId)
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == markerJob.get) drained.countDown()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
+    // stages reading the materialized banding count its cached blocks,
+    // which are not the file
+    val rows = fileRowsRead(_ => true) {
       val cand = Knn.lshCandidatePairs(corpus, "doc_id", "vec",
         bands = 4, rowsPerBand = 2, seed = 42L).count()
       assert(cand > 0L)
-      // events reach a listener in order: once the marker job's end
-      // arrives, every earlier stage completion has been counted
-      sc.setJobDescription("drain")
-      sc.parallelize(Seq(1), 1).count()
-      sc.setJobDescription(null)
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
-    assert(fileRows.get === n, "the guard and the pair generation must share one banding pass")
+    }
+    assert(rows === n, "the guard and the pair generation must share one banding pass")
   }
 
   test("LSH blocking prunes: candidates << n^2 and superset of true pairs") {
@@ -1293,6 +1303,25 @@ class VectorSpec extends AnyFunSuite {
     val all = e.select("vec_id").collect().map(_.getLong(0)).toSet
     assert(kept === all -- expectedDropped)
     assert(expectedDropped.nonEmpty, "fixture should produce at least one drop")
+  }
+
+  test("semanticDedup assigns clusters once: the assignment stages read the corpus file n rows, not 2n") {
+    import spark.implicits._
+    val n = 300L
+    val rnd = new scala.util.Random(13)
+    val dir = java.nio.file.Files.createTempDirectory("graft-d9-once").resolve("corpus").toString
+    (1L to n).map(i => (i, Array.fill(8)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding").write.parquet(dir)
+    val corpus = spark.read.parquet(dir)
+    // stages that run the nearest-centroid pass (the `MapPartitions`
+    // operator of Ivf.build's assignment); the sample and the final
+    // anti-join also scan the file but run no such operator
+    val rows = fileRowsRead(_.rddInfos.exists(_.scope.exists(_.name == "MapPartitions"))) {
+      val kept = graft.operators.Knn.semanticDedup(corpus, "vec_id", "embedding",
+        minSim = 0.5, nlist = 4, iters = 3).count()
+      assert(kept > 0L && kept <= n)
+    }
+    assert(rows === n, "the guard and the pair generation must share one assignment pass")
   }
 
   test("semanticDedup refuses past the pair-volume cap, naming the knob") {
