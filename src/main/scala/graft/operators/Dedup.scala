@@ -67,11 +67,66 @@ object Dedup {
   private def shingled(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     spread(docs).select(col(idCol).as("id"), shingle_set(col(textCol), n).as("shingles"))
 
+  /** One (id, s) row per distinct n-gram shingle of each document; a doc
+    * shorter than n has none. `explode_outer` and a null filter on its
+    * output, not `explode`: Spark infers `size(shingles) > 0` from an
+    * inner explode and pushes it below the spread's exchange, so the
+    * shingle kernel would run twice, once in the single-task scan stage.
+    */
+  private def shingleRows(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
+    shingled(docs, idCol, textCol, n)
+      .select(col("id"), explode_outer(col("shingles")).as("s"))
+      .filter(col("s").isNotNull)
+
+  /** The shingle postings of a corpus, built once: one row per distinct
+    * shingle with at most `maxDf` documents, holding its sorted document
+    * ids (`ids`) and its exact document frequency (`df`), and the number
+    * of pairs those postings emit. One `groupBy(s)` takes `df` as
+    * `count(1)` and collects the ids through [[Pairs.bounded]], so no
+    * array outgrows [[Pairs.bound]]; a posting past that bound but within
+    * `maxDf` makes the returned volume exceed `cap` by itself, and each
+    * caller refuses such a volume before reading an array. The postings
+    * are materialized by the volume's job (lazy `localCheckpoint`, blocks
+    * released with the plan), and every later consumer — per-doc sizes,
+    * pair counts — reads them instead of the corpus.
+    */
+  private[graft] def postings(docs: DataFrame, idCol: String, textCol: String, n: Int,
+                              maxDf: Option[Int], cap: Long): (DataFrame, Long) = {
+    val grouped = shingleRows(docs, idCol, textCol, n).groupBy(col("s"))
+      .agg(count(lit(1)).as("df"), Pairs.bounded(col("id"), maxDf, cap).as("ids"))
+    val p = maxDf.fold(grouped)(m => grouped.filter(col("df") <= m))
+      .select(sort_array(col("ids")).as("ids"), col("df"))
+      .localCheckpoint(false)
+    (p, p.agg(Pairs.volume(col("df"))).head().getLong(0))
+  }
+
+  /** (id1, id2, common): the number of postings each id1 < id2 pair
+    * shares, aggregated in partitions sized by [[Pairs.partitions]] from
+    * the `pairVolume` raw pair rows.
+    */
+  private def sharedCounts(postings: DataFrame, pairVolume: Long): DataFrame =
+    Pairs.explodePairs(postings, "ids", Nil, "id1", "id2")
+      .repartition(Pairs.partitions(postings.sparkSession, pairVolume, 1500000L),
+        col("id1"), col("id2"))
+      .groupBy(col("id1"), col("id2"))
+      .agg(count(lit(1)).as("common"))
+
+  /** [[sharedCounts]] with each side's posting count, `sz1` and `sz2`:
+    * the size of the doc's shingle set within the `maxDf` universe.
+    */
+  private def sharedWithSizes(postings: DataFrame, pairVolume: Long): DataFrame = {
+    val sizes = postings.select(explode(col("ids")).as("id"))
+      .groupBy(col("id")).agg(count(lit(1)).as("sz"))
+    sharedCounts(postings, pairVolume)
+      .join(sizes.toDF("id1", "sz1"), "id1")
+      .join(sizes.toDF("id2", "sz2"), "id2")
+  }
+
   /** Exact n-gram Jaccard near-dup pairs via relational shingle
-    * blocking — no cross product: explode distinct shingles, group each
-    * shingle's posting list into a sorted array (bounded by maxDf),
-    * generate each id1 < id2 pair once, count common per pair, compare
-    * against |A|+|B|-common.
+    * blocking — no cross product: each shingle's posting list is one
+    * sorted array of its documents, each id1 < id2 pair is generated once
+    * per shared shingle and counted, and the count is compared against
+    * |A|+|B|-common.
     *
     * With `maxDf`, shingles present in more than that many documents are
     * removed from the universe BEFORE both the numerator and the sizes —
@@ -79,97 +134,55 @@ object Dedup {
     * biased estimate of the unfiltered one), so blocking never drops a
     * pair whose filtered-universe similarity clears the threshold.
     *
-    * Memory model: the exploded (doc x shingle) table is reused by two
-    * consumers (the sizes aggregate and the postings groupBy), so
-    * by default it is cached via `shingleStorage` —
-    * MEMORY_AND_DISK-shaped levels are right at gate scale where the
-    * exploded table fits the cluster. At 100 TB the exploded table is far
-    * larger than the input; pass `StorageLevel.NONE` to recompute the
-    * cheap explode per consumer (or checkpoint to a bucketed table
-    * upstream) instead of caching rows x shingles.
+    * Memory model: the corpus is scanned and shingled once, into one
+    * `groupBy(s)` aggregate whose rows are the postings ([[postings]]):
+    * the exact df and at most [[Pairs.bound]] ids, so no row outgrows
+    * min(maxDf, ~sqrt(2 * maxPairEstimate)) ids, whatever the corpus.
+    * Only (ids, df) is materialized, never the exploded (doc x shingle)
+    * table or the shingle strings; sizes and pair counts read it.
     *
-    * Pair-volume guard ([[Pairs.volume]], counted over the df table the
-    * blocking step needs anyway): when a corpus's vocabulary is too small
-    * for `maxDf` to prune (the sf1 regime, ~1e8 pairs), this refuses
-    * loudly with the scale path named. Raise `maxPairEstimate`
-    * deliberately to run the exact baseline anyway.
+    * Pair-volume guard ([[Pairs.volume]] over the postings' exact df):
+    * when a corpus's vocabulary is too small for `maxDf` to prune (the sf1
+    * regime, ~1e8 pairs), this refuses loudly with the scale path named,
+    * before any pair exists. Raise `maxPairEstimate` deliberately to run
+    * the exact baseline anyway.
     */
   def jaccardNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
                           n: Int = 3, minJaccard: Double = 0.5,
                           maxDf: Option[Int] = None,
-                          shingleStorage: org.apache.spark.storage.StorageLevel =
-                            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
                           maxPairEstimate: Long = 50000000L,
                           fallbackToLsh: Boolean = false): DataFrame = {
-    val sh = shingled(docs, idCol, textCol, n)
-    var ex = sh.select(col("id"), explode(col("shingles")).as("s"))
-    // one df row per distinct shingle — tiny next to the exploded table;
-    // cached because the guard aggregate and the blocking filter both read it
-    val dfs = ex.groupBy(col("s")).agg(count(lit(1)).as("df"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val kept = maxDf.fold(dfs)(m => dfs.filter(col("df") <= m))
-      val pairVolume = kept.agg(Pairs.volume(col("df"))).head().getLong(0)
-      if (pairVolume > maxPairEstimate && fallbackToLsh) {
-        // opt-in graceful degrade for pipeline users: route past-cap
-        // inputs to the LSH scale path (same n and threshold) instead of
-        // hard-stopping a multi-stage job. Logged loudly because LSH
-        // pairs are a high-recall approximation of the exact baseline,
-        // not a silent drop-in.
-        dfs.unpersist()
-        org.apache.log4j.Logger.getLogger(getClass)
-          .warn(s"jaccardNearDupPairs: ~$pairVolume candidate pairs exceed " +
-            s"maxPairEstimate=$maxPairEstimate after maxDf=$maxDf blocking; " +
-            s"fallbackToLsh routing to minhashLshNearDupPairs(n=$n, " +
-            s"minJaccard=$minJaccard)")
-        return minhashLshNearDupPairs(docs, idCol, textCol, n = n,
-          minJaccard = minJaccard)
-      }
-      require(pairVolume <= maxPairEstimate,
-        s"jaccardNearDupPairs is the exact baseline and would shuffle ~" +
-          s"$pairVolume candidate pairs after maxDf=$maxDf blocking " +
-          s"(> $maxPairEstimate): the corpus vocabulary is too small for " +
-          "df blocking to prune. Use minhashLshNearDupPairs for corpora " +
-          "at scale (or fallbackToLsh=true to route automatically), or " +
-          "raise maxPairEstimate deliberately")
-      maxDf.foreach { _ =>
-        // the USING join moves the key first; restore (id, s) order for the
-        // positional toDF renames below
-        ex = ex.join(kept.select(col("s")), "s").select(col("id"), col("s"))
-      }
-    } catch {
-      case e: Throwable => dfs.unpersist(); throw e
+    val (ps, pairVolume) = postings(docs, idCol, textCol, n, maxDf, maxPairEstimate)
+    if (pairVolume > maxPairEstimate && fallbackToLsh) {
+      // opt-in graceful degrade for pipeline users: route past-cap
+      // inputs to the LSH scale path (same n and threshold) instead of
+      // hard-stopping a multi-stage job. Logged loudly because LSH
+      // pairs are a high-recall approximation of the exact baseline,
+      // not a silent drop-in.
+      org.apache.log4j.Logger.getLogger(getClass)
+        .warn(s"jaccardNearDupPairs: ~$pairVolume candidate pairs exceed " +
+          s"maxPairEstimate=$maxPairEstimate after maxDf=$maxDf blocking; " +
+          s"fallbackToLsh routing to minhashLshNearDupPairs(n=$n, " +
+          s"minJaccard=$minJaccard)")
+      return minhashLshNearDupPairs(docs, idCol, textCol, n = n,
+        minJaccard = minJaccard)
     }
-    val persistedEx =
-      shingleStorage != org.apache.spark.storage.StorageLevel.NONE
-    if (persistedEx) ex = ex.persist(shingleStorage)
-    try {
-      // sizes over the same (possibly df-filtered) universe as the numerator
-      val sizes = ex.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-      // candidate pairs from per-shingle posting buckets (bounded by
-      // maxDf after blocking), each id1 < id2 pair once
-      val common = Pairs.within(ex, Seq("s"), "id")
-        .groupBy(col("id1"), col("id2"))
-        .agg(count(lit(1)).as("common"))
-      common
-        .join(sizes.toDF("id1", "sz1"), "id1")
-        .join(sizes.toDF("id2", "sz2"), "id2")
-        .filter(col("common").cast("double") /
-          (col("sz1") + col("sz2") - col("common")) >= minJaccard)
-        .select(col("id1"), col("id2"))
-        // materialize the (tiny) verified pair list eagerly so the
-        // corpus-sized shingle/df caches release in the finally below
-        // instead of leaking for the session's lifetime (guide §5: a
-        // suite/pipeline that runs many of these bled storage-pool
-        // pressure into every LATER query — the r19 mid-bench measured
-        // the g-family paying for the d-family's leaked caches). Same
-        // lifecycle as minhashLshNearDupPairs/commonNeighbors.
-        .localCheckpoint(true)
-        .orderBy(col("id1"), col("id2"))
-    } finally {
-      if (persistedEx) ex.unpersist()
-      dfs.unpersist()
-    }
+    require(pairVolume <= maxPairEstimate,
+      s"jaccardNearDupPairs is the exact baseline and would shuffle ~" +
+        s"$pairVolume candidate pairs after maxDf=$maxDf blocking " +
+        s"(> $maxPairEstimate): the corpus vocabulary is too small for " +
+        "df blocking to prune. Use minhashLshNearDupPairs for corpora " +
+        "at scale (or fallbackToLsh=true to route automatically), or " +
+        "raise maxPairEstimate deliberately")
+    sharedWithSizes(ps, pairVolume)
+      .filter(col("common").cast("double") /
+        (col("sz1") + col("sz2") - col("common")) >= minJaccard)
+      .select(col("id1"), col("id2"))
+      // materialize the (tiny) verified pair list eagerly, so a caller's
+      // several actions on it (d21/d22 count it and semi-join it) re-read
+      // a few hundred rows instead of re-running the pair generation
+      .localCheckpoint(true)
+      .orderBy(col("id1"), col("id2"))
   }
 
   /** Exact substring-duplication signal — the distributed relational
@@ -183,41 +196,29 @@ object Dedup {
     * boilerplate paragraph inside two long, otherwise-different pages is
     * exactly the case this operator exists for.
     *
-    * Shape: distinct `w`-token windows per doc (shingle_set — one scan),
-    * document-frequency blocking (a window in > maxDf docs is boilerplate
-    * so ubiquitous it would emit O(df^2) rows on one join key — the d2
-    * hot-key argument verbatim), pair volume counted BEFORE generation
-    * and refused past the cap, then per-window sorted posting arrays emit
-    * each pair once into a per-pair count. The shuffle key is the window
-    * text (content blocking, no
-    * pair space materialized); a production run at 100 TB swaps the key
-    * for a 128-bit fingerprint of the window to bound shuffle width —
-    * the plan shape is unchanged, so the gate pins semantics on the
-    * transparent key.
+    * Shape: the [[jaccardNearDupPairs]] postings over `w`-token windows
+    * (one scan; a window in > maxDf docs is boilerplate so ubiquitous it
+    * would emit O(df^2) rows on one key — the d2 hot-key argument
+    * verbatim, and no posting array outgrows min(maxDf, ~sqrt(2 *
+    * maxPairEstimate)) ids), pair volume counted BEFORE generation and
+    * refused past the cap, then each pair emitted once per shared window
+    * into a per-pair count. The grouping key is the window text (content
+    * blocking, no pair space materialized); a production run at 100 TB
+    * swaps the key for a 128-bit fingerprint of the window to bound
+    * shuffle width — the plan shape is unchanged, so the gate pins
+    * semantics on the transparent key.
     */
   def sharedWindowPairs(docs: DataFrame, idCol: String, textCol: String,
                         w: Int = 8, maxDf: Int = 100,
                         maxPairEstimate: Long = 50000000L): DataFrame = {
-    val ex = shingled(docs, idCol, textCol, w)
-      .select(col("id"), explode(col("shingles")).as("win"))
-    val dfs = ex.groupBy(col("win")).agg(count(lit(1)).as("df"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val keptEx =
-      try {
-        val kept = dfs.filter(col("df") <= maxDf)
-        Pairs.guard(kept, "df", maxPairEstimate) { pairVolume =>
-          s"sharedWindowPairs would shuffle ~$pairVolume candidate pairs " +
-            s"after maxDf=$maxDf blocking (> $maxPairEstimate): lower maxDf " +
-            "(more aggressive boilerplate blocking), raise w (rarer " +
-            "windows), or raise maxPairEstimate deliberately"
-        }
-        // single consumer downstream (the postings groupBy) — no persist
-        ex.join(kept.select(col("win")), "win").select(col("id"), col("win"))
-      } finally dfs.unpersist()
-    // per-window posting buckets (bounded by maxDf), each id1 < id2 pair once
-    Pairs.within(keptEx, Seq("win"), "id")
-      .groupBy(col("id1"), col("id2"))
-      .agg(count(lit(1)).as("n_shared"))
+    val (ps, pairVolume) = postings(docs, idCol, textCol, w, Some(maxDf), maxPairEstimate)
+    require(pairVolume <= maxPairEstimate,
+      s"sharedWindowPairs would shuffle ~$pairVolume candidate pairs " +
+        s"after maxDf=$maxDf blocking (> $maxPairEstimate): lower maxDf " +
+        "(more aggressive boilerplate blocking), raise w (rarer " +
+        "windows), or raise maxPairEstimate deliberately")
+    sharedCounts(ps, pairVolume)
+      .withColumnRenamed("common", "n_shared")
       .orderBy(col("id1"), col("id2"))
   }
 
@@ -624,60 +625,37 @@ object Dedup {
     * at >= `minContainment`, with the smaller set always the contained
     * side (equal sizes tie-break by id, so identical sets emit once).
     *
-    * Same relational skeleton and guard discipline as
-    * [[jaccardNearDupPairs]]: df blocking BEFORE both numerator and
-    * sizes (containment is exact over the filtered universe), candidate
-    * volume exactly counted and refused past `maxPairEstimate`.
+    * Same postings, memory model and guard as [[jaccardNearDupPairs]]:
+    * one scan into one `groupBy(s)` whose arrays never outgrow
+    * min(maxDf, ~sqrt(2 * maxPairEstimate)) ids, df blocking BEFORE both
+    * numerator and sizes (containment is exact over the filtered
+    * universe), candidate volume exactly counted and refused past
+    * `maxPairEstimate` before any pair exists.
     */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
                        n: Int = 3, minContainment: Double = 0.9,
                        maxDf: Option[Int] = None,
                        maxPairEstimate: Long = 50000000L): DataFrame = {
-    val sh = shingled(docs, idCol, textCol, n)
-    var ex = sh.select(col("id"), explode(col("shingles")).as("s"))
-    val dfs = ex.groupBy(col("s")).agg(count(lit(1)).as("df"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val kept = maxDf.fold(dfs)(m => dfs.filter(col("df") <= m))
-      Pairs.guard(kept, "df", maxPairEstimate) { pairVolume =>
-        s"containmentPairs would shuffle ~$pairVolume candidate pairs " +
-          s"after maxDf=$maxDf blocking (> $maxPairEstimate): tighten " +
-          "maxDf or raise maxPairEstimate deliberately"
-      }
-      maxDf.foreach { _ =>
-        ex = ex.join(kept.select(col("s")), "s").select(col("id"), col("s"))
-      }
-    } catch {
-      case e: Throwable => dfs.unpersist(); throw e
-    }
-    ex = ex.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val sizes = ex.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-      // per-shingle posting buckets (bounded by maxDf), each id1 < id2 pair once
-      val common = Pairs.within(ex, Seq("s"), "id")
-        .groupBy(col("id1"), col("id2"))
-        .agg(count(lit(1)).as("common"))
-        .join(sizes.toDF("id1", "sz1"), "id1")
-        .join(sizes.toDF("id2", "sz2"), "id2")
-      val tau = lit(minContainment)
-      val fwd = common // id1 contained in id2
-        .filter(col("common").cast("double") / col("sz1") >= tau &&
-          (col("sz1") < col("sz2") ||
-            (col("sz1") === col("sz2") && col("id1") < col("id2"))))
-        .select(col("id1").as("contained"), col("id2").as("container"))
-      val bwd = common // id2 contained in id1 (strictly smaller only)
-        .filter(col("common").cast("double") / col("sz2") >= tau &&
-          col("sz2") < col("sz1"))
-        .select(col("id2").as("contained"), col("id1").as("container"))
-      // eager-materialize the (tiny) directed pair list so the
-      // corpus-sized shingle/df caches release below instead of leaking
-      // for the session (the jaccardNearDupPairs lifecycle note)
-      fwd.unionByName(bwd).localCheckpoint(true)
-        .orderBy(col("contained"), col("container"))
-    } finally {
-      ex.unpersist()
-      dfs.unpersist()
-    }
+    val (ps, pairVolume) = postings(docs, idCol, textCol, n, maxDf, maxPairEstimate)
+    require(pairVolume <= maxPairEstimate,
+      s"containmentPairs would shuffle ~$pairVolume candidate pairs " +
+        s"after maxDf=$maxDf blocking (> $maxPairEstimate): tighten " +
+        "maxDf or raise maxPairEstimate deliberately")
+    val common = sharedWithSizes(ps, pairVolume)
+    val tau = lit(minContainment)
+    val fwd = common // id1 contained in id2
+      .filter(col("common").cast("double") / col("sz1") >= tau &&
+        (col("sz1") < col("sz2") ||
+          (col("sz1") === col("sz2") && col("id1") < col("id2"))))
+      .select(col("id1").as("contained"), col("id2").as("container"))
+    val bwd = common // id2 contained in id1 (strictly smaller only)
+      .filter(col("common").cast("double") / col("sz2") >= tau &&
+        col("sz2") < col("sz1"))
+      .select(col("id2").as("contained"), col("id1").as("container"))
+    // eager-materialize the (tiny) directed pair list: both branches read
+    // the pair counts, which run once here
+    fwd.unionByName(bwd).localCheckpoint(true)
+      .orderBy(col("contained"), col("container"))
   }
 
   /** Corpus-order n-gram NOVELTY fractions — the incremental-value
@@ -701,8 +679,7 @@ object Dedup {
     */
   def noveltyFractions(docs: DataFrame, idCol: String, textCol: String,
                        n: Int = 3): DataFrame = {
-    val grams = shingled(docs, idCol, textCol, n)
-      .select(col("id"), explode(col("shingles")).as("g"))
+    val grams = shingleRows(docs, idCol, textCol, n).withColumnRenamed("s", "g")
     val firstHolder = grams.groupBy("g").agg(min(col("id")).as("first_id"))
     grams.join(firstHolder, "g")
       .groupBy("id")

@@ -24,7 +24,10 @@ import org.apache.spark.sql.types._
   * an OOM / 2 GB-row failure at scale (guide §2.5). The pair count is
   * EXACTLY the sum of n(n-1)/2 over bucket sizes, one combinable
   * aggregate, so callers count first and refuse loudly past a cap (which
-  * also bounds the largest bucket at ~sqrt(2 * cap) elements).
+  * also bounds the largest bucket at ~sqrt(2 * cap) elements). The
+  * shingle-posting family (d2/d10/d19) collects its arrays through
+  * [[bounded]] beside the exact count, so its arrays are bounded too:
+  * none outgrows [[bound]], even in a bucket the guard then refuses.
   *
   * Pair keys ([[Key]]): a caller keys its pairs on ONE column, whose
   * shape this object picks from the id range the caller's guard
@@ -68,11 +71,23 @@ object Pairs {
           .agg(sort_array(collect_list(struct(col(o), col(elem)))).as(arr + "s"))
           .select(k :+ col(s"${arr}s.$elem").as(arr): _*)
     }
-    grouped
-      .select(k ++ Seq(col(arr), size(col(arr)).cast("long").as(Size)): _*)
-      .select(k ++ Seq(col(arr), col(Size),
-        posexplode(col(arr)).as(Seq("i", first))): _*)
-      .select(k ++ Seq(col(Size), col(first),
+    explodePairs(
+      grouped.select(k ++ Seq(col(arr), size(col(arr)).cast("long").as(Size)): _*),
+      arr, keys :+ Size, first, second)
+  }
+
+  /** Each pair (arr[i], arr[j]), i < j, of every row's `arr` array, as
+    * `first` and `second`, with the `carry` columns alongside: n(n-1)/2
+    * rows per n-element array, through posexplode + slice. [[within]]
+    * and callers that hold their buckets as arrays already (the shingle
+    * postings of [[Dedup]]) emit pairs here.
+    */
+  def explodePairs(arrays: DataFrame, arr: String, carry: Seq[String],
+                   first: String, second: String): DataFrame = {
+    val c = carry.map(col)
+    arrays
+      .select(c ++ Seq(col(arr), posexplode(col(arr)).as(Seq("i", first))): _*)
+      .select(c ++ Seq(col(first),
         explode(expr(s"slice($arr, i + 2, size($arr))")).as(second)): _*)
   }
 
@@ -90,6 +105,28 @@ object Pairs {
   def guard(sizes: DataFrame, n: String, cap: Long)(refusal: Long => String): Unit = {
     val pairs = sizes.agg(volume(col(n))).head().getLong(0)
     require(pairs <= cap, refusal(pairs))
+  }
+
+  /** The most elements [[bounded]] collects per bucket: `maxSize`, or
+    * floor(sqrt(2 cap)) + 2 if that is smaller, and at least 1. A bucket
+    * past floor(sqrt(2 cap)) + 2 elements emits more than `cap` pairs on
+    * its own (the + 2 absorbs the double rounding of the root).
+    */
+  def bound(maxSize: Option[Int], cap: Long): Int = {
+    val byCap = math.floor(math.sqrt(2.0 * math.max(cap, 0L))) + 2
+    math.max(1, math.min(maxSize.getOrElse(Int.MaxValue).toDouble, byCap).toInt)
+  }
+
+  /** A bucket's `elem` values as an array of at most [[bound]] elements:
+    * the aggregate to take beside the bucket's exact size (`count(1)`).
+    * A bucket larger than `maxSize` is one the caller drops; one larger
+    * than the bound but not `maxSize` pushes the caller's [[volume]] past
+    * `cap` by itself, so a guard on the exact sizes refuses before any
+    * truncated array is read. Either way no array outgrows the bound.
+    */
+  def bounded(elem: Column, maxSize: Option[Int], cap: Long): Column = {
+    import graft.functions.GraftFunctions.{toCol, toExpr}
+    toCol(graft.functions.CollectBounded(toExpr(elem), bound(maxSize, cap)).toAggregateExpression())
   }
 
   /** Partitions for an aggregate over `pairs` raw pair rows: ~`perTask`

@@ -80,6 +80,33 @@ object PairsSpec extends Properties("graft.pairs") {
       Pairs.within(df, Seq("b"), "id").count()
   }
 
+  property("bounded: a bucket within bound collects whole, none past it; a bucket past it exceeds cap alone") =
+    forAll(bucketed, Gen.option(Gen.choose(0, 12)), Gen.choose(-1L, 80L)) { (rows, maxSize, cap) =>
+      import spark.implicits._
+      val bound = Pairs.bound(maxSize, cap)
+      // three partitions, so partial arrays merge past the bound too
+      val got = rows.toDF("b", "id").repartition(3)
+        .groupBy(col("b"))
+        .agg(count(lit(1)).as("n"), Pairs.bounded(col("id"), maxSize, cap).as("ids"))
+        .as[(Int, Long, Seq[Long])].collect().toSeq
+      val want = rows.groupBy(_._1).map { case (b, ids) => b -> ids.map(_._2).toSet }
+      got.size == want.size && got.forall { case (b, n, ids) =>
+        n == want(b).size && ids.size == math.min(n, bound.toLong) &&
+          ids.toSet.subsetOf(want(b)) && ids.distinct.size == ids.size
+      } && (bound == maxSize.getOrElse(Int.MaxValue).max(1) ||
+        (bound + 1L) * bound / 2 > cap)
+    }
+
+  property("bound: Long.MaxValue caps nothing; past the bound one bucket exceeds the cap") = Prop {
+    val caps = Seq(0L, 1L, 2L, 3L, 100L, 50000000L, 500000000L, 1L << 52, 1L << 60)
+    Pairs.bound(None, Long.MaxValue) == Int.MaxValue && Pairs.bound(Some(100), 50000000L) == 100 &&
+      Pairs.bound(None, 50000000L) == 10002 && Pairs.bound(Some(0), 5L) == 1 &&
+      caps.forall { c =>
+        val b = BigInt(Pairs.bound(None, c))
+        b >= 2 && (b + 1) * b / 2 > BigInt(c)
+      }
+  }
+
   property("a filter on the carried bucket size runs before any pair is generated") = Prop {
     import spark.implicits._
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate}

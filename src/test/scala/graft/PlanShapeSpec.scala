@@ -253,6 +253,35 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
+  test("d2/d10/d19 shingle once, after the spread's exchange; one d2 call scans documents once") {
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.functions.WordShingles
+    // walks AQE's final plans, through their query stages
+    object Plans extends AdaptiveSparkPlanHelper
+    for (q <- Seq("d2_jaccard_near_dup", "d10_substring_pairs", "d19_containment_pairs")) {
+      val (_, ran) = Explain.executedPlans(spark)(SparkEntry.queries(q)(spark, sfDir))
+      val plans = ran.map(_._2)
+      // the corpus is one parquet file, so Tables.spread round-robins it
+      val spreads = plans.flatMap(Plans.collect(_) {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => e
+      })
+      assert(spreads.nonEmpty, s"$q lost the spread: ${ran.map(_._1)}")
+      for (e <- spreads) {
+        val shingling = Plans.collect(e.child) {
+          case p if p.expressions.exists(_.find(_.isInstanceOf[WordShingles]).isDefined) => p
+        }
+        assert(shingling.isEmpty, s"$q shingles below the spread's exchange:\n$e")
+      }
+      if (q == "d2_jaccard_near_dup") {
+        val scans = plans.flatMap(Plans.collect(_) { case f: FileSourceScanExec => f })
+        assert(scans.size === 1, s"d2 scanned documents ${scans.size} times: ${ran.map(_._1)}")
+      }
+    }
+  }
+
   test("q34 recursion executes as UnionLoop, not an unrolled plan") {
     val plan = planOf("q34_recursive_reach")
     assert(plan.contains("UnionLoop"), s"recursive execution expected:\n$plan")

@@ -441,14 +441,63 @@ class TextDedupSpec extends AnyFunSuite {
     assert(noRoute === exact)
   }
 
-  test("jaccard shingleStorage=NONE (recompute, no cache) matches the cached default") {
-    val real = Tables.documents(spark, sfDir)
-    val cached = Dedup.jaccardNearDupPairs(real, "doc_id", "text", 3, 0.5, Some(100))
+  test("shingle postings, maxDf=None: a shingle whose df alone passes the cap refuses d2 and d19; fallbackToLsh routes") {
+    // every doc carries "h1 h2 h3" (df 30, 435 pairs alone) plus its own words
+    val docs = textDf((1L to 30L).map(i => (i, s"h1 h2 h3 w$i x$i")): _*)
+    val d2 = intercept[IllegalArgumentException] {
+      Dedup.jaccardNearDupPairs(docs, "doc_id", "text", 3, 0.5, None, maxPairEstimate = 100L)
+    }
+    assert(d2.getMessage.contains("jaccardNearDupPairs is the exact baseline"))
+    val d19 = intercept[IllegalArgumentException] {
+      Dedup.containmentPairs(docs, "doc_id", "text", 3, 0.9, None, maxPairEstimate = 100L)
+    }
+    assert(d19.getMessage.contains("containmentPairs would shuffle ~435 candidate pairs"))
+    val routed = Dedup.jaccardNearDupPairs(docs, "doc_id", "text", 3, 0.5, None,
+        maxPairEstimate = 100L, fallbackToLsh = true)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val uncached = Dedup.jaccardNearDupPairs(real, "doc_id", "text", 3, 0.5, Some(100),
-        shingleStorage = org.apache.spark.storage.StorageLevel.NONE)
+    val lsh = Dedup.minhashLshNearDupPairs(docs, "doc_id", "text", n = 3, minJaccard = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(uncached === cached)
+    assert(routed === lsh)
+  }
+
+  test("shingle postings: a shingle past maxDf never reaches them; no array outgrows Pairs.bound") {
+    import graft.operators.Pairs
+    val docs = textDf((1L to 30L).map(i => (i, s"h1 h2 h3 w${i % 10} x${i % 10}")): _*)
+    def arrays(maxDf: Option[Int], cap: Long) = {
+      val (ps, volume) = Dedup.postings(docs, "doc_id", "text", 3, maxDf, cap)
+      (ps.collect().map(r => (r.getSeq[Long](0), r.getLong(1))).toSeq, volume)
+    }
+    // maxDf=3: the hot shingle (df 30) is dropped; each kept array is whole
+    val (kept, keptVolume) = arrays(Some(3), 50000000L)
+    assert(kept.nonEmpty && kept.forall { case (ids, df) => df <= 3 && ids.size == df })
+    assert(keptVolume === kept.map { case (_, df) => df * (df - 1) / 2 }.sum)
+    // maxDf=1000 and a cap of 100: the bound is 16, so the hot shingle's
+    // array stops at 16 ids while its df stays exact and the volume alone
+    // passes the cap (the operators refuse before reading the array)
+    val bound = Pairs.bound(Some(1000), 100L)
+    assert(bound === 16)
+    val (capped, cappedVolume) = arrays(Some(1000), 100L)
+    assert(capped.forall { case (ids, df) => ids.size.toLong === math.min(df, bound.toLong) })
+    assert(capped.exists { case (ids, df) => df == 30L && ids.size == bound })
+    assert(cappedVolume > 100L)
+  }
+
+  test("shingle postings: maxDf=None and maxPairEstimate=Long.MaxValue return the normal result") {
+    val docs = textDf(
+      (1L, "a b c d e f"), (2L, "a b c d e g"), (3L, "x y z w"), (4L, "a b"), (5L, "a b c d e f"))
+    def pairs(cap: Long) =
+      Dedup.jaccardNearDupPairs(docs, "doc_id", "text", 3, 0.5, None, maxPairEstimate = cap)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(pairs(Long.MaxValue) === Seq((1L, 2L), (1L, 5L), (2L, 5L)))
+    assert(pairs(Long.MaxValue) === pairs(50000000L))
+    val contained = Dedup.containmentPairs(docs, "doc_id", "text", 3, 0.9, None,
+        maxPairEstimate = Long.MaxValue)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(contained === Seq((1L, 5L)))
+    val windows = Dedup.sharedWindowPairs(docs, "doc_id", "text", 3, Int.MaxValue,
+        maxPairEstimate = Long.MaxValue)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(windows === Seq((1L, 2L, 3L), (1L, 5L, 4L), (2L, 5L, 3L)))
   }
 
   test("promoted codegen kernels agree across NO_CODEGEN and CODEGEN_ONLY") {
