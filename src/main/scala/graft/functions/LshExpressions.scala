@@ -30,10 +30,13 @@ import org.apache.spark.sql.types._
   */
 private[graft] object HyperplaneLsh {
 
-  /** bands*rows hyperplanes, each `dim`-dimensional, flattened row-major as
-    * plane p = planes[p*dim ... p*dim+dim-1]. Cached per (seed,bands,rows,
-    * dim) per JVM — ~1.5 MB at the defaults with dim=256, built once per
-    * executor.
+  /** bands*rows hyperplanes, each `dim`-dimensional, stored plane-major:
+    * component j of plane p (p = band * rows + row) is
+    * `planesT(j * bands * rows + p)`, so a kernel reading one input
+    * component touches every plane's term for it contiguously. Plane p is
+    * still the stream's values p*dim ... p*dim+dim-1. Cached per (seed,
+    * bands,rows,dim) per JVM — ~1.5 MB at the defaults with dim=256, built
+    * once per executor.
     */
   private val cache = new ConcurrentHashMap[(Long, Int, Int, Int), Array[Double]]()
 
@@ -46,11 +49,12 @@ private[graft] object HyperplaneLsh {
     */
   private val MaxEntries = 8
 
-  def planes(seed: Long, bands: Int, rows: Int, dim: Int): Array[Double] = {
+  def planesT(seed: Long, bands: Int, rows: Int, dim: Int): Array[Double] = {
     val key = (seed, bands, rows, dim)
     val hit = cache.get(key)
     if (hit != null) return hit
-    val out = new Array[Double](bands * rows * dim)
+    val planes = bands * rows
+    val out = new Array[Double](planes * dim)
     var i = 0
     while (i < out.length) {
       // counter-mode splitmix64 -> two uniforms -> Box-Muller normal
@@ -58,7 +62,9 @@ private[graft] object HyperplaneLsh {
       val h2 = SketchHash.mix(seed + SketchHash.Golden * (2L * i + 2))
       val u1 = ((h1 >>> 11) + 1).toDouble / (1L << 53).toDouble // (0, 1]
       val u2 = (h2 >>> 11).toDouble / (1L << 53).toDouble       // [0, 1)
-      out(i) = math.sqrt(-2.0 * math.log(u1)) * math.cos(2.0 * math.Pi * u2)
+      // stream value i is component i % dim of plane i / dim
+      out((i % dim) * planes + i / dim) =
+        math.sqrt(-2.0 * math.log(u1)) * math.cos(2.0 * math.Pi * u2)
       i += 1
     }
     if (cache.size >= MaxEntries) cache.clear()
@@ -153,21 +159,32 @@ object HyperplaneBands {
       else { val f = arr.toFloatArray(); val d = new Array[Double](f.length)
              var i = 0; while (i < f.length) { d(i) = f(i); i += 1 }; d }
     val dim = x.length
-    val planes = HyperplaneLsh.planes(seed, bands, rows, dim)
+    val planes = bands * rows
+    val planesT = HyperplaneLsh.planesT(seed, bands, rows, dim)
+    // all planes' dots at once, components in ascending order as a
+    // per-plane loop adds them; a zero component adds +-0.0, which leaves
+    // every sum (never -0.0: it starts at +0.0) and so every bit unchanged
+    val dots = new Array[Double](planes)
+    var j = 0
+    while (j < dim) {
+      val xj = x(j)
+      if (xj != 0.0) {
+        val off = j * planes
+        var p = 0
+        while (p < planes) {
+          dots(p) += xj * planesT(off + p)
+          p += 1
+        }
+      }
+      j += 1
+    }
     val out = new Array[Long](bands)
     var b = 0
     while (b < bands) {
       var bucket = 0L
       var r = 0
       while (r < rows) {
-        val off = (b * rows + r) * dim
-        var dot = 0.0
-        var j = 0
-        while (j < dim) {
-          dot += x(j) * planes(off + j)
-          j += 1
-        }
-        if (dot >= 0.0) bucket |= (1L << r)
+        if (dots(b * rows + r) >= 0.0) bucket |= (1L << r)
         r += 1
       }
       out(b) = bucket

@@ -174,7 +174,11 @@ object HtmlToMarkdown {
 
   /** Shared eval/codegen kernel (static forwarder for generated code). */
   def convert(u: UTF8String): UTF8String = {
-    var x = Br.matcher(u.toString).replaceAll(" ")
+    val s = u.toString
+    // every rule's pattern starts with '<' and every entity with '&': text
+    // with neither is only the closing whitespace collapse
+    if (s.indexOf('<') < 0 && s.indexOf('&') < 0) return UTF8String.fromString(collapseWs(s))
+    var x = Br.matcher(s).replaceAll(" ")
 
     // inline rules to fixpoint: inner tags convert before parents
     var prev: String = null
@@ -218,6 +222,26 @@ object HtmlToMarkdown {
     x = AnyTag.matcher(x).replaceAll(" ")
     x = decodeEntities(x)
     UTF8String.fromString(Ws.matcher(x).replaceAll(" ").trim)
+  }
+
+  /** `Ws.matcher(s).replaceAll(" ").trim` without the regex: each run of
+    * Java's six `\s` characters becomes one space, then `String.trim`. */
+  private[graft] def collapseWs(s: String): String = {
+    val sb = new java.lang.StringBuilder(s.length)
+    var inRun = false
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r') {
+        if (!inRun) sb.append(' ')
+        inRun = true
+      } else {
+        sb.append(c)
+        inRun = false
+      }
+      i += 1
+    }
+    sb.toString.trim
   }
 
   private def decodeEntities(x: String): String =

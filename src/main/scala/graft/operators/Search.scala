@@ -1,14 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.GraftColumnBridge.{cachedRelation, dataFrame, expression}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.GraftColumnBridge.{cachedRelation, column, dataFrame, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Ascending, AttributeReference, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
-import org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Ascending, Attribute, AttributeReference, BasePredicate, BoundReference, Expression, GenericInternalRow, JoinedRow, Predicate, RowOrdering, SortOrder, UnsafeArrayData, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.GraftFunctions._
 import graft.functions.Geo
@@ -39,13 +40,16 @@ import graft.functions.Geo
   *  - documented deviation: a deterministic (dist, id) tie-break; the
   *    reference's top-N heapsort leaves ties unordered (SURVEY.md §2.5 V2).
   *
-  * Two physical paths, one set of expressions:
+  * Two physical paths over the same kernels:
   *  - a small corpus (a `LocalRelation`, or a materialized cache under
-  *    [[LocalMaxBytes]]) is answered on the driver from a copy of its rows:
-  *    the filters and the distance fold into a `LocalRelation` in the
-  *    optimizer (Spark's `ConvertToLocalRelation`), the candidates sort by
-  *    Spark's (dist, id) ordering and the page is sliced off. No job runs,
-  *    so a request costs its Catalyst passes, not a job's scheduling;
+  *    [[LocalMaxBytes]]) is answered on the driver from a copy of its rows.
+  *    The query has one shape in four variants (type filter yes/no x point
+  *    yes/no); each is analysed and bound once per corpus, with the probe,
+  *    the type list and the point as a parameter row. A request fills that
+  *    row and scans the copy through Spark's codegen'd predicate and
+  *    projection, keeping the best skip+limit candidates under Spark's
+  *    (dist, id) ordering in a bounded heap. No job and no Catalyst pass
+  *    runs, so a request costs its scan;
   *  - anything else (uncached, parquet-backed, over the cap) plans as a
   *    scan (text-column pruning keeps the 4 KB embeddings column out of the
   *    projection until the distance is computed) -> filters -> codegen
@@ -134,15 +138,15 @@ object Search {
     // a dotless 'ı' under a Turkish JVM and silently matches nothing).
     val probes = req.typeFilter.getOrElse(Nil).filter(_.nonEmpty)
       .map(_.toLowerCase(java.util.Locale.ROOT))
-    val filters =
-      (if (probes.nonEmpty) Seq(lower(col("type")).isin(probes: _*)) else Nil) ++
-        req.inputPoint.map(_.to4326).map(p =>
-          st_intersects(col("geom"), st_point(lit(p.longitude), lit(p.latitude))))
-    val dist = cosine_distance(col("embeddings"), vector_lit(req.probe))
+    val point = req.inputPoint.map(_.to4326)
     driverCopy(layers) match {
-      case Some(corpus) => Left(localPage(layers.sparkSession, corpus, filters, dist, req))
+      case Some(corpus) => Left(corpus.page(layers.sparkSession, req, probes, point))
       case None =>
-        val ranked = filters.foldLeft(layers)(_.filter(_)).withColumn("dist", dist)
+        val filters =
+          (if (probes.nonEmpty) Seq(lower(col("type")).isin(probes: _*)) else Nil) ++
+            point.map(p => st_intersects(col("geom"), st_point(lit(p.longitude), lit(p.latitude))))
+        val ranked = filters.foldLeft(layers)(_.filter(_))
+          .withColumn("dist", cosine_distance(col("embeddings"), vector_lit(req.probe)))
         Right(
           if (req.skip <= DeepSkipThreshold)
             ranked
@@ -155,29 +159,31 @@ object Search {
   }
 
   /** The largest cached corpus, in cached bytes, that is answered from a
-    * driver copy. Measured on 4 cores (CHANGES.md): the driver path costs
-    * ~10 ms of Catalyst passes plus ~4 us a row, the distributed path
-    * 70-130 ms at any of these sizes, so they cross at 29-31 MB of cache
-    * (64- and 256-dim rows). The cap sits at about half the crossover,
-    * which also bounds the copy's share of the driver heap. Those figures
-    * predate the narrower page of [[localPage]]; the crossover has not been
-    * measured again since. */
-  val LocalMaxBytes: Long = 16L << 20
+    * driver copy. Measured on 4 cores (CHANGES.md, `Search.search` medians,
+    * half the requests with a type filter, a third with a point): a request
+    * from the prepared driver copy costs ~0.3 us a row at 64 dims and
+    * ~1.1 us at 1024, the distributed plan over the cache 21-50 ms at any
+    * size tried, so they cross at ~61 MB of cache (64 dims), over 40 MB
+    * (256) and ~145 MB (1024). The cap sits at about half the lowest
+    * crossover; a copy that size is under 1% of the serving JVM's default
+    * 4 GiB heap. */
+  val LocalMaxBytes: Long = 32L << 20
 
-  /** The numbered rows of each small corpus, keyed weakly on what owns
-    * them: a cache entry's buffers (`unpersist` drops the entry, so a later
-    * request over the same Dataset goes back to the distributed plan and
-    * the copy becomes garbage with the buffers) or, for a `LocalRelation`
-    * corpus, its Dataset's QueryExecution. Both keys compare by identity. */
-  private val driverCopies = new java.util.WeakHashMap[AnyRef, IndexedSeq[InternalRow]]()
+  /** The driver copy of each small corpus, keyed weakly on what owns it: a
+    * cache entry's buffers (`unpersist` drops the entry, so a later request
+    * over the same Dataset goes back to the distributed plan and the copy,
+    * with its prepared shapes, becomes garbage with the buffers) or, for a
+    * `LocalRelation` corpus, its Dataset's QueryExecution. Both keys
+    * compare by identity. */
+  private val driverCopies = new java.util.WeakHashMap[AnyRef, DriverCopy]()
 
-  /** The corpus as a `LocalRelation` when requests over it take the driver
-    * path: the rows of `layers` itself when it is one, else of its cache
-    * entry when that is fully materialized and under [[LocalMaxBytes]]
-    * (collected with one job). The rows are copied once per corpus, each
-    * with its ordinal appended as a last, non-null int column, so a page
-    * can rank `(ordinal, id, dist)` alone and fetch its text by ordinal. */
-  private def driverCopy(layers: DataFrame): Option[LocalRelation] = {
+  /** The driver copy requests over `layers` are answered from: the rows of
+    * `layers` itself when it is a `LocalRelation`, else of its cache entry
+    * when that is fully materialized and under [[LocalMaxBytes]] (collected
+    * with one job). The rows are copied once per corpus, each with its
+    * ordinal appended as a last, non-null int column, so a page can rank
+    * `(ordinal, id, dist)` alone and fetch its text by ordinal. */
+  private def driverCopy(layers: DataFrame): Option[DriverCopy] = {
     val analyzed = layers.queryExecution.analyzed
     val source: Option[(AnyRef, () => Seq[InternalRow])] = analyzed match {
       case local: LocalRelation => Some((layers.queryExecution, () => local.data))
@@ -197,18 +203,17 @@ object Search {
         }
     }
     source.map { case (key, rows) =>
-      val output = analyzed.output :+ AttributeReference("__ordinal", IntegerType, nullable = false)()
-      val numbered = driverCopies.synchronized {
+      driverCopies.synchronized {
         Option(driverCopies.get(key)).getOrElse {
+          val output = analyzed.output :+ AttributeReference("__ordinal", IntegerType, nullable = false)()
           val withOrdinal = UnsafeProjection.create(output, output)
-          val copy = rows().iterator.zipWithIndex.map { case (r, i) =>
+          val copy = new DriverCopy(output, rows().iterator.zipWithIndex.map { case (r, i) =>
             withOrdinal(new JoinedRow(r, InternalRow(i))).copy(): InternalRow
-          }.toIndexedSeq
+          }.toArray)
           driverCopies.put(key, copy)
           copy
         }
       }
-      LocalRelation(output, numbered)
     }
   }
 
@@ -216,39 +221,109 @@ object Search {
     * for it; true when requests over `layers` take the driver path. */
   def collectDriverCopy(layers: DataFrame): Boolean = driverCopy(layers).isDefined
 
-  /** One page from a driver copy: the request's filters and distance as a
-    * Filter + Project of `(ordinal, id, dist)` over the copy, folded into a
-    * `LocalRelation` of candidates by Spark's `ConvertToLocalRelation` (no
-    * job runs), ordered by Spark's (dist, id) ordering and sliced to
-    * [skip, skip + limit); only the page's rows have their text fields
-    * projected, fetched by ordinal. The plan is analysed over a row-less
-    * twin of the copy and the rows go in after: every analyzer and
-    * optimizer pass over a `LocalRelation` walks its rows, which made those
-    * passes, not the request's own evaluation, the cost of a request. */
-  private def localPage(spark: SparkSession, corpus: LocalRelation, filters: Seq[Column],
-                        dist: Column, req: SearchRequest): LocalRelation = {
-    val shape = LocalRelation(corpus.output)
-    val filtered = filters.map(expression(spark, _)).reduceOption(And(_, _))
-      .fold[LogicalPlan](shape)(Filter(_, shape))
-    // the text fields are in the analysed list only to resolve them
-    val Project(list, child) = dataFrame(spark, Project(
-      TextFields.map(UnresolvedAttribute.quoted) :+ corpus.output.last :+
-        Alias(expression(spark, dist), "dist")(), filtered)).queryExecution.analyzed: @unchecked
-    val ranked = Project(Seq(list(TextFields.size), list.head, list.last), child)
-      .transformUp { case _: LocalRelation => corpus }
-    // the rule folds one operator a pass: the Filter, then the Project
-    val (out, rows) = ConvertToLocalRelation(ConvertToLocalRelation(ranked)) match {
-      case candidates: LocalRelation => (candidates.output, candidates.data.toArray)
-      case unfolded => // an expression the rule cannot evaluate: run it as a query
-        val exec = dataFrame(spark, unfolded).queryExecution.executedPlan
-        (exec.output, exec.executeCollect())
+  /** A corpus's numbered rows and the request shapes prepared over them.
+    * The query has one shape in four variants (type filter or not, point
+    * or not); each is analysed and bound once, on its first request, over
+    * a parameter row joined to each corpus row. */
+  private final class DriverCopy(output: Seq[Attribute], rows: Array[InternalRow]) {
+    private val shapes = new Array[Shape](4)
+
+    def page(spark: SparkSession, req: SearchRequest, probes: Seq[String],
+             point: Option[Point]): LocalRelation = {
+      val variant = (if (probes.nonEmpty) 1 else 0) + (if (point.isDefined) 2 else 0)
+      val shape = synchronized {
+        if (shapes(variant) == null)
+          shapes(variant) = new Shape(spark, output, probes.nonEmpty, point.isDefined)
+        shapes(variant)
+      }
+      shape.scans.get.page(rows, req, probes, point)
     }
-    java.util.Arrays.sort(rows, RowOrdering.create(
-      Seq(SortOrder(out(2), Ascending), SortOrder(out(1), Ascending)), out))
-    val text = list.take(TextFields.size).map(_.toAttribute)
-    val toText = UnsafeProjection.create(text, corpus.output)
-    val page = rows.slice(req.skip, math.min(rows.length.toLong, req.skip.toLong + req.limit).toInt)
-    LocalRelation(text, page.map(r => toText(corpus.data(r.getInt(0))).copy()).toSeq)
+  }
+
+  /** One prepared variant: the filter and the `(ordinal, id, dist)` ranking
+    * as bound expressions over `params ++ corpus`, where the parameter row
+    * holds the probe (`array<float>`), the lowered type list
+    * (`array<string>`) and the point's lon/lat. Spark's codegen'd
+    * predicates and projections are mutable, so each thread scans through
+    * its own instances. */
+  private final class Shape(spark: SparkSession, val output: Seq[Attribute],
+                            types: Boolean, point: Boolean) {
+    private val params = Seq(
+      AttributeReference("__probe", ArrayType(FloatType, containsNull = false), nullable = false)(),
+      AttributeReference("__types", ArrayType(StringType, containsNull = false), nullable = false)(),
+      AttributeReference("__lon", DoubleType, nullable = false)(),
+      AttributeReference("__lat", DoubleType, nullable = false)())
+    val input: Seq[Attribute] = params ++ output
+
+    // analysed once, over a row-less relation of the parameters and the
+    // corpus; the text fields are in the list to resolve them by name
+    private val Project(list, child) = {
+      val param = params.map(column)
+      val filters =
+        (if (types) Seq(array_contains(param(1), lower(col("type")))) else Nil) ++
+          (if (point) Seq(st_intersects(col("geom"), st_point(param(2), param(3)))) else Nil)
+      val shape = LocalRelation(input)
+      val filtered = filters.map(expression(spark, _)).reduceOption(And(_, _))
+        .fold[LogicalPlan](shape)(Filter(_, shape))
+      dataFrame(spark, Project(TextFields.map(UnresolvedAttribute.quoted) :+ output.last :+
+        Alias(expression(spark, cosine_distance(col("embeddings"), param(0))), "dist")(),
+        filtered)).queryExecution.analyzed
+    }: @unchecked
+    val condition: Option[Expression] = child match {
+      case Filter(c, _) => Some(c)
+      case _ => None
+    }
+    val text: Seq[Attribute] = list.take(TextFields.size).map(_.toAttribute)
+    val rank: Seq[Expression] = Seq(list(TextFields.size), list.head, list.last)
+
+    val scans: ThreadLocal[Scan] = ThreadLocal.withInitial(() => new Scan(this))
+  }
+
+  /** A thread's instances of one prepared shape, and the parameter row
+    * they read. It keeps no reference to the shape, whose thread-local is
+    * then collected with the copy. */
+  private final class Scan(shape: Shape) {
+    private val text = shape.text
+    private val params = new GenericInternalRow(4)
+    private val joined = new JoinedRow(params, null)
+    private val keep: BasePredicate = shape.condition.map { c =>
+      val p = Predicate.create(c, shape.input); p.initialize(0); p
+    }.orNull
+    private val rank = UnsafeProjection.create(shape.rank, shape.input)
+    private val ranked = shape.rank.zipWithIndex.map { case (e, i) =>
+      BoundReference(i, e.dataType, e.nullable) }
+    // Spark's (dist, id) order; the ordinal settles rows equal on both, as
+    // a stable sort of the scan order would
+    private val order = RowOrdering.create(
+      Seq(ranked(2), ranked(1), ranked(0)).map(SortOrder(_, Ascending)), Nil)
+    private val toText = UnsafeProjection.create(shape.text, shape.output)
+
+    /** Fill the parameter row, scan the copy keeping the best
+      * `skip + limit` candidates in a bounded heap, and project the text
+      * of the page's rows, fetched by ordinal. */
+    def page(rows: Array[InternalRow], req: SearchRequest, probes: Seq[String],
+             point: Option[Point]): LocalRelation = {
+      params.update(0, UnsafeArrayData.fromPrimitiveArray(req.probe))
+      params.update(1, new GenericArrayData(probes.map(UTF8String.fromString).toArray[Any]))
+      point.foreach { p => params.setDouble(2, p.longitude); params.setDouble(3, p.latitude) }
+      val k = math.min(req.skip.toLong + req.limit, rows.length.toLong).toInt
+      // the worst kept candidate on top
+      val heap = new java.util.PriorityQueue[InternalRow](math.max(k, 1), order.reverse)
+      var i = 0
+      while (i < rows.length) {
+        joined.withRight(rows(i))
+        if (keep == null || keep.eval(joined)) {
+          val r = rank(joined)
+          if (heap.size < k) heap.add(r.copy())
+          else if (order.compare(r, heap.peek) < 0) { heap.poll(); heap.add(r.copy()) }
+        }
+        i += 1
+      }
+      val best = heap.toArray(new Array[InternalRow](0))
+      java.util.Arrays.sort(best, order)
+      LocalRelation(text,
+        best.drop(req.skip).map(r => toText(rows(r.getInt(0))).copy(): InternalRow).toSeq)
+    }
   }
 
   /** Deep-skip pagination: a range-partitioned global sort plus

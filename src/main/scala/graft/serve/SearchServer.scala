@@ -29,8 +29,9 @@ import graft.operators.Search.{Point, SearchRequest}
   * and responses are limit<=10 rows. `Search.plan` answers a small corpus
   * from a driver copy with no Spark job, and scans a larger one with one
   * job per request. Handlers run on a bounded pool; concurrent requests
-  * are safe (the driver copy is shared read-only, and Spark actions are
-  * thread-safe on a shared session).
+  * are safe (the driver copy is shared read-only, each handler thread
+  * scans it through its own prepared predicate and projections, and Spark
+  * actions are thread-safe on a shared session).
   */
 object SearchServer {
 

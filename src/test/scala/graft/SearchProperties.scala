@@ -16,7 +16,9 @@ import graft.operators.Search.{Point, SearchRequest}
   * and as a parquet-backed copy (the distributed path, deep-skip
   * pagination included). Corpora hold exact distance ties, zero vectors
   * (NaN distances), and ids outside the BMP, where UTF-8 byte order and
-  * `String.compareTo` disagree; requests cover empty and `""`-only type
+  * `String.compareTo` disagree. Every case holds two requests of each of
+  * the query's four variants (type filter yes/no x point yes/no), which
+  * the driver path prepares apart; requests cover empty and `""`-only type
   * filters, EPSG:3857 points, shallow and deep skips, and limits 1-10.
   * Each case writes a corpus of ~1,000 rows, so few cases run. A second
   * property pins the page's edges over small corpora of tied distances.
@@ -73,29 +75,43 @@ object SearchProperties extends Properties("graft.search") {
     Row(s"$prefix${i % 97}-$i", s"name-$i", t, s"desc-$i", s"u/$i", s"m-$i", v.toSeq, g)
   })
 
-  private val genRequest: Gen[SearchRequest] = for {
+  /** The query's four variants: type filter yes/no x point yes/no. */
+  private val variants = for (t <- Seq(false, true); p <- Seq(false, true)) yield (t, p)
+
+  /** A request of one variant. Without a type filter the list is absent,
+    * empty or only `""` (all omit the clause); with one it holds at least
+    * one non-empty type, upper-cased. */
+  private def genRequest(typed: Boolean, located: Boolean): Gen[SearchRequest] = for {
     probe <- Gen.frequency(4 -> genVec, 1 -> Gen.const(Array.fill(4)(0f)))
-    typeFilter <- Gen.oneOf(
-      Gen.const(None), Gen.const(Some(Nil)), Gen.const(Some(Seq(""))),
-      Gen.someOf(types).map(ts => Some(ts.toSeq.map(_.toUpperCase(java.util.Locale.ROOT)))))
-    point <- Gen.oneOf(
-      Gen.const(None),
-      Gen.const(Some(Point(-81.27, 28.80))),
-      Gen.const(Some(Point(0.25, -0.5))),
-      Gen.zip(Gen.choose(-150.0, 150.0), Gen.choose(-80.0, 80.0))
-        .map { case (x, y) => Some(Point(x, y, epsg = 3857)) })
+    typeFilter <-
+      if (typed) Gen.atLeastOne(types.filter(_.nonEmpty)).flatMap(ts =>
+        Gen.oneOf(ts.toSeq, ts.toSeq :+ "").map(t => Some(t.map(_.toUpperCase(java.util.Locale.ROOT)))))
+      else Gen.oneOf(None, Some(Nil), Some(Seq("")))
+    point <-
+      if (located) Gen.oneOf(
+        Gen.const(Point(-81.27, 28.80)),
+        Gen.const(Point(0.25, -0.5)),
+        Gen.zip(Gen.choose(-150.0, 150.0), Gen.choose(-80.0, 80.0))
+          .map { case (x, y) => Point(x, y, epsg = 3857) }).map(Some(_))
+      else Gen.const(None)
     skip <- Gen.frequency(
       3 -> Gen.choose(0, 30),
       1 -> Gen.choose(Search.DeepSkipThreshold + 1, Search.DeepSkipThreshold + 40))
     limit <- Gen.choose(Search.MinLimit, Search.MaxLimit)
   } yield SearchRequest(probe, typeFilter, point, skip, limit)
 
+  /** Two requests of each variant, in a shuffled order. */
+  private val genRequests: Gen[Seq[SearchRequest]] =
+    Gen.sequence[Seq[SearchRequest], SearchRequest](
+      variants.flatMap { case (t, p) => Seq.fill(2)(genRequest(t, p)) })
+      .flatMap(rs => Gen.pick(rs.size, rs).map(_.toSeq))
+
   /** Edge cases of the driver page, over a corpus of a few dozen rows
     * whose vectors take two values, so nearly every distance is shared and
-    * the id tie-break orders the page. Requests either keep every row (so
-    * the candidate count is the corpus size, and skips sit just before, at
-    * and past it, on both the offset and the deep-skip paths) or carry a
-    * type filter or a point that keeps no row. */
+    * the id tie-break orders the page. Each variant is asked with skips
+    * just before, at and past the corpus size (so past its candidates), on
+    * both the offset and the deep-skip paths, and with filters that keep
+    * most rows, some or none. */
   private val genTieCorpus: Gen[Corpus] = for {
     n <- Gen.choose(12, 60)
     rows <- Gen.listOfN(n, for {
@@ -108,18 +124,17 @@ object SearchProperties extends Properties("graft.search") {
       v.toSeq, g)
   })
 
-  private def genEdgeRequest(n: Int): Gen[SearchRequest] = for {
+  private def genEdgeRequest(n: Int, typed: Boolean, located: Boolean): Gen[SearchRequest] = for {
     probe <- genVec
     limit <- Gen.choose(Search.MinLimit, Search.MaxLimit)
-    (typeFilter, point, skip) <- Gen.oneOf(
-      Gen.oneOf(0, n - limit, n - 1, n, n + 1, Search.DeepSkipThreshold + 1)
-        .map(skip => (None, None, math.max(0, skip))),
-      Gen.oneOf(
-        (Some(Seq("no such type")), None),
-        (None, Some(Point(50.0, 50.0))),
-        (Some(Seq("TABLE")), Some(Point(50.0, 50.0))))
-        .flatMap { case (t, p) => Gen.oneOf(0, n).map(skip => (t, p, skip)) })
-  } yield SearchRequest(probe, typeFilter, point, skip, limit)
+    skip <- Gen.oneOf(0, n - limit, n - 1, n, n + 1, Search.DeepSkipThreshold + 1)
+    typeFilter <-
+      if (typed) Gen.oneOf(Seq("no such type"), Seq("TABLE"), types.filter(_.nonEmpty)).map(Some(_))
+      else Gen.const(None)
+    point <-
+      if (located) Gen.oneOf(Point(50.0, 50.0), Point(-81.27, 28.80), Point(0.25, -0.5)).map(Some(_))
+      else Gen.const(None)
+  } yield SearchRequest(probe, typeFilter, point, math.max(0, skip), limit)
 
   /** Searches `rows` as a `LocalRelation`, as a materialized cache (both
     * the driver path) and as a parquet copy (the distributed path), and
@@ -149,10 +164,13 @@ object SearchProperties extends Properties("graft.search") {
   }
 
   property("driver-path pages equal distributed pages") =
-    forAllNoShrink(genCorpus, Gen.listOfN(6, genRequest))(pagesAgree)
+    forAllNoShrink(genCorpus, genRequests)(pagesAgree)
 
   property("driver-path pages equal distributed pages: ties, skips at and past the candidates, empty filters") =
-    forAllNoShrink(genTieCorpus.flatMap(c => Gen.listOfN(8, genEdgeRequest(c.rows.size)).map(c -> _))) {
+    forAllNoShrink(genTieCorpus.flatMap { c =>
+      Gen.sequence[Seq[SearchRequest], SearchRequest](variants.flatMap { case (t, p) =>
+        Seq.fill(2)(genEdgeRequest(c.rows.size, t, p)) }).map(c -> _)
+    }) {
       case (corpus, reqs) => pagesAgree(corpus, reqs)
     }
 }

@@ -209,4 +209,52 @@ class SearchSpec extends AnyFunSuite {
     assert(resp.layers.isEmpty)
     assert(resp.error.exists(_.contains("dimension mismatch")), resp.error)
   }
+
+  test("driver path: 8 threads get the pages a sequential run gets, on every variant") {
+    // 400 rows over the three polygons and four types; each thread asks 50
+    // requests mixing the four variants (type filter yes/no x point yes/no)
+    val rng = new scala.util.Random(11)
+    val polys = Seq(PolySanford, PolyKelso, PolyOrigin)
+    val kinds = Seq("Feature Layer", "Table", "Raster Layer", "feature layer")
+    val rows = (0 until 400).map { i =>
+      layer(f"C$i%03d", kinds(i % 4), polys(i % 3), Array.fill(4)(rng.nextInt(5) - 2f))
+    }
+    val corpus = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).repartition(2).cache()
+    val points = Seq(Point(-81.27, 28.80), Point(-122.9, 46.1), Point(0.0, 0.0))
+    val reqs = Vector.tabulate(8, 50) { (t, k) =>
+      SearchRequest(Array.fill(4)(rng.nextInt(5) - 2f),
+        typeFilter = if ((t + k) % 2 == 0) Some(Seq(kinds(rng.nextInt(4)).toUpperCase(java.util.Locale.ROOT))) else None,
+        inputPoint = if ((t + k) / 2 % 2 == 0) Some(points(rng.nextInt(3))) else None,
+        skip = rng.nextInt(40), limit = 1 + rng.nextInt(Search.MaxLimit))
+    }
+    try {
+      corpus.count()
+      assert(Search.collectDriverCopy(corpus))
+      // the threads meet the copy's shapes unprepared
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+      val concurrent = try {
+        val futures = reqs.map(rs => pool.submit(new java.util.concurrent.Callable[Vector[Search.SearchResponse]] {
+          def call(): Vector[Search.SearchResponse] = { start.await(); rs.map(Search.search(corpus, _)) }
+        }))
+        start.countDown()
+        futures.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+      } finally pool.shutdownNow()
+      val sequential = reqs.map(_.map(Search.search(corpus, _)))
+      assert(sequential.flatten.forall(_.error.isEmpty))
+      assert(sequential.flatten.exists(_.layers.get.nonEmpty))
+      for (t <- 0 until 8; k <- 0 until 50)
+        assert(concurrent(t)(k) === sequential(t)(k), s"thread $t request $k: ${reqs(t)(k)}")
+    } finally corpus.unpersist(blocking = true)
+  }
+
+  test("driver path: a wrong-width probe lands in the envelope on every variant") {
+    for (typeFilter <- Seq(None, Some(Seq("feature layer")));
+         point <- Seq(None, Some(Point(-81.27, 28.80)))) {
+      // each variant keeps L1 at least, so the distance is evaluated
+      val resp = Search.search(layers, SearchRequest(Array(1f, 0f, 0f), typeFilter, point))
+      assert(resp.layers.isEmpty, s"$typeFilter $point")
+      assert(resp.error.exists(_.contains("dimension mismatch")), s"$typeFilter $point: ${resp.error}")
+    }
+  }
 }

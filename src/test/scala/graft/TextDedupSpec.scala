@@ -252,6 +252,22 @@ class TextDedupSpec extends AnyFunSuite {
     }
   }
 
+  test("html_to_markdown fast path: text without '<' or '&' is exactly the regex collapse (seeded)") {
+    // every rule needs a '<' and every entity an '&', so the full kernel
+    // reduces such text to \s+ -> ' ' then trim; the fast path must agree on
+    // Java's six \s characters, the C0 controls trim strips but \s does not
+    // match, U+00A0/U+0085/U+2028 (neither), and surrogate pairs
+    val alphabet = Seq(" ", "\t", "\n", "\u000B", "\f", "\r", "\u0000", "\u0001", "\u001C",
+      "\u001F", "\u007F", "\u00A0", "\u0085", "\u2028", "a", "Z", "*", "#", "é", "😀")
+    val rng = new scala.util.Random(2023)
+    for (n <- 0 until 2000) {
+      val s = Seq.fill(rng.nextInt(24))(alphabet(rng.nextInt(alphabet.size))).mkString
+      val got = graft.functions.HtmlToMarkdown.convert(
+        org.apache.spark.unsafe.types.UTF8String.fromString(s)).toString
+      assert(got === s.replaceAll("\\s+", " ").trim, s"case $n: ${s.map(_.toInt).mkString(",")}")
+    }
+  }
+
   test("html_to_markdown property: every supported inline tag marks arbitrary tag-free content (seeded)") {
     val rng = new scala.util.Random(7)
     val inner = Seq("x", "two words", "punct, and.", "1. not a list", "d-ash")

@@ -1121,6 +1121,51 @@ class VectorSpec extends AnyFunSuite {
     assert(shared < 4, s"orthogonal vectors shared $shared of 16 bands")
   }
 
+  test("hyperplane_bands kernel equals a naive per-plane reference, bit for bit (seeded)") {
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import graft.functions.{HyperplaneBands, SketchHash}
+    // plane p is the stream's values p*dim ... p*dim+dim-1, one plane at a
+    // time, each dot summed over ascending components with no term skipped
+    def reference(x: Array[Double], bands: Int, rows: Int, seed: Long): Seq[Long] = {
+      val dim = x.length
+      def gaussian(i: Long): Double = {
+        val h1 = SketchHash.mix(seed + SketchHash.Golden * (2L * i + 1))
+        val h2 = SketchHash.mix(seed + SketchHash.Golden * (2L * i + 2))
+        val u1 = ((h1 >>> 11) + 1).toDouble / (1L << 53).toDouble
+        val u2 = (h2 >>> 11).toDouble / (1L << 53).toDouble
+        math.sqrt(-2.0 * math.log(u1)) * math.cos(2.0 * math.Pi * u2)
+      }
+      (0 until bands).map { b =>
+        (0 until rows).foldLeft(0L) { (bucket, r) =>
+          val p = b * rows + r
+          var dot = 0.0
+          for (j <- 0 until dim) dot += x(j) * gaussian(p.toLong * dim + j)
+          if (dot >= 0.0) bucket | (1L << r) else bucket
+        }
+      }
+    }
+    val rng = new scala.util.Random(20231101)
+    def component(): Double = rng.nextInt(6) match {
+      case 0 | 1 => 0.0
+      case 2 => -0.0
+      case 3 => rng.nextGaussian() * math.pow(10, rng.nextInt(21) - 10)
+      case _ => rng.nextGaussian()
+    }
+    for (n <- 0 until 120) {
+      val dim = Seq(3, 4, 17, 64, 256, 1024)(n % 6)
+      val (bands, rows) = Seq((4, 3), (8, 8), (16, 12))(n % 3)
+      val seed = rng.nextLong()
+      val x = Array.fill(dim)(component())
+      val isDouble = n % 2 == 0
+      val arr =
+        if (isDouble) new GenericArrayData(x)
+        else new GenericArrayData(x.map(_.toFloat))
+      val want = reference(if (isDouble) x else x.map(_.toFloat.toDouble), bands, rows, seed)
+      val got = HyperplaneBands.compute(arr, isDouble, bands, rows, seed).toLongArray().toSeq
+      assert(got === want, s"case $n: dim $dim, $bands x $rows, seed $seed, double $isDouble")
+    }
+  }
+
   test("LSH near-dup pairs equal exact all-pairs on document vectors (sf0.001 + sf0.01)") {
     for (dir <- Seq(sfDir, "/root/testdata/sf0.01")) {
       val dv = graft.queries.Vectors.docVectors(spark, dir)
