@@ -3,6 +3,7 @@ package graft.functions
 import org.locationtech.jts.geom.{Coordinate, Geometry, GeometryFactory, PrecisionModel}
 import org.locationtech.jts.io.{WKBReader, WKBWriter, WKTReader, WKTWriter}
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -53,6 +54,137 @@ private[graft] object Geo {
     */
   def transformPoint(x: Double, y: Double, srcEpsg: Int, dstEpsg: Int): (Double, Double) =
     Crs.transform(x, y, srcEpsg, dstEpsg)
+}
+
+/** Whether a point lies outside a WKB geometry's envelope, read from the
+  * bytes without building the geometry: the filter step of a point
+  * predicate (PostGIS tests the bounding box before the exact test).
+  *
+  * The walk reads what JTS's `WKBReader` (non-strict, as [[Geo]] uses it)
+  * reads: either byte order per (sub)geometry, the EWKB SRID, Z and M flags
+  * and the ISO Z/M type codes, and every type, Multi* and
+  * GeometryCollection members included. It vouches for an envelope only
+  * when that reader would build the geometry from the bytes and the
+  * geometry's coordinates are exactly the x/y pairs walked; so it gives up
+  * (the caller then runs JTS, which raises or answers as before) on an
+  * unknown byte order or type, a Multi* member of the wrong type, a count
+  * out of the reader's range, a truncation, nesting deeper than
+  * [[MaxDepth]], any empty part, or a NaN x or y. Trailing bytes are
+  * ignored, as the reader ignores them. Allocates nothing.
+  */
+private[graft] object WkbEnvelope {
+  private final val Fail = -1L
+  /** The point lies in the envelope of one part's coordinates: the rest of
+    * the bytes need not be read, since the answer (JTS) is the same. */
+  private final val Inside = -2L
+  /** The side bits of a point inside the envelope (see [[coords]]). */
+  private final val AllSides = 15
+  private final val MaxDepth = 32
+
+  /** True when `(x, y)` lies outside the envelope of the geometry `wkb`
+    * encodes; false when it lies inside or on the border, when either
+    * coordinate is NaN, or when the walk gives up. */
+  def excludes(wkb: Array[Byte], x: Double, y: Double): Boolean =
+    !x.isNaN && !y.isNaN && {
+      val r = geometry(wkb, 0, x, y, 0, 0)
+      r >= 0 && (r >>> 32).toInt != AllSides
+    }
+
+  // A walk step returns the position after what it read (low 32 bits) and
+  // the side bits of the coordinates it read (bits 32-35), or Fail or Inside.
+
+  /** The geometry at `at`; `kind` is the WKB type a Multi* member must
+    * have, 0 for any. */
+  private def geometry(b: Array[Byte], at: Int, x: Double, y: Double, kind: Int, depth: Int): Long = {
+    if (depth > MaxDepth || at > b.length - 5) return Fail
+    val little = b(at) match {
+      case 1 => true
+      case 0 => false
+      case _ => return Fail // the reader would keep the previous order
+    }
+    val t = int(b, at + 1, little)
+    val code = t & 0xffff
+    val iso = code / 1000
+    val dim = 2 +
+      (if ((t & 0x80000000) != 0 || iso == 1 || iso == 3) 1 else 0) +
+      (if ((t & 0x40000000) != 0 || iso == 2 || iso == 3) 1 else 0)
+    var p = at + 5
+    if ((t & 0x20000000) != 0) { // EWKB SRID
+      if (p > b.length - 4) return Fail
+      p += 4
+    }
+    val k = code % 1000
+    if (kind != 0 && k != kind) return Fail
+    k match {
+      case 1 => coords(b, p, 1, dim, little, x, y)
+      case 2 =>
+        val n = count(b, p, little)
+        if (n == 0) Fail else coords(b, p + 4, n, dim, little, x, y)
+      case 3 | 4 | 5 | 6 | 7 =>
+        val n = count(b, p, little)
+        if (n == 0) return Fail
+        p += 4
+        var sides = 0
+        var i = 0
+        while (i < n) {
+          val r =
+            if (k == 3) { // a ring
+              val m = count(b, p, little)
+              if (m == 0) Fail else coords(b, p + 4, m, dim, little, x, y)
+            } else geometry(b, p, x, y, if (k == 7) 0 else k - 3, depth + 1)
+          if (r < 0) return r
+          sides |= (r >>> 32).toInt
+          p = r.toInt
+          i += 1
+        }
+        (sides.toLong << 32) | p
+      case _ => Fail
+    }
+  }
+
+  /** A count field: the reader refuses one below 0 or above a byte-length
+    * eighth; 0 (an empty part) is refused here too. */
+  private def count(b: Array[Byte], at: Int, little: Boolean): Int =
+    if (at > b.length - 4) 0
+    else {
+      val n = int(b, at, little)
+      if (n < 0 || n > b.length / 8) 0 else n
+    }
+
+  /** `n` coordinates of `dim` ordinates each. Side bits: 1 when some x <= the
+    * point's x, 2 when some x >= it, 4 and 8 the same for y; all four are
+    * set exactly when the point lies in the closed envelope. */
+  private def coords(b: Array[Byte], at: Int, n: Int, dim: Int, little: Boolean,
+                     x: Double, y: Double): Long = {
+    val end = at.toLong + n.toLong * dim * 8
+    if (end > b.length) return Fail
+    var sides = 0
+    var p = at
+    while (p < end) {
+      val cx = double(b, p, little)
+      val cy = double(b, p + 8, little)
+      if (cx.isNaN || cy.isNaN) return Fail
+      if (cx <= x) sides |= 1
+      if (cx >= x) sides |= 2
+      if (cy <= y) sides |= 4
+      if (cy >= y) sides |= 8
+      if (sides == AllSides) return Inside
+      p += dim * 8
+    }
+    (sides.toLong << 32) | end
+  }
+
+  private def int(b: Array[Byte], at: Int, little: Boolean): Int =
+    if (little)
+      (b(at) & 0xff) | (b(at + 1) & 0xff) << 8 | (b(at + 2) & 0xff) << 16 | b(at + 3) << 24
+    else
+      b(at) << 24 | (b(at + 1) & 0xff) << 16 | (b(at + 2) & 0xff) << 8 | (b(at + 3) & 0xff)
+
+  private def double(b: Array[Byte], at: Int, little: Boolean): Double = {
+    val hi = int(b, if (little) at + 4 else at, little)
+    val lo = int(b, if (little) at else at + 4, little)
+    java.lang.Double.longBitsToDouble(hi.toLong << 32 | (lo & 0xffffffffL))
+  }
 }
 
 /** st_point(lon, lat) -> WKB point (reference F2: ST_MakePoint). */
@@ -270,28 +402,93 @@ abstract class GeoBinaryExpression extends BinaryExpression with CodegenFallback
   }
 }
 
-/** OGC intersects — boundary-inclusive (reference P4/F4). */
-case class STIntersects(left: Expression, right: Expression) extends GeoBinaryExpression {
-  override def prettyName: String = "st_intersects"
+/** A predicate that is false whenever a point operand lies outside the
+  * other operand's envelope: st_intersects either way round,
+  * st_contains(geom, point) and st_within(point, geom). When the point is
+  * an `st_point(x, y)` call and the other operand is not constant, x and y
+  * are evaluated as doubles and never encoded, and the envelope is read
+  * from the other operand's WKB bytes per row ([[WkbEnvelope]]). A point
+  * outside answers false with no geometry built; a point inside, a NaN
+  * coordinate, an empty geometry or bytes the walk gives up on run the JTS
+  * evaluation as before, so every result and error is the old one (JTS
+  * answers false on a disjoint envelope before any other work). A constant
+  * point or a constant geometry runs JTS as before; for the latter,
+  * `SpatialFilterPushdown` derives range conditions from its envelope.
+  *
+  * Holds no mutable state: a codegen'd predicate's `references` share one
+  * instance among all the threads that evaluate it.
+  */
+abstract class GeoPointPredicate extends GeoBinaryExpression {
   override def dataType: DataType = BooleanType
+
+  /** Whether the point may be the left operand, and the right one. */
+  protected def pointMayBeLeft: Boolean
+  protected def pointMayBeRight: Boolean
+
+  // the st_point operand facing a non-constant one: 1 left, 2 right, 0 none
+  // (JTS as before)
+  @transient private lazy val pointSide: Int =
+    if (pointMayBeRight && right.isInstanceOf[STPoint] && !left.foldable) 2
+    else if (pointMayBeLeft && left.isInstanceOf[STPoint] && !right.foldable) 1
+    else 0
+  @transient private lazy val pointCall: STPoint = pointSide match {
+    case 1 => left.asInstanceOf[STPoint]
+    case 2 => right.asInstanceOf[STPoint]
+    case _ => null
+  }
+
+  /** With an `st_point` operand: the operands in BinaryExpression's order
+    * and null rule, the point's coordinates without its WKB. */
+  override def eval(input: InternalRow): Any = {
+    if (pointCall == null) return super.eval(input)
+    var other: Any = null
+    if (pointSide == 2) {
+      other = left.eval(input)
+      if (other == null) return null
+    }
+    val xv = pointCall.left.eval(input)
+    if (xv == null) return null
+    val yv = pointCall.right.eval(input)
+    if (yv == null) return null
+    if (pointSide == 1) {
+      other = right.eval(input)
+      if (other == null) return null
+    }
+    val x = xv.asInstanceOf[Double]
+    val y = yv.asInstanceOf[Double]
+    if (WkbEnvelope.excludes(other.asInstanceOf[Array[Byte]], x, y)) false
+    else {
+      val point = pointCall.nullSafeEval(xv, yv)
+      if (pointSide == 1) nullSafeEval(point, other) else nullSafeEval(other, point)
+    }
+  }
+}
+
+/** OGC intersects — boundary-inclusive (reference P4/F4). */
+case class STIntersects(left: Expression, right: Expression) extends GeoPointPredicate {
+  override def prettyName: String = "st_intersects"
+  protected def pointMayBeLeft: Boolean = true
+  protected def pointMayBeRight: Boolean = true
   protected def compute(a: Geometry, b: Geometry): Any = a.intersects(b)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
 /** OGC contains: a contains b. */
-case class STContains(left: Expression, right: Expression) extends GeoBinaryExpression {
+case class STContains(left: Expression, right: Expression) extends GeoPointPredicate {
   override def prettyName: String = "st_contains"
-  override def dataType: DataType = BooleanType
+  protected def pointMayBeLeft: Boolean = false
+  protected def pointMayBeRight: Boolean = true
   protected def compute(a: Geometry, b: Geometry): Any = a.contains(b)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
 
 /** OGC within: a within b. */
-case class STWithin(left: Expression, right: Expression) extends GeoBinaryExpression {
+case class STWithin(left: Expression, right: Expression) extends GeoPointPredicate {
   override def prettyName: String = "st_within"
-  override def dataType: DataType = BooleanType
+  protected def pointMayBeLeft: Boolean = true
+  protected def pointMayBeRight: Boolean = false
   protected def compute(a: Geometry, b: Geometry): Any = a.within(b)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)

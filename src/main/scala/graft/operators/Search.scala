@@ -126,13 +126,14 @@ object Search {
   /** Assemble the request's plan. Filters absent from the request are
     * omitted from the plan (not evaluated as no-ops) — reference P5.
     */
-  def plan(layers: DataFrame, req: SearchRequest): DataFrame =
+  def plan(layers: DataFrame, req: SearchRequest): DataFrame = {
+    validate(req) // request-level errors propagate (HTTP-422 analogue)
     page(layers, req).fold(dataFrame(layers.sparkSession, _), identity)
+  }
 
-  /** The request's page: computed on the driver when `layers` has a driver
-    * copy, else the distributed plan that computes it. */
+  /** A validated request's page: computed on the driver when `layers` has a
+    * driver copy, else the distributed plan that computes it. */
   private def page(layers: DataFrame, req: SearchRequest): Either[LocalRelation, DataFrame] = {
-    validate(req)
     // Locale.ROOT: Spark's lower() is locale-independent, so the client-side
     // probe lowering must be too (default-locale toLowerCase turns 'I' into
     // a dotless 'ı' under a Turkish JVM and silently matches nothing).
@@ -159,14 +160,18 @@ object Search {
   }
 
   /** The largest cached corpus, in cached bytes, that is answered from a
-    * driver copy. Measured on 4 cores (CHANGES.md, `Search.search` medians,
-    * half the requests with a type filter, a third with a point): a request
-    * from the prepared driver copy costs ~0.3 us a row at 64 dims and
-    * ~1.1 us at 1024, the distributed plan over the cache 21-50 ms at any
-    * size tried, so they cross at ~61 MB of cache (64 dims), over 40 MB
-    * (256) and ~145 MB (1024). The cap sits at about half the lowest
-    * crossover; a copy that size is under 1% of the serving JVM's default
-    * 4 GiB heap. */
+    * driver copy. Measured on 4 cores (CHANGES.md): the distributed plan
+    * over the cache costs 21-50 ms a request at any size tried, and a
+    * request from the prepared driver copy, with half the requests carrying
+    * a type filter and a third a point, ~0.3 us a row at 64 dims and
+    * ~1.1 us at 1024, so they cross at ~61 MB of cache (64 dims), over
+    * 40 MB (256) and ~145 MB (1024). Re-measured since point predicates
+    * reject on the envelope, over the search_small corpus and requests
+    * (2,000 rows, half with a type filter, half with a point), a request
+    * costs ~0.16 us a row at 64 dims and ~0.47 us at 1024 (0.22 and
+    * 0.73-0.81 us before), which moves the crossovers up. The cap sits at
+    * about half the lowest crossover; a copy that size is under 1% of the
+    * serving JVM's default 4 GiB heap. */
   val LocalMaxBytes: Long = 32L << 20
 
   /** The driver copy of each small corpus, keyed weakly on what owns it: a

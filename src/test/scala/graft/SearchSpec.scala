@@ -212,7 +212,9 @@ class SearchSpec extends AnyFunSuite {
 
   test("driver path: 8 threads get the pages a sequential run gets, on every variant") {
     // 400 rows over the three polygons and four types; each thread asks 50
-    // requests mixing the four variants (type filter yes/no x point yes/no)
+    // requests mixing the four variants (type filter yes/no x point yes/no),
+    // its points cycling through ones inside the polygons and ones outside
+    // their envelopes (near, on a border line's extension, far)
     val rng = new scala.util.Random(11)
     val polys = Seq(PolySanford, PolyKelso, PolyOrigin)
     val kinds = Seq("Feature Layer", "Table", "Raster Layer", "feature layer")
@@ -220,11 +222,13 @@ class SearchSpec extends AnyFunSuite {
       layer(f"C$i%03d", kinds(i % 4), polys(i % 3), Array.fill(4)(rng.nextInt(5) - 2f))
     }
     val corpus = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).repartition(2).cache()
-    val points = Seq(Point(-81.27, 28.80), Point(-122.9, 46.1), Point(0.0, 0.0))
+    val inside = Seq(Point(-81.27, 28.80), Point(-122.9, 46.1), Point(0.0, 0.0))
+    val outside = Seq(Point(-81.0, 28.80), Point(-122.8, 46.3), Point(50.0, -30.0))
+    val points = inside.zip(outside).flatMap { case (a, b) => Seq(a, b) }
     val reqs = Vector.tabulate(8, 50) { (t, k) =>
       SearchRequest(Array.fill(4)(rng.nextInt(5) - 2f),
         typeFilter = if ((t + k) % 2 == 0) Some(Seq(kinds(rng.nextInt(4)).toUpperCase(java.util.Locale.ROOT))) else None,
-        inputPoint = if ((t + k) / 2 % 2 == 0) Some(points(rng.nextInt(3))) else None,
+        inputPoint = if ((t + k) / 2 % 2 == 0) Some(points((t + k) / 4 % points.size)) else None,
         skip = rng.nextInt(40), limit = 1 + rng.nextInt(Search.MaxLimit))
     }
     try {
@@ -243,6 +247,10 @@ class SearchSpec extends AnyFunSuite {
       val sequential = reqs.map(_.map(Search.search(corpus, _)))
       assert(sequential.flatten.forall(_.error.isEmpty))
       assert(sequential.flatten.exists(_.layers.get.nonEmpty))
+      for (t <- 0 until 8; k <- 0 until 50 if reqs(t)(k).inputPoint.exists(outside.contains))
+        assert(sequential(t)(k).layers.get.isEmpty, s"thread $t request $k: ${reqs(t)(k).inputPoint}")
+      for (t <- 0 until 8)
+        assert(reqs(t).flatMap(_.inputPoint).toSet === points.toSet, s"thread $t")
       for (t <- 0 until 8; k <- 0 until 50)
         assert(concurrent(t)(k) === sequential(t)(k), s"thread $t request $k: ${reqs(t)(k)}")
     } finally corpus.unpersist(blocking = true)

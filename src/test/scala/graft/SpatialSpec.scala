@@ -64,6 +64,45 @@ class SpatialSpec extends AnyFunSuite {
     assert(r.isNullAt(0))
   }
 
+  test("point predicates: a point outside the envelope answers false without encoding the point") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
+    import org.apache.spark.sql.types.{BinaryType, DoubleType}
+    import graft.functions.{STIntersects, STPoint}
+    val encoded = new java.util.concurrent.atomic.AtomicInteger
+    // st_point that counts the WKB it builds
+    class CountingPoint(x: Expression, y: Expression) extends STPoint(x, y) {
+      override def nullSafeEval(lon: Any, lat: Any): Any = {
+        encoded.incrementAndGet(); super.nullSafeEval(lon, lat)
+      }
+    }
+    val pred = STIntersects(BoundReference(0, BinaryType, nullable = true), new CountingPoint(
+      BoundReference(1, DoubleType, nullable = true), BoundReference(2, DoubleType, nullable = true)))
+    val sanford = Geo.toWkb(Geo.fromWkt(PolySanford))
+    assert(pred.eval(InternalRow(sanford, -122.9, 46.15)) == false) // Kelso: outside
+    assert(encoded.get === 0)
+    assert(pred.eval(InternalRow(sanford, -81.25, 28.7)) == true)   // on an edge: JTS decides
+    assert(encoded.get === 1)
+    assert(pred.eval(InternalRow(sanford, -81.1, 29.5)) == false)   // in x, above in y
+    assert(encoded.get === 1)
+  }
+
+  test("point predicates: truncated WKB raises JTS's error with the point outside the envelope") {
+    import spark.implicits._
+    val whole = Geo.toWkb(Geo.fromWkt(PolySanford))
+    val truncated = java.util.Arrays.copyOf(whole, whole.length - 8) // the last y
+    val jts = intercept[Exception](Geo.fromWkb(truncated))
+    val df = Seq((truncated, -122.9, 46.15)).toDF("geom", "lon", "lat")
+    for (pred <- Seq(st_intersects(col("geom"), st_point(col("lon"), col("lat"))),
+                     st_intersects(st_point(col("lon"), col("lat")), col("geom")),
+                     st_within(st_point(col("lon"), col("lat")), col("geom")),
+                     st_contains(col("geom"), st_point(lit(-122.9), lit(46.15))))) {
+      val e = intercept[Exception](df.filter(pred).collect())
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(_.getClass == jts.getClass), s"$pred: $e")
+    }
+  }
+
   test("CRS transform: 4326<->3857 known pair + round trip (reference F6)") {
     // Known published value: (1 deg lon, 0 lat) -> x = 111319.4908 m
     val (x, y) = Geo.transformPoint(1.0, 0.0, 4326, 3857)

@@ -5,13 +5,15 @@ Usage: python3 tools/serve_check.py <layersParquet> [calls]
 
 Boots `dist/bin/graft-serve` (build it with tools/mkdist.sh) over a layers
 parquet on two free ports, with no extra JVM flags, then sends `calls`
-(default 20) sequential POSTs to /search and then to /mcp, each endpoint
-on one kept-alive connection (the shape of a Python `http.client` user),
-after 5 warm-up calls each. Prints one JSON line with the median and
-maximum reply time per endpoint, and stops the server before it exits,
-whatever happens. A median near 40 ms on a small corpus means replies are
-waiting for the client's delayed ACK (the server's sockets lack
-TCP_NODELAY).
+(default 20) sequential POSTs of each request body to /search and then to
+/mcp, each endpoint and body on one kept-alive connection (the shape of a
+Python `http.client` user), after 5 warm-up calls each. The bodies are a
+plain text query, the same with a point, and with a type filter and a
+point, so the point variants (a spatial predicate per row) are timed apart.
+Prints one JSON line with the median and maximum reply time per endpoint
+and body, and stops the server before it exits, whatever happens. A median
+near 40 ms on a small corpus means replies are waiting for the client's
+delayed ACK (the server's sockets lack TCP_NODELAY).
 """
 import http.client
 import json
@@ -24,8 +26,15 @@ import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SEARCH = {"request_string": "flood zones", "limit": 5}
-TOOL = {"jsonrpc": "2.0", "id": 1, "method": "tools/call",
-        "params": {"name": "gis_layer_search", "arguments": SEARCH}}
+POINT = {"longitude": 10.5, "latitude": 20.25}
+BODIES = {"text": SEARCH,
+          "point": dict(SEARCH, input_point=POINT),
+          "type+point": dict(SEARCH, type_filter=["en"], input_point=POINT)}
+
+
+def tool(arguments):
+    return {"jsonrpc": "2.0", "id": 1, "method": "tools/call",
+            "params": {"name": "gis_layer_search", "arguments": arguments}}
 
 
 def free_port():
@@ -86,10 +95,12 @@ def main():
     try:
         wait_ready(ports["/search"], server)
         out = {}
-        for path, body in (("/search", SEARCH), ("/mcp", TOOL)):
-            ms = timed(ports[path], path, body, calls)
-            out[path] = {"median_ms": round(statistics.median(ms), 2),
-                         "max_ms": round(max(ms), 2), "calls": calls}
+        for path, wrap in (("/search", dict), ("/mcp", tool)):
+            out[path] = {}
+            for name, body in BODIES.items():
+                ms = timed(ports[path], path, wrap(body), calls)
+                out[path][name] = {"median_ms": round(statistics.median(ms), 2),
+                                   "max_ms": round(max(ms), 2), "calls": calls}
         print(json.dumps(out))
     finally:
         server.terminate()
