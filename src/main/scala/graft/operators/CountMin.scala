@@ -38,9 +38,8 @@ object CountMin {
     .filter(col("token") =!= "")
 
   /** Register table over an arbitrary item column (one sketch increment
-    * per row) — the general form; works unchanged on a STREAMING frame
-    * (a plain combinable count whose state is bounded at depth x width
-    * by construction, see EventsStream.countMinRegistersStream).
+    * per row) — the general form: a plain combinable count whose shuffle
+    * is bounded at depth x width by construction.
     */
   def registersOver(items: DataFrame, item: org.apache.spark.sql.Column,
                     depth: Int, width: Int): DataFrame =

@@ -28,8 +28,7 @@ import graft.functions.TextFunctions.{fingerprint, quality_score}
 object Curate {
 
   /** Stages 1-2 only (gate + exact dedup keep-first) — the KEPT SET the
-    * packing tail consumes, factored out so the streaming twin
-    * ([[graft.streaming.CurateStream]]) has a batch surface to equal.
+    * packing tail consumes.
     */
   def kept(docs: DataFrame, idCol: String, textCol: String,
            langCol: String, langs: Seq[String],

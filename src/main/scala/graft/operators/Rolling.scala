@@ -62,10 +62,9 @@ object Rolling {
       Seq("d"), col("k")), windowDays)
 
   /** The trailing-window union-max TAIL alone, over an existing per-day
-    * register table `(d, bucket, max_rho)` — the batch read a DAU/WAU
-    * dashboard runs against the register SINK the streaming form
-    * ([[graft.streaming.EventsStream.dailyHllRegistersStream]])
-    * maintains; also e28b's second half.
+    * register table `(d, bucket, max_rho)` — the read a DAU/WAU
+    * dashboard runs against a maintained register table; also e28b's
+    * second half.
     */
   def rollupRegisters(perDay: DataFrame, windowDays: Int): DataFrame = {
     require(windowDays >= 1, s"windowDays must be >= 1, got $windowDays")

@@ -108,8 +108,9 @@ object Triangles {
     * irreducible O(m^1.5) volume — is shuffled for the closing join.
     *
     * The price is one parquet write of the oriented edges (O(m), tiny
-    * next to the wedge volume) — the [[graft.sources.BucketedTables]]
-    * amortization argument applied to a self-join. `table`/`path` name
+    * next to the wedge volume): the bucketed-table amortization argument
+    * (pay the shuffle once at write time, read the co-located buckets
+    * with no Exchange) applied to a self-join. `table`/`path` name
     * the external bucketed table (dropped and overwritten if present).
     */
   def perNodeBucketed(edges: DataFrame, srcCol: String, dstCol: String,

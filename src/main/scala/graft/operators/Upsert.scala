@@ -47,23 +47,6 @@ object Upsert {
       .select(cols.map(col): _*)
   }
 
-  /** Streaming CDC apply: attach this as a `foreachBatch` sink to apply
-    * each micro-batch of changes to the standing table via [[into]] —
-    * the streaming MERGE sink (change stream in, upserted table out).
-    * Exactly-once within a batch comes from `into`'s commit-then-swap;
-    * re-delivered batches after a failure re-apply idempotently as long
-    * as version columns are monotone (a replayed older batch loses every
-    * precedence contest EXCEPT against the standing row for its own key
-    * — updates beat the target by design — so feed at-least-once sources
-    * through a dedup or rely on monotone versions, the standard CDC
-    * contract).
-    */
-  def foreachBatchInto(spark: SparkSession, path: String,
-                       keyCols: Seq[String], versionCols: Seq[String])
-      : (DataFrame, Long) => Unit = { (batch, _) =>
-    if (!batch.isEmpty) { into(spark, path, batch, keyCols, versionCols); () }
-  }
-
   /** Apply `updates` to the parquet table at `path` copy-on-write and
     * swap the result in (commit-then-swap, recoverable at every
     * boundary). Returns the merged row count.

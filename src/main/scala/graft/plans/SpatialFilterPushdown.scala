@@ -15,9 +15,9 @@ import graft.functions.{Geo, STContains, STDistance, STIntersects, STPoint, STWi
   * spatial file skipping").
   *
   *   st_distance(st_point(x, y), CONST_POINT) < r
-  *     ==>  ... AND x >= cx-r AND x <= cx+r AND y >= cy-r AND y <= cy+r
+  *     ==>  x >= cx-r AND x <= cx+r AND y >= cy-r AND y <= cy+r AND ...
   *   st_intersects(CONST_GEOM, st_point(x, y))   (and contains / within)
-  *     ==>  ... AND x/y within CONST_GEOM's envelope
+  *     ==>  x/y within CONST_GEOM's envelope AND ...
   *
   * Both derivations are necessary conditions of the original predicate
   * (a point farther than r, or outside the envelope, cannot satisfy it),
@@ -26,10 +26,11 @@ import graft.functions.{Geo, STContains, STDistance, STIntersects, STPoint, STWi
   * The JTS expressions are CodegenFallback and opaque to Parquet
   * pushdown; the derived range conjuncts are plain comparisons, so (a)
   * when x/y are scan columns they reach PushedFilters and skip row groups
-  * on min/max stats, and (b) either way they evaluate before the expensive
-  * geometry path and short-circuit rows outside the box. Bounds are
-  * widened one ulp so boundary rounding can never drop a qualifying row;
-  * the original predicate stays in place.
+  * on min/max stats, and (b) either way they come first in the Filter, so
+  * a row outside the box is dropped before the geometry path parses
+  * anything (PostGIS's bbox-then-refine order). Bounds are widened one
+  * ulp so boundary rounding can never drop a qualifying row; the original
+  * predicate stays in place after them.
   */
 object SpatialFilterPushdown extends Rule[LogicalPlan] {
 
@@ -117,7 +118,7 @@ object SpatialFilterPushdown extends Rule[LogicalPlan] {
         // fixpoint safety: never add a conjunct already present
         .filterNot(p => existing.exists(_.semanticEquals(p)))
       if (extra.isEmpty) f
-      else Filter((existing ++ extra).reduceLeft(And), child)
+      else Filter((extra ++ existing).reduceLeft(And), child)
   }
 
   private def splitConjuncts(e: Expression): Seq[Expression] = e match {

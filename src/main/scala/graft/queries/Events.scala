@@ -3,21 +3,28 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
-import graft.streaming.EventsStream
 
-/** Event-stream operator coverage in batch form (the streaming forms share
-  * the same transformations — StreamingSpec asserts batch/stream
-  * equivalence; the driver oracle checks the batch semantics here):
+/** Event-log operator coverage over the `events` table (event_id, ts,
+  * user_id, event_type, value, props), checked against the DuckDB oracle:
   * tumbling-window aggregation, gap-based sessionization, JSON extraction.
   */
 object Events extends QueryPack {
 
   def defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // hourly tumbling window x event_type (streaming twin: hourlyByTypeStream)
+    // hourly tumbling window x event_type. `hour` is cast to
+    // TIMESTAMP_NTZ so the parquet output matches the oracle's
+    // naive-microsecond timestamps (session TZ is UTC, so the cast is
+    // value-preserving)
     "e1_hourly_by_type" -> { (s, d) =>
-      EventsStream.hourlyByTypeBatch(Tables.events(s, d))
+      Tables.events(s, d)
+        .groupBy(date_trunc("hour", col("ts")).cast("timestamp_ntz").as("hour"),
+          col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          sum(col("value").cast(DecimalType(18, 2))).cast("double").as("total_value"))
+        .orderBy(col("hour"), col("event_type"))
     },
 
     // first-order Markov transition matrix over per-user event
@@ -137,23 +144,41 @@ object Events extends QueryPack {
     },
 
     // exactly-once from at-least-once: the doubled event log (simulated
-    // redelivery) collapsed by dedupBatch — streaming twin is the
-    // spec-gated streamingDedup (flatMapGroupsWithState, TTL-bounded
-    // state); the aggregate hashes per-type counts AND id sums so a
-    // surviving duplicate cannot cancel out
+    // redelivery) collapsed by key. No arrival-order state is needed —
+    // dropDuplicates keeps an arbitrary row per event_id, which is the
+    // first arrival whenever redelivery is byte-identical (the
+    // at-least-once contract; rows that DIFFER under one id are upstream
+    // corruption to surface, not resolve). One key exchange; at 100 TB
+    // this is the keys-not-log shuffle d1 uses. The aggregate hashes
+    // per-type counts AND id sums so a surviving duplicate cannot cancel
+    // out
     "e30_stream_dedup" -> { (s, d) =>
       val ev = Tables.events(s, d)
-      EventsStream.dedupBatch(ev.unionAll(ev))
+      ev.unionAll(ev).dropDuplicates("event_id")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("event_id")).as("sum_id"),
           countDistinct(col("user_id")).as("users"))
         .orderBy(col("event_type"))
     },
 
-    // hourly top-3 trending event types (streaming twin:
-    // topTypesPerHourStream — finalized exactly once per hour)
+    // hourly top-3 trending event types: per hour, the 3 most frequent
+    // types with deterministic (count desc, type asc) ranking. The
+    // topk_by bounded-heap aggregate (q28's operator) runs on top of the
+    // hourly count — the exchange carries hours x partitions x 3 rows,
+    // never the full (hour, type) table through a sort
     "e12_top_types" -> { (s, d) =>
-      EventsStream.topTypesPerHourBatch(Tables.events(s, d), k = 3)
+      Tables.events(s, d)
+        .groupBy(date_trunc("hour", col("ts")).cast("timestamp_ntz").as("hour"),
+          col("event_type"))
+        .agg(count(lit(1)).as("n"))
+        .groupBy(col("hour"))
+        .agg(graft.functions.GraftFunctions.topk_by(
+          struct((-col("n")).as("nn"), col("event_type")),
+          struct(col("event_type"), col("n")), 3).as("top"))
+        .select(col("hour"), posexplode(col("top")).as(Seq("rnk0", "r")))
+        .select(col("hour"), (col("rnk0") + 1).cast("long").as("rnk"),
+          col("r.event_type").as("event_type"), col("r.n").as("n"))
+        .orderBy(col("hour"), col("rnk"))
     },
 
     // trailing-window volume anomalies: the exact integer z-test
@@ -182,16 +207,35 @@ object Events extends QueryPack {
         .orderBy(col("cohort_week"), col("weeks_since"))
     },
 
-    // dimension-enriched hourly counts (streaming twin: the stream-static
-    // join form in enrichedHourlyStream)
+    // dimension-enriched hourly counts: events join the customer
+    // dimension on user_id and aggregate per (hour, market segment). The
+    // dimension is genuinely fixed-size relative to the event log, so it
+    // broadcasts
     "e15_enriched_hourly" -> { (s, d) =>
-      EventsStream.enrichedHourlyBatch(Tables.events(s, d), Tables.customer(s, d))
+      Tables.events(s, d)
+        .join(broadcast(Tables.customer(s, d).select(col("c_custkey"), col("c_mktsegment"))),
+          col("user_id") === col("c_custkey"))
+        .groupBy(date_trunc("hour", col("ts")).cast("timestamp_ntz").as("hour"),
+          col("c_mktsegment").as("segment"))
+        .agg(count(lit(1)).as("n"),
+          sum(col("value").cast(DecimalType(18, 2))).cast("double").as("total_value"))
+        .orderBy(col("hour"), col("segment"))
     },
 
-    // per-session rows via the NATIVE session_window (dynamic gap
-    // windows; streaming twin: sessionWindowsStream)
+    // per-session rows via Spark's NATIVE dynamic-gap session_window: one
+    // row per (user, session) with the session's start and event count —
+    // the built-in sibling of e2's per-user totals, with window merging
+    // left to the planner. Boundary semantics: an event at exactly the
+    // 30-minute gap after its predecessor STARTS a new session (the
+    // window extends [ts, ts+gap))
     "e16_session_windows" -> { (s, d) =>
-      EventsStream.sessionWindowsBatch(Tables.events(s, d), gapMinutes = 30)
+      Tables.events(s, d)
+        .groupBy(session_window(col("ts"), "30 minutes").as("sw"),
+          col("user_id"))
+        .agg(count(lit(1)).as("n_events"))
+        .select(col("user_id"),
+          col("sw.start").cast("timestamp_ntz").as("sess_start"), col("n_events"))
+        .orderBy(col("user_id"), col("sess_start"))
     },
 
     // per-type inter-arrival latency profile: exact median/p95 of the
@@ -267,9 +311,8 @@ object Events extends QueryPack {
         .orderBy(col("hr"), col("r"), col("b"))
     },
 
-    // CMS registers over event types — the batch form of the streaming
-    // twin (EventsStream.countMinRegistersStream): one combinable count
-    // whose shuffle AND streaming state are bounded at depth x width
+    // CMS registers over event types: one combinable count whose shuffle
+    // is bounded at depth x width
     "e23_event_countmin" -> { (s, d) =>
       graft.operators.CountMin.registersOver(
         Tables.events(s, d).select(col("event_type")), col("event_type"),
@@ -318,9 +361,19 @@ object Events extends QueryPack {
         .orderBy(col("user_id"), col("valid_from"), col("seg_id"))
     },
 
-    // gap-based sessionization (streaming twin: sessionizeStream)
+    // gap-based sessionization: a session ends after 30 minutes of user
+    // inactivity (lag + running flag sum)
     "e2_sessionization" -> { (s, d) =>
-      EventsStream.sessionizeBatch(Tables.events(s, d), gapMinutes = 30)
+      val w = Window.partitionBy(col("user_id")).orderBy(col("ts").asc, col("event_id").asc)
+      Tables.events(s, d)
+        .withColumn("prev_ts", lag(col("ts"), 1).over(w))
+        .withColumn("new_sess",
+          when(col("prev_ts").isNull ||
+            col("ts") - col("prev_ts") > expr("INTERVAL '30' MINUTE"), 1L)
+            .otherwise(0L))
+        .groupBy(col("user_id"))
+        .agg(sum(col("new_sess")).as("n_sessions"), count(lit(1)).as("n_events"))
+        .orderBy(col("user_id"))
     },
 
     // JSON property extraction + aggregation (props is a JSON string)
@@ -374,25 +427,53 @@ object Events extends QueryPack {
         .orderBy(col("user_id"))
     },
 
-    // click->purchase attribution pairs within a 1-hour window (batch
-    // twin of EventsStream.attributionStream — the stream-stream join;
-    // StreamingSpec pins batch/stream equality)
-    // left-outer attribution: every purchase, its clicks or NULL — the
-    // unattributed-conversion gap report (streaming twin: the
-    // stream-stream LEFT OUTER interval join, StreamingSpec)
+    // left-outer attribution: EVERY purchase appears — with its
+    // in-window clicks, or with a NULL click_id when none preceded it
+    // (the "unattributed conversion" gap report e6's inner join cannot
+    // express). Same equi+range plan shape as e6
     "e20_attribution_gaps" -> { (s, d) =>
-      graft.streaming.EventsStream.attributionGapsBatch(Tables.events(s, d))
+      val ev = Tables.events(s, d)
+      val p = ev.filter(col("event_type") === "purchase")
+        .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
+          col("ts").as("p_ts"))
+      val c = ev.filter(col("event_type") === "click")
+        .select(col("event_id").as("click_id"), col("user_id").as("c_user"),
+          col("ts").as("c_ts"))
+      p.join(c, expr(
+        "p_user = c_user AND c_ts BETWEEN p_ts - INTERVAL 1 hour AND p_ts"),
+        "left_outer")
+        .select(col("purchase_id"), col("click_id"))
+        .orderBy(col("purchase_id"), col("click_id"))
     },
 
+    // click->purchase attribution: every (purchase, click) pair for the
+    // same user with the click in the hour before (inclusive) the
+    // purchase. Equality join on user_id with the time bound as a
+    // post-join range filter — Spark plans a hash/SMJ on user_id, never a
+    // cross product
     "e6_attribution_join" -> { (s, d) =>
-      graft.streaming.EventsStream.attributionBatch(Tables.events(s, d))
+      val ev = Tables.events(s, d)
+      val p = ev.filter(col("event_type") === "purchase")
+        .select(col("event_id").as("purchase_id"), col("user_id"), col("ts").as("p_ts"))
+      val c = ev.filter(col("event_type") === "click")
+        .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("c_ts"))
+      p.join(c, "user_id")
+        .filter(col("c_ts") >= col("p_ts") - expr("INTERVAL 1 hour") &&
+          col("c_ts") <= col("p_ts"))
+        .select(col("purchase_id"), col("click_id"))
+        .orderBy(col("purchase_id"), col("click_id"))
     },
 
     // hopping (sliding) window counts: 1-hour windows every 30 minutes,
-    // each event contributing to two windows (streaming twin:
-    // hoppingByTypeStream; StreamingSpec pins batch/stream equality)
+    // each event contributing to two windows (Spark's window() is usable
+    // in batch plans directly)
     "e9_hopping_counts" -> { (s, d) =>
-      EventsStream.hoppingByTypeBatch(Tables.events(s, d))
+      Tables.events(s, d)
+        .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+        .select(col("w.start").cast("timestamp_ntz").as("win_start"),
+          col("event_type"), col("n"))
+        .orderBy(col("win_start"), col("event_type"))
     },
 
     // time-series densification (gap fill): the hourly event counts of e1
@@ -786,9 +867,7 @@ object Events extends QueryPack {
          |FROM hrsmu GROUP BY 1, 2, 3
          |ORDER BY hr, r, b""".stripMargin,
 
-    // the t44 register grid over event types (CountMin.registersOver) —
-    // the frequency sketch whose streaming twin re-emits the same
-    // depth x width state per trigger (StreamingSpec pins batch==stream)
+    // the t44 register grid over event types (CountMin.registersOver)
     "e23_event_countmin" ->
       s"""WITH ${SketchSql.cmRegisterCtesFrom("ec", 4, 64,
              "SELECT event_type AS s FROM events")}

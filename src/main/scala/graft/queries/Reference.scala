@@ -2512,8 +2512,7 @@ object Reference extends QueryPack {
     // routing CASE so exactly one encoder runs per row (lazy branches;
     // staging all five would run the bzip2 encoder for every row).
     // Torn docs (doc_id % 7 == 0) truncate the blob — five decoders,
-    // ONE quarantine contract. Streaming twin: MixedMirrorStream
-    // (the 22nd batch==stream pair).
+    // ONE quarantine contract.
     "x28_mixed_container_mirror" -> { (s, d) =>
       import graft.functions.GraftFunctions.{bzip2_deflate, le_hex}
       import graft.operators.Multimodal.{inflate_by, media_format}

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Generic MULTI-COLUMN Z-order clustering — the lake-layout optimization
   * the Delta/Iceberg `OPTIMIZE ZORDER BY` command performs, re-expressed
-  * over plain parquet (the spatial special case is [[SpatialLayout]]):
+  * over plain parquet (the spatial case clusters on the x/y columns):
   * quantile-bucket each clustering column, bit-interleave the bucket
   * ids into one curve key, range-partition + sort by it, write. Each
   * output file then covers a compact cell of the multi-column space, so

@@ -1,12 +1,14 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, GreaterThanOrEqual, PredicateHelper}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.{STContains, STIntersects, STWithin}
 import graft.functions.GraftFunctions._
 import graft.plans.SpatialFilterPushdown
 
-class ExtensionsSpec extends AnyFunSuite {
+class ExtensionsSpec extends AnyFunSuite with PredicateHelper {
 
   // graft.Session installs graft's functions and rule into the shared session
   lazy val spark = SparkTestSession.spark
@@ -123,6 +125,20 @@ class ExtensionsSpec extends AnyFunSuite {
       assert(physical.contains("PushedFilters: [") &&
         physical.contains("GreaterThanOrEqual(x,"),
         s"$label: expected envelope bounds in PushedFilters:\n$physical")
+      // bbox-then-refine: the range test on x runs before the geometry parse
+      val conjuncts = filtered.queryExecution.executedPlan.collectFirst {
+        case f: org.apache.spark.sql.execution.FilterExec => f.condition
+      }.toSeq.flatMap(splitConjunctivePredicates)
+      val xRange = conjuncts.indexWhere {
+        case GreaterThanOrEqual(a: AttributeReference, _) => a.name == "x"
+        case _ => false
+      }
+      val spatial = conjuncts.indexWhere(_.exists {
+        case _: STIntersects | _: STContains | _: STWithin => true
+        case _ => false
+      })
+      assert(xRange >= 0 && spatial >= 0 && xRange < spatial,
+        s"$label: expected x >= ... before the spatial predicate in ${conjuncts.mkString(" AND ")}")
       assert(filtered.select("id").collect().map(_.getLong(0)).sorted === Array(1L, 2L),
         s"$label changed semantics")
     }

@@ -4,62 +4,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Embed, Knn, Search, Skew}
-import graft.sources.{BucketedTables, LayersTable}
+import graft.sources.LayersTable
 
 class SourcesSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import SparkTestSession.sfDir
-
-  test("JSONL corpus round trip: documents -> jsonl -> engine, pipeline-equal") {
-    import graft.sources.TextCorpus
-    val dir = java.nio.file.Files.createTempDirectory("graft-jsonl").toString + "/docs"
-    val docs = Tables.documents(spark, sfDir)
-    docs.write.json(dir) // stage the corpus as JSON-lines shards
-    val back = TextCorpus.readJsonl(spark, dir)
-    assert(back.schema.fieldNames.toSeq === docs.schema.fieldNames.toSeq)
-    assert(back.count() === docs.count())
-    // the dedup pipeline sees identical content through either format
-    val viaParquet = graft.operators.Dedup.exactDupGroups(docs, "doc_id", "text")
-      .collect().map(_.toString).sorted
-    val viaJsonl = graft.operators.Dedup.exactDupGroups(back, "doc_id", "text")
-      .collect().map(_.toString).sorted
-    assert(viaJsonl === viaParquet)
-  }
-
-  test("JSONL quarantine: corrupt lines split out, parsed rows load") {
-    import graft.sources.TextCorpus
-    val dir = java.nio.file.Files.createTempDirectory("graft-jsonl-q").toString
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/part.jsonl"),
-      """{"doc_id": 1, "text": "ok one", "lang": "en", "source": "web", "n_chars": 6}
-        |this is not json at all
-        |{"doc_id": 2, "text": "ok two", "lang": "fr", "source": "web", "n_chars": 6}
-        |{"doc_id": broken
-        |""".stripMargin)
-    val (good, bad) = TextCorpus.readJsonlQuarantine(spark, dir)
-    assert(good.collect().map(_.getLong(0)).sorted.toSeq === Seq(1L, 2L))
-    assert(bad.count() === 2)
-  }
-
-  test("bucketed fact-fact join plans with no shuffle Exchange on either side") {
-    val o = Tables.orders(spark, sfDir).limit(2000)
-    val l = Tables.lineitem(spark, sfDir).limit(2000)
-    BucketedTables.write(o, "b_orders", "o_orderkey", 4)
-    BucketedTables.write(l.withColumnRenamed("l_orderkey", "o_orderkey"),
-      "b_lineitem", "o_orderkey", 4)
-    // tiny test tables would be broadcast (hiding the bucketing effect);
-    // at fact-fact scale broadcast is off the table, so emulate that
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = spark.table("b_orders").join(spark.table("b_lineitem"), "o_orderkey")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), s"expected SMJ:\n$plan")
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"expected shuffle-free co-located join, got:\n$plan")
-      assert(plan.contains("Bucketed: true"), s"expected bucketed scans:\n$plan")
-      assert(joined.count() > 0)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
 
   test("table identifier whitelist rejects injection-shaped names (reference models.py:131-136)") {
     assert(LayersTable.validateIdentifier("layers_v2") === "layers_v2")

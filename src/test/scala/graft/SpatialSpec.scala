@@ -345,25 +345,6 @@ class SpatialSpec extends AnyFunSuite {
     assert(commonHighBits(a, b) > commonHighBits(a, c))
   }
 
-  test("SpatialLayout.cluster keeps all rows and tightens per-partition extents") {
-    import spark.implicits._
-    val rng = new scala.util.Random(7)
-    val pts = Seq.fill(4000)((rng.nextDouble() * 360 - 180, rng.nextDouble() * 180 - 90))
-      .zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) }
-    val df = pts.toDF("id", "x", "y")
-    val clustered = graft.sources.SpatialLayout.cluster(df, col("x"), col("y"), 16)
-    assert(clustered.count() === 4000)
-    // per-partition bbox area after clustering << random layout's
-    val extents = clustered
-      .withColumn("pid", spark_partition_id())
-      .groupBy("pid")
-      .agg(((max(col("x")) - min(col("x"))) * (max(col("y")) - min(col("y")))).as("area"))
-      .agg(avg(col("area"))).head().getDouble(0)
-    val worldArea = 360.0 * 180.0
-    assert(extents < worldArea / 4,
-      s"expected clustered partitions to cover compact cells, avg area $extents")
-  }
-
   test("spatial functions usable from SQL after registration") {
     graft.functions.GraftFunctions.register(spark)
     val hit = spark.sql(

@@ -44,29 +44,6 @@ class UpsertSpec extends AnyFunSuite {
     }
   }
 
-  test("foreachBatchInto: a change stream upserts the standing table to the batch-merge result") {
-    import spark.implicits._
-    implicit val sctx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val dir = Files.createTempDirectory("graft-upsert-stream").toString + "/table"
-    Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("k", "v", "ver").write.parquet(dir)
-    val input = MemoryStream[(Long, String, Long)]
-    val q = input.toDS().toDF("k", "v", "ver")
-      .writeStream
-      .foreachBatch(Upsert.foreachBatchInto(spark, dir, Seq("k"), Seq("ver")))
-      .outputMode("append")
-      .start()
-    try {
-      input.addData((2L, "b2", 21L), (3L, "c", 30L)) // update + insert
-      q.processAllAvailable()
-      input.addData((3L, "c2", 31L))                 // second batch updates the insert
-      q.processAllAvailable()
-      val got = spark.read.parquet(dir).orderBy("k")
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
-      assert(got === Seq((1L, "a", 10L), (2L, "b2", 21L), (3L, "c2", 31L)))
-    } finally q.stop()
-  }
-
   test("into: copy-on-write swap commits atomically; crash states auto-recover") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-upsert").toString + "/table"
