@@ -14,6 +14,15 @@ object Tables {
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
 
+  /** Where a gate saves a fixture it builds and reads back (an index, a
+    * model, a rewritten table): `/dev/shm/graft_<name>_<sf>`, with `sf` the
+    * last component of the scale-factor directory, so runs at different
+    * scales stay apart. Memory-backed, because the files are small and a
+    * stalling root disk would time the disk instead of the gate.
+    */
+  def fixture(name: String, sfDir: String): String =
+    s"/dev/shm/graft_${name}_${new java.io.File(sfDir).getName}"
+
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     require(names.contains(name), s"unknown table: $name")
     if (name == "events") readEvents(spark, dir) else

@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -32,25 +30,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * 3, truncated chunks, and unknown containers all yield NULL.
   */
 case class AudioMeta(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "audio_meta"
-  override def dataType: DataType = AudioMeta.Schema
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    AudioMeta.parse(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.AudioMeta.parse($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
+    extends UnaryKernel("audio_meta", KernelInput.Binary, AudioMeta.Schema, "AudioMeta.parse",
+      quarantines = true) {
+  override def nullSafeEval(v: Any): Any = AudioMeta.parse(v.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -145,25 +127,9 @@ object AudioMeta {
   * size past the buffer end — the torn-blob case), or zero samples.
   */
 case class AudioPcmStats(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "audio_pcm_stats"
-  override def dataType: DataType = AudioPcmStats.Schema
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    AudioPcmStats.decode(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.AudioPcmStats.decode($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
+    extends UnaryKernel("audio_pcm_stats", KernelInput.Binary, AudioPcmStats.Schema,
+      "AudioPcmStats.decode", quarantines = true) {
+  override def nullSafeEval(v: Any): Any = AudioPcmStats.decode(v.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -242,25 +208,9 @@ object AudioPcmStats {
   * between or after frames refuses.
   */
 case class Mp3Frames(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "mp3_frames"
-  override def dataType: DataType = Mp3Frames.Schema
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    Mp3Frames.decode(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Mp3Frames.decode($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
+    extends UnaryKernel("mp3_frames", KernelInput.Binary, Mp3Frames.Schema, "Mp3Frames.decode",
+      quarantines = true) {
+  override def nullSafeEval(v: Any): Any = Mp3Frames.decode(v.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 

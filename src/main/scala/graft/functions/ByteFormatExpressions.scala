@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -25,28 +24,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * emit.
   */
 case class LeHex(child: Expression, width: Int)
-    extends UnaryExpression {
-  override def prettyName: String = "le_hex"
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _ if width < 1 || width > 8 => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName width must be 1..8, got $width")
-    case ByteType | ShortType | IntegerType | LongType =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects an integral value, got ${other.simpleString}")
-  }
-
+    extends UnaryKernel("le_hex", KernelInput.Integral, StringType, "LeHex.render",
+      quarantines = false) {
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (width < 1 || width > 8)
+      TypeCheckResult.TypeCheckFailure(s"$prettyName width must be 1..8, got $width")
+    else super.checkInputDataTypes()
   override def nullSafeEval(v: Any): Any =
     LeHex.render(v.asInstanceOf[Number].longValue(), width)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.LeHex.render((long) $c, $width);")
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
+  override protected def kernelArgs: Seq[Any] = Seq(width)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 object LeHex {

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.BinaryType
 
 /** BZIP2 inflation — the fourth member of the mirror-encoding family
   * ([[Gunzip]]/[[Zunstd]]/[[Zunxz]]): `.tar.bz2` is the CLASSIC
@@ -25,32 +23,13 @@ import org.apache.spark.sql.types.{BinaryType, DataType}
   * Bzip2Spec differential against the host `bzip2` binary.
   */
 case class Zunbz2(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "zunbz2"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    Zunbz2.inflate(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Zunbz2.inflate($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
+    extends UnaryKernel("zunbz2", KernelInput.Binary, BinaryType, "Zunbz2.inflate",
+      quarantines = true) {
+  override def nullSafeEval(v: Any): Any = Zunbz2.inflate(v.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 object Zunbz2 {
-  /** Inflation cap per blob — the same bomb refusal as [[Gunzip]]. */
-  val MaxBytes: Int = 256 * 1024 * 1024
-
   private def hasMagic(b: Array[Byte]): Boolean =
     b.length >= 4 && b(0) == 'B' && b(1) == 'Z' && b(2) == 'h' &&
       b(3) >= '1' && b(3) <= '9'
@@ -61,17 +40,7 @@ object Zunbz2 {
       val in = new org.apache.commons.compress.compressors.bzip2
         .BZip2CompressorInputStream(
           new java.io.ByteArrayInputStream(b), /* decompressConcatenated = */ true)
-      try {
-        val out = new java.io.ByteArrayOutputStream(math.min(b.length * 4, 1 << 20))
-        val buf = new Array[Byte](64 * 1024)
-        var n = in.read(buf)
-        while (n >= 0) {
-          if (out.size().toLong + n > MaxBytes) return null // bomb refusal
-          out.write(buf, 0, n)
-          n = in.read(buf)
-        }
-        out.toByteArray
-      } finally in.close()
+      Inflation.readCapped(in, b.length)
     } catch {
       case _: java.io.IOException => null // torn / CRC mismatch / garbage
       // commons-compress bzip2 has historically thrown RuntimeExceptions
@@ -102,31 +71,15 @@ object Zunbz2 {
   * derivation is a pure function of the input so determinism holds.
   */
 case class Bzip2Deflate(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "bzip2_deflate"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    Bzip2Deflate.deflate(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Bzip2Deflate.deflate($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
+    extends UnaryKernel("bzip2_deflate", KernelInput.Binary, BinaryType, "Bzip2Deflate.deflate",
+      quarantines = true) {
+  override def nullSafeEval(v: Any): Any = Bzip2Deflate.deflate(v.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 object Bzip2Deflate {
   def deflate(b: Array[Byte]): Array[Byte] = {
-    if (b == null || b.length > Zunbz2.MaxBytes) return null
+    if (b == null || b.length > Inflation.MaxBytes) return null
     try {
       val blockSize = math.max(1, math.min(9, (b.length + 99999) / 100000))
       val bos = new java.io.ByteArrayOutputStream(b.length / 2 + 64)

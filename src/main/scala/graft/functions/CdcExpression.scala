@@ -3,9 +3,7 @@ package graft.functions
 import java.util.regex.Pattern
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -27,23 +25,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * split `\s+`).
   */
 case class CdcChunksExpr(child: Expression, divisor: Int)
-    extends UnaryExpression {
+    extends UnaryKernel("cdc_chunks", KernelInput.Utf8, CdcChunksExpr.Schema,
+      "CdcChunksExpr.compute", quarantines = false) {
   require(divisor >= 2, s"cdc_chunks: divisor must be >= 2, got $divisor")
-  override def prettyName: String = "cdc_chunks"
-  override def dataType: DataType = CdcChunksExpr.Schema
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.simpleString}")
-  }
-
   override def nullSafeEval(v: Any): Any =
     CdcChunksExpr.compute(v.asInstanceOf[UTF8String], divisor)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.CdcChunksExpr.compute($c, $divisor);")
-
+  override protected def kernelArgs: Seq[Any] = Seq(divisor)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 

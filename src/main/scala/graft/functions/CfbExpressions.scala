@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -33,25 +31,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * to hide or duplicate an entry.
   */
 case class CfbEntries(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "cfb_entries"
-  override def dataType: DataType = CfbEntries.Schema
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    CfbEntries.list(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.CfbEntries.list($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
+    extends UnaryKernel("cfb_entries", KernelInput.Binary, CfbEntries.Schema, "CfbEntries.list",
+      quarantines = true) {
+  override def nullSafeEval(v: Any): Any = CfbEntries.list(v.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -61,26 +43,10 @@ case class CfbEntries(child: Expression)
   * declared size, or any structural malformation.
   */
 case class CfbExtract(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def prettyName: String = "cfb_extract"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (binary, string), got (${l.simpleString}, ${r.simpleString})")
-    }
-
+    extends BinaryKernel("cfb_extract", KernelInput.Binary, KernelInput.JavaString, BinaryType,
+      "CfbEntries.extract", quarantines = true) {
   override def nullSafeEval(b: Any, n: Any): Any =
     CfbEntries.extract(b.asInstanceOf[Array[Byte]], n.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, n) => s"""
-      ${ev.value} = graft.functions.CfbEntries.extract($b, $n.toString());
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
@@ -91,9 +57,6 @@ object CfbEntries {
     StructField("type", IntegerType),
     StructField("size", LongType)))
   val Schema: DataType = ArrayType(EntrySchema, containsNull = false)
-
-  /** Extraction cap per stream (the Gunzip bomb posture). */
-  val MaxBytes: Int = 256 * 1024 * 1024
 
   private val EndOfChain = 0xFFFFFFFEL
   private val FreeSect = 0xFFFFFFFFL
@@ -238,7 +201,7 @@ object CfbEntries {
     // mini stream: the ROOT entry's regular chain; miniFAT: its own chain
     val root = es.head
     val miniBytes = root.size
-    if (miniBytes % 64 != 0 || miniBytes > MaxBytes) return null
+    if (miniBytes % 64 != 0 || miniBytes > Inflation.MaxBytes) return null
     val mini = new Array[Byte](miniBytes.toInt)
     if (miniBytes > 0) {
       val msecs = chain(fat, root.startSect, nSect)
@@ -281,7 +244,7 @@ object CfbEntries {
 
   private[functions] def extractFrom(cfb: Cfb, b: Array[Byte], name: String): Array[Byte] = {
     val e = cfb.entries.find(x => x.typ == 2 && x.name == name).getOrElse(return null)
-    if (e.size > MaxBytes) return null
+    if (e.size > Inflation.MaxBytes) return null
     val size = e.size.toInt
     val out = new Array[Byte](size)
     if (size == 0) return out

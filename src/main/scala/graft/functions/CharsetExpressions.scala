@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Charset sniffing + strict decode — the step between a crawl record's
@@ -43,22 +41,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * validating scan + zero-copy `UTF8String.fromBytes` — no transcode,
   * no allocation beyond the output slice.
   */
-case class CharsetDetect(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "charset_detect"
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
-  override def nullSafeEval(v: Any): Any =
-    Charsets.detect(v.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Charsets.detect($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
+case class CharsetDetect(child: Expression)
+    extends UnaryKernel("charset_detect", KernelInput.Binary, StringType, "Charsets.detect",
+      quarantines = true) {
+  override def nullSafeEval(v: Any): Any = Charsets.detect(v.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -82,41 +68,17 @@ case class CharsetDetect(child: Expression) extends UnaryExpression {
   * in any order; `<!-- -->` comments skipped so a commented-out meta
   * never drives the decode.
   */
-case class CharsetDecodeHtml(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "charset_decode_html"
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
-  override def nullSafeEval(v: Any): Any =
-    Charsets.decodeHtml(v.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Charsets.decodeHtml($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
+case class CharsetDecodeHtml(child: Expression)
+    extends UnaryKernel("charset_decode_html", KernelInput.Binary, StringType,
+      "Charsets.decodeHtml", quarantines = true) {
+  override def nullSafeEval(v: Any): Any = Charsets.decodeHtml(v.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-case class CharsetDecode(child: Expression) extends UnaryExpression {
-  override def prettyName: String = "charset_decode"
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
-  override def nullSafeEval(v: Any): Any =
-    Charsets.decode(v.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Charsets.decode($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
+case class CharsetDecode(child: Expression)
+    extends UnaryKernel("charset_decode", KernelInput.Binary, StringType, "Charsets.decode",
+      quarantines = true) {
+  override def nullSafeEval(v: Any): Any = Charsets.decode(v.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.BinaryType
 
 /** GZIP inflation as a scan-fused expression — the decompression step
   * between a crawl's wire format and [[WarcRecords]]: Common Crawl
@@ -15,54 +13,25 @@ import org.apache.spark.sql.types.{BinaryType, DataType}
   * Posture: the m5-m8 torn-blob contract — any malformed byte (bad
   * magic, corrupt deflate stream, CRC mismatch, trailing garbage)
   * quarantines the WHOLE blob to NULL; a decompression BOMB (output
-  * past [[Gunzip.MaxBytes]]) also refuses, because a 4 GB inflation in
+  * past [[Inflation.MaxBytes]]) also refuses, because a 4 GB inflation in
   * a scan task is an attack, not data. Per-row, no shuffle; at 100 TB
   * the segment files arrive as a binary column and this is just another
   * fused stage before `warc_records` + posexplode.
   */
 case class Gunzip(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "gunzip"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    Gunzip.inflate(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Gunzip.inflate($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
+    extends UnaryKernel("gunzip", KernelInput.Binary, BinaryType, "Gunzip.inflate",
+      quarantines = true) {
+  override def nullSafeEval(v: Any): Any = Gunzip.inflate(v.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 object Gunzip {
-  /** Inflation cap per blob (zip-bomb refusal). */
-  val MaxBytes: Int = 256 * 1024 * 1024
-
   def inflate(b: Array[Byte]): Array[Byte] = {
     if (b == null || b.length < 18) return null // header + empty deflate + trailer
     if ((b(0) & 0xFF) != 0x1F || (b(1) & 0xFF) != 0x8B) return null
     try {
-      val in = new java.util.zip.GZIPInputStream(
-        new java.io.ByteArrayInputStream(b))
-      val out = new java.io.ByteArrayOutputStream(math.min(b.length * 4, 1 << 20))
-      val buf = new Array[Byte](64 * 1024)
-      var n = in.read(buf)
-      while (n >= 0) {
-        if (out.size().toLong + n > MaxBytes) return null // bomb refusal
-        out.write(buf, 0, n)
-        n = in.read(buf)
-      }
-      in.close()
-      out.toByteArray
+      Inflation.readCapped(
+        new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(b)), b.length)
     } catch {
       case _: java.io.IOException => null // bad magic/deflate/CRC/truncation
     }

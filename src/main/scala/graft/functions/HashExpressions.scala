@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -41,31 +39,17 @@ private[graft] object SketchHash {
   }
 }
 
-private[graft] trait TokenArrayInput { self: UnaryExpression =>
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<string>, got ${other.simpleString}")
-  }
-}
-
 /** minhash_signature(tokens, k): array<long> of k minimums over the
   * permuted token-hash stream. J(A,B) ~ fraction of agreeing slots.
   * Empty input -> all Long.MaxValue (agrees only with other empties).
   */
 case class MinHashSignature(child: Expression, numHashes: Int)
-    extends UnaryExpression with TokenArrayInput {
+    extends UnaryKernel("minhash_signature", KernelInput.Tokens,
+      ArrayType(LongType, containsNull = false), "MinHashSignature.compute", quarantines = false) {
   require(numHashes > 0, "numHashes must be positive")
-  override def prettyName: String = "minhash_signature"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
   override def nullSafeEval(v: Any): Any =
     MinHashSignature.compute(v.asInstanceOf[ArrayData], numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MinHashSignature.compute($c, $numHashes);")
-
+  override protected def kernelArgs: Seq[Any] = Seq(numHashes)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -99,22 +83,9 @@ object MinHashSignature {
   * on any multi-byte character. Null -> null; empty string -> 0.
   */
 case class RollingHash64(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "rolling_hash"
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    RollingHash64.compute(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.RollingHash64.compute($c);")
-
+    extends UnaryKernel("rolling_hash", KernelInput.Utf8, LongType, "RollingHash64.compute",
+      quarantines = false) {
+  override def nullSafeEval(v: Any): Any = RollingHash64.compute(v.asInstanceOf[UTF8String])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -141,17 +112,9 @@ object RollingHash64 {
   * Empty input -> 0L.
   */
 case class SimHash64(child: Expression)
-    extends UnaryExpression with TokenArrayInput {
-  override def prettyName: String = "simhash64"
-  override def dataType: DataType = LongType
-
-  override def nullSafeEval(v: Any): Any =
-    SimHash64.compute(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.SimHash64.compute($c);")
-
+    extends UnaryKernel("simhash64", KernelInput.Tokens, LongType, "SimHash64.compute",
+      quarantines = false) {
+  override def nullSafeEval(v: Any): Any = SimHash64.compute(v.asInstanceOf[ArrayData])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -193,22 +156,10 @@ object SimHash64 {
   * sketches; the finalizer restores uniformity.
   */
 case class Fnv64(child: Expression, mixed: Boolean = false)
-    extends UnaryExpression {
-  override def prettyName: String = if (mixed) "fnv64_mix" else "fnv64"
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    Fnv64.compute(v.asInstanceOf[UTF8String], mixed)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.Fnv64.compute($c, $mixed);")
-
+    extends UnaryKernel(if (mixed) "fnv64_mix" else "fnv64", KernelInput.Utf8, LongType,
+      "Fnv64.compute", quarantines = false) {
+  override def nullSafeEval(v: Any): Any = Fnv64.compute(v.asInstanceOf[UTF8String], mixed)
+  override protected def kernelArgs: Seq[Any] = Seq(mixed)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -234,25 +185,14 @@ object Fnv64 {
   * beyond the output array.
   */
 case class CmBuckets(child: Expression, depth: Int, width: Int)
-    extends UnaryExpression {
+    extends UnaryKernel("cm_buckets", KernelInput.Utf8,
+      ArrayType(IntegerType, containsNull = false), "CmBuckets.compute", quarantines = false) {
   require(depth >= 1 && depth <= 64,
     s"cm_buckets: depth must be in [1, 64], got $depth")
   require(width >= 2, s"cm_buckets: width must be >= 2, got $width")
-  override def prettyName: String = "cm_buckets"
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.simpleString}")
-  }
-
   override def nullSafeEval(v: Any): Any =
     CmBuckets.compute(v.asInstanceOf[UTF8String], depth, width)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.CmBuckets.compute($c, $depth, $width);")
-
+  override protected def kernelArgs: Seq[Any] = Seq(depth, width)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 

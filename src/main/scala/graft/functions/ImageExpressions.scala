@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -23,25 +21,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * must not kill a scan.
   */
 case class ImageMeta(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "image_meta"
-  override def dataType: DataType = ImageMeta.Schema
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    ImageMeta.parse(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.ImageMeta.parse($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
+    extends UnaryKernel("image_meta", KernelInput.Binary, ImageMeta.Schema, "ImageMeta.parse",
+      quarantines = true) {
+  override def nullSafeEval(v: Any): Any = ImageMeta.parse(v.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -225,25 +207,9 @@ object ImageMeta {
   * corrupted header surfaces as a structural failure anyway).
   */
 case class ImagePixelStats(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "image_pixel_stats"
-  override def dataType: DataType = ImagePixelStats.Schema
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    ImagePixelStats.decode(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.ImagePixelStats.decode($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
+    extends UnaryKernel("image_pixel_stats", KernelInput.Binary, ImagePixelStats.Schema,
+      "ImagePixelStats.decode", quarantines = true) {
+  override def nullSafeEval(v: Any): Any = ImagePixelStats.decode(v.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -413,25 +379,9 @@ object ImagePixelStats {
   * End-Of-Information code.
   */
 case class GifPixelStats(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "gif_pixel_stats"
-  override def dataType: DataType = GifPixelStats.Schema
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    GifPixelStats.decode(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.GifPixelStats.decode($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
+    extends UnaryKernel("gif_pixel_stats", KernelInput.Binary, GifPixelStats.Schema,
+      "GifPixelStats.decode", quarantines = true) {
+  override def nullSafeEval(v: Any): Any = GifPixelStats.decode(v.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -595,25 +545,9 @@ object GifPixelStats {
   * to NULL (the m-family posture: a poison blob must not kill a scan).
   */
 case class BmpPixelStats(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "bmp_pixel_stats"
-  override def dataType: DataType = BmpPixelStats.Schema
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    BmpPixelStats.decode(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.BmpPixelStats.decode($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
+    extends UnaryKernel("bmp_pixel_stats", KernelInput.Binary, BmpPixelStats.Schema,
+      "BmpPixelStats.decode", quarantines = true) {
+  override def nullSafeEval(v: Any): Any = BmpPixelStats.decode(v.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -704,29 +638,9 @@ object BmpPixelStats {
   * unchanged.
   */
 case class BmpAhash(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "bmp_ahash"
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    BmpAhash.hash64(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val boxed = ctx.freshName("ahash")
-      s"""
-      java.lang.Long $boxed = graft.functions.BmpAhash.hash64($c);
-      ${ev.isNull} = $boxed == null;
-      ${ev.value} = ${ev.isNull} ? 0L : $boxed.longValue();
-      """
-    })
-
+    extends UnaryKernel("bmp_ahash", KernelInput.Binary, LongType, "BmpAhash.hash64",
+      quarantines = true) {
+  override def nullSafeEval(v: Any): Any = BmpAhash.hash64(v.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -807,25 +721,9 @@ object BmpAhash {
   * cover), at least one frame, GCE data sub-block exactly 4 bytes.
   */
 case class GifFrames(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "gif_frames"
-  override def dataType: DataType = GifFrames.Schema
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    GifFrames.decode(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.GifFrames.decode($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
+    extends UnaryKernel("gif_frames", KernelInput.Binary, GifFrames.Schema, "GifFrames.decode",
+      quarantines = true) {
+  override def nullSafeEval(v: Any): Any = GifFrames.decode(v.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 

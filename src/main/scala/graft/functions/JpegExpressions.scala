@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 
@@ -39,25 +37,9 @@ import org.apache.spark.sql.types._
   * 1180 grants different conforming IDCTs).
   */
 case class JpegPixelStats(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "jpeg_pixel_stats"
-  override def dataType: DataType = JpegPixelStats.Schema
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    JpegPixelStats.decodeStats(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.JpegPixelStats.decodeStats($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
+    extends UnaryKernel("jpeg_pixel_stats", KernelInput.Binary, JpegPixelStats.Schema,
+      "JpegPixelStats.decodeStats", quarantines = true) {
+  override def nullSafeEval(v: Any): Any = JpegPixelStats.decodeStats(v.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -77,25 +59,10 @@ case class JpegPixelStats(child: Expression)
   * files pass through as R = G = B.
   */
 case class JpegRgbStats(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "jpeg_rgb_stats"
-  override def dataType: DataType = JpegRgbStats.Schema
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
-
+    extends UnaryKernel("jpeg_rgb_stats", KernelInput.Binary, JpegRgbStats.Schema,
+      "JpegPixelStats.decodeRgbStats", quarantines = true) {
   override def nullSafeEval(v: Any): Any =
     JpegPixelStats.decodeRgbStats(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.JpegPixelStats.decodeRgbStats($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 

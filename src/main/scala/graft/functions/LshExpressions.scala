@@ -2,9 +2,7 @@ package graft.functions
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -81,18 +79,11 @@ private[graft] object HyperplaneLsh {
   * Null -> null; empty array -> zero vector.
   */
 case class HashingTfVector(child: Expression, dim: Int)
-    extends UnaryExpression with TokenArrayInput {
+    extends UnaryKernel("hashing_tf", KernelInput.Tokens,
+      ArrayType(FloatType, containsNull = false), "HashingTfVector.compute", quarantines = false) {
   require(dim > 0, "dim must be positive")
-  override def prettyName: String = "hashing_tf"
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-
-  override def nullSafeEval(v: Any): Any =
-    HashingTfVector.compute(v.asInstanceOf[ArrayData], dim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HashingTfVector.compute($c, $dim);")
-
+  override def nullSafeEval(v: Any): Any = HashingTfVector.compute(v.asInstanceOf[ArrayData], dim)
+  override protected def kernelArgs: Seq[Any] = Seq(dim)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -127,24 +118,17 @@ object HashingTfVector {
   * keep one dimension per column.
   */
 case class HyperplaneBands(child: Expression, bands: Int, rows: Int, seed: Long)
-    extends UnaryExpression {
+    extends UnaryKernel("hyperplane_bands", KernelInput.Vector,
+      ArrayType(LongType, containsNull = false), "HyperplaneBands.compute", quarantines = false) {
   require(bands > 0 && rows > 0 && rows <= 64,
     "bands must be positive and 1 <= rows <= 64 (bucket bits pack one long)")
-  override def prettyName: String = "hyperplane_bands"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    VectorExprUtil.checkVectorTypes(Seq(child), prettyName)
 
   @transient private lazy val isDouble: Boolean =
     child.dataType.asInstanceOf[ArrayType].elementType == DoubleType
 
   override def nullSafeEval(v: Any): Any =
     HyperplaneBands.compute(v.asInstanceOf[ArrayData], isDouble, bands, rows, seed)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HyperplaneBands.compute($c, $isDouble, $bands, $rows, ${seed}L);")
-
+  override protected def kernelArgs: Seq[Any] = Seq(isDouble, bands, rows, seed)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -215,23 +199,11 @@ object HyperplaneBands {
   * far inside Long for any real embedding scale (asserted).
   */
 case class SignedProject(child: Expression, k: Int, seed: Long)
-    extends UnaryExpression {
+    extends UnaryKernel("signed_project", KernelInput.FloatVector,
+      ArrayType(LongType, containsNull = false), "SignedProject.compute", quarantines = false) {
   require(k >= 1 && k <= 4096, s"signed_project: k must be in [1, 4096], got $k")
-  override def prettyName: String = "signed_project"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<float>, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    SignedProject.compute(v.asInstanceOf[ArrayData], k, seed)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.SignedProject.compute($c, $k, ${seed}L);")
-
+  override def nullSafeEval(v: Any): Any = SignedProject.compute(v.asInstanceOf[ArrayData], k, seed)
+  override protected def kernelArgs: Seq[Any] = Seq[Any](k, seed)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 

@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.BinaryType
 
 /** LZ4 frame inflation — the fifth member of the mirror-encoding
   * family: `.lz4` is the speed-first format fast mirrors and log
@@ -26,32 +24,13 @@ import org.apache.spark.sql.types.{BinaryType, DataType}
   * byte is a plan-time constant for a fixed FLG/BD pair.
   */
 case class Zunlz4(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "zunlz4"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    Zunlz4.inflate(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Zunlz4.inflate($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
+    extends UnaryKernel("zunlz4", KernelInput.Binary, BinaryType, "Zunlz4.inflate",
+      quarantines = true) {
+  override def nullSafeEval(v: Any): Any = Zunlz4.inflate(v.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 object Zunlz4 {
-  /** Inflation cap per blob — the same bomb refusal as [[Gunzip]]. */
-  val MaxBytes: Int = 256 * 1024 * 1024
-
   private def isFrameMagic(b: Array[Byte], p: Int): Boolean =
     p + 4 <= b.length &&
       (b(p) & 0xFF) == 0x04 && (b(p + 1) & 0xFF) == 0x22 &&
@@ -72,17 +51,7 @@ object Zunlz4 {
       // and any HC/xxhash32 mismatch — the arbiter of validity
       val in = new net.jpountz.lz4.LZ4FrameInputStream(
         new java.io.ByteArrayInputStream(b))
-      try {
-        val out = new java.io.ByteArrayOutputStream(math.min(b.length * 4, 1 << 20))
-        val buf = new Array[Byte](64 * 1024)
-        var n = in.read(buf)
-        while (n >= 0) {
-          if (out.size().toLong + n > MaxBytes) return null // bomb refusal
-          out.write(buf, 0, n)
-          n = in.read(buf)
-        }
-        out.toByteArray
-      } finally in.close()
+      Inflation.readCapped(in, b.length)
     } catch {
       case _: java.io.IOException => null // torn / checksum / garbage
       // lz4-java raises LZ4Exception (a RuntimeException) when block

@@ -2,9 +2,7 @@ package graft.functions
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -43,22 +41,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * verbatim.
   */
 case class HtmlToMarkdown(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "html_to_markdown"
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    HtmlToMarkdown.convert(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HtmlToMarkdown.convert($c);")
-
+    extends UnaryKernel("html_to_markdown", KernelInput.Utf8, StringType,
+      "HtmlToMarkdown.convert", quarantines = false) {
+  override def nullSafeEval(v: Any): Any = HtmlToMarkdown.convert(v.asInstanceOf[UTF8String])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -87,22 +72,9 @@ case class HtmlToMarkdown(child: Expression)
   * STRUCTURAL breaks; the oracle does the same with chr(31).
   */
 case class HtmlToMarkdownBlocks(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "html_to_markdown_blocks"
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    HtmlToMarkdown.convertBlocks(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HtmlToMarkdown.convertBlocks($c);")
-
+    extends UnaryKernel("html_to_markdown_blocks", KernelInput.Utf8, StringType,
+      "HtmlToMarkdown.convertBlocks", quarantines = false) {
+  override def nullSafeEval(v: Any): Any = HtmlToMarkdown.convertBlocks(v.asInstanceOf[UTF8String])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 
 /** morton_code(lon, lat): Z-order curve key — interleaves the bits of the
@@ -16,23 +14,10 @@ import org.apache.spark.sql.types._
   * pure integer math.
   */
 case class MortonCode(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def prettyName: String = "morton_code"
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == DoubleType && right.dataType == DoubleType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"morton_code expects (double lon, double lat), got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-
+    extends BinaryKernel("morton_code", KernelInput.Double.as("double lon"),
+      KernelInput.Double.as("double lat"), LongType, "MortonCode.interleave", quarantines = false) {
   override def nullSafeEval(lonV: Any, latV: Any): Any =
     MortonCode.interleave(lonV.asInstanceOf[Double], latV.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (lon, lat) =>
-      s"graft.functions.MortonCode.interleave($lon, $lat)")
-
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }

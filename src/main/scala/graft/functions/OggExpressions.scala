@@ -38,25 +38,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * built-in crc32 plays for the gzip gates.
   */
 case class OggMeta(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "ogg_meta"
-  override def dataType: DataType = OggMeta.Schema
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    OggMeta.walk(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.OggMeta.walk($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
+    extends UnaryKernel("ogg_meta", KernelInput.Binary, OggMeta.Schema, "OggMeta.walk",
+      quarantines = true) {
+  override def nullSafeEval(v: Any): Any = OggMeta.walk(v.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 

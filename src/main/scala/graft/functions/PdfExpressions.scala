@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -47,48 +45,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * routing before any heavy decode); the walk itself is from ISO 32000.
   */
 case class PdfMeta(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "pdf_meta"
-  override def dataType: DataType = PdfWalk.MetaSchema
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    PdfWalk.meta(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.PdfWalk.meta($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
+    extends UnaryKernel("pdf_meta", KernelInput.Binary, PdfWalk.MetaSchema, "PdfWalk.meta",
+      quarantines = true) {
+  override def nullSafeEval(v: Any): Any = PdfWalk.meta(v.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 case class PdfText(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "pdf_text"
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    PdfWalk.text(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.PdfWalk.text($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
+    extends UnaryKernel("pdf_text", KernelInput.Binary, StringType, "PdfWalk.text",
+      quarantines = true) {
+  override def nullSafeEval(v: Any): Any = PdfWalk.text(v.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -102,25 +68,9 @@ case class PdfText(child: Expression)
   * a torn or encrypted document yields NULL like [[PdfMeta]].
   */
 case class PdfInfo(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "pdf_info"
-  override def dataType: DataType = PdfWalk.InfoSchema
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    PdfWalk.info(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.PdfWalk.info($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
+    extends UnaryKernel("pdf_info", KernelInput.Binary, PdfWalk.InfoSchema, "PdfWalk.info",
+      quarantines = true) {
+  override def nullSafeEval(v: Any): Any = PdfWalk.info(v.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 

@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -112,27 +109,11 @@ object PqCodec {
 /** pq_encode(vector) -> array<int> of M codebook indices. */
 case class PqEncode(child: Expression, codebooks: Array[Float], m: Int, k: Int,
                     subDim: Int)
-    extends UnaryExpression {
-  override def prettyName: String = "pq_encode"
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<float>, got ${other.simpleString}")
-  }
-
+    extends UnaryKernel("pq_encode", KernelInput.FloatVector,
+      ArrayType(IntegerType, containsNull = false), "PqCodec.encode", quarantines = true) {
   override def nullSafeEval(v: Any): Any =
     PqCodec.encode(v.asInstanceOf[ArrayData], codebooks, m, k, subDim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cb = ctx.addReferenceObj("codebooks", codebooks, "float[]")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.PqCodec.encode($c, $cb, $m, $k, $subDim);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  }
-
+  override protected def kernelArgs: Seq[Any] = Seq(codebooks, m, k, subDim)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -142,27 +123,11 @@ case class PqEncode(child: Expression, codebooks: Array[Float], m: Int, k: Int,
   */
 case class PqDecode(child: Expression, codebooks: Array[Float], m: Int, k: Int,
                     subDim: Int)
-    extends UnaryExpression {
-  override def prettyName: String = "pq_decode"
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<int>, got ${other.simpleString}")
-  }
-
+    extends UnaryKernel("pq_decode", KernelInput.IntArray,
+      ArrayType(FloatType, containsNull = false), "PqCodec.decode", quarantines = true) {
   override def nullSafeEval(v: Any): Any =
     PqCodec.decode(v.asInstanceOf[ArrayData], codebooks, m, k, subDim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cb = ctx.addReferenceObj("codebooks", codebooks, "float[]")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.PqCodec.decode($c, $cb, $m, $k, $subDim);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  }
-
+  override protected def kernelArgs: Seq[Any] = Seq(codebooks, m, k, subDim)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -170,30 +135,10 @@ case class PqDecode(child: Expression, codebooks: Array[Float], m: Int, k: Int,
   * prepared ADC table.
   */
 case class PqAdcDistance(child: Expression, table: Array[Double], m: Int, k: Int)
-    extends UnaryExpression {
-  override def prettyName: String = "pq_adc"
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(IntegerType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<int>, got ${other.simpleString}")
-  }
-
+    extends UnaryKernel("pq_adc", KernelInput.IntArray, DoubleType, "PqCodec.adc",
+      quarantines = true) {
   override def nullSafeEval(v: Any): Any =
     PqCodec.adc(v.asInstanceOf[ArrayData], table, m, k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val tab = ctx.addReferenceObj("adcTable", table, "double[]")
-    // freshName: two pq_adc calls can inline into one codegen function
-    // when the child is non-nullable — a fixed local name would collide.
-    val res = ctx.freshName("adcRes")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      java.lang.Double $res = graft.functions.PqCodec.adc($c, $tab, $m, $k);
-      ${ev.isNull} = $res == null;
-      ${ev.value} = ${ev.isNull} ? -1.0 : $res.doubleValue();
-    """)
-  }
-
+  override protected def kernelArgs: Seq[Any] = Seq(table, m, k)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

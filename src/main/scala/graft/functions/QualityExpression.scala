@@ -2,9 +2,7 @@ package graft.functions
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -22,22 +20,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * every statistic in one evaluation.
   */
 case class QualityScore(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "quality_score"
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    QualityScore.compute(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.QualityScore.compute($c);")
-
+    extends UnaryKernel("quality_score", KernelInput.Utf8, DoubleType, "QualityScore.compute",
+      quarantines = false) {
+  override def nullSafeEval(v: Any): Any = QualityScore.compute(v.asInstanceOf[UTF8String])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** robots_allowed(robots_txt, path) for a fixed crawler agent — the
@@ -78,27 +78,11 @@ case class RobotsAllowed(left: Expression, right: Expression, agent: String)
   * recrawl decision is the complete discovery chain.
   */
 case class RobotsSitemaps(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  override def prettyName: String = "robots_sitemaps"
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string robots_txt, got ${other.simpleString}")
-  }
-
+    extends UnaryKernel("robots_sitemaps", KernelInput.JavaString.as("string robots_txt"),
+      ArrayType(StringType, containsNull = false), "Robots.sitemapArray", quarantines = true) {
   override def nullSafeEval(robots: Any): Any =
     Robots.sitemapArray(robots.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, r => s"""
-      ${ev.value} = graft.functions.Robots.sitemapArray($r.toString());
-    """)
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** robots_crawl_delay(robots_txt, default_seconds) for a fixed crawler

@@ -2,9 +2,7 @@ package graft.functions
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -22,26 +20,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * spaces only; split keeps trailing empties (limit -1).
   */
 case class WordShingles(child: Expression, n: Int, distinct: Boolean)
-    extends UnaryExpression {
+    extends UnaryKernel("word_shingles", KernelInput.Utf8,
+      ArrayType(StringType, containsNull = false), "WordShingles.compute", quarantines = false) {
   require(n >= 1, "shingle size must be >= 1")
-  override def prettyName: String = "word_shingles"
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.simpleString}")
-  }
-
   override def nullSafeEval(v: Any): Any =
     WordShingles.compute(v.asInstanceOf[UTF8String], n, distinct)
-
-  // codegen emits a static call into the compiled kernel: the expression
-  // stays inside the WholeStageCodegen span (CodegenFallback would split
-  // it) and the JIT sees one monomorphic call, same as the eval path
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WordShingles.compute($c, $n, $distinct);")
-
+  override protected def kernelArgs: Seq[Any] = Seq(n, distinct)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 

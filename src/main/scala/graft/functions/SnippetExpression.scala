@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -21,16 +19,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * text holds no hit (no window to rank).
   */
 case class SnippetWindow(child: Expression, terms: Seq[String], w: Int)
-    extends UnaryExpression {
+    extends UnaryKernel("snippet_window", KernelInput.JavaString, SnippetWindow.Schema,
+      "SnippetWindow.compute", quarantines = true) {
   require(terms.nonEmpty && w >= 1, "snippet_window: need terms and a positive width")
-  override def prettyName: String = "snippet_window"
-  override def dataType: DataType = SnippetWindow.Schema
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.simpleString}")
-  }
 
   @transient private lazy val termSet: java.util.HashSet[String] = {
     val s = new java.util.HashSet[String]()
@@ -40,15 +31,7 @@ case class SnippetWindow(child: Expression, terms: Seq[String], w: Int)
 
   override def nullSafeEval(v: Any): Any =
     SnippetWindow.compute(v.asInstanceOf[UTF8String].toString, termSet, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val setRef = ctx.addReferenceObj("termSet", termSet, "java.util.HashSet<String>")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.SnippetWindow.compute($c.toString(), $setRef, $w);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  }
-
+  override protected def kernelArgs: Seq[Any] = Seq(termSet, w)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -45,25 +43,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * gzip member's CRC-32 via [[Gunzip]]).
   */
 case class TarEntries(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "tar_entries"
-  override def dataType: DataType = TarEntries.Schema
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    TarEntries.list(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.TarEntries.list($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
+    extends UnaryKernel("tar_entries", KernelInput.Binary, TarEntries.Schema, "TarEntries.list",
+      quarantines = true) {
+  override def nullSafeEval(v: Any): Any = TarEntries.list(v.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -72,26 +54,10 @@ case class TarEntries(child: Expression)
   * structural malformation of the archive.
   */
 case class TarExtract(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def prettyName: String = "tar_extract"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (a, b) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (binary, string), got (${a.simpleString}, ${b.simpleString})")
-    }
-
+    extends BinaryKernel("tar_extract", KernelInput.Binary, KernelInput.JavaString, BinaryType,
+      "TarEntries.extract", quarantines = true) {
   override def nullSafeEval(b: Any, n: Any): Any =
     TarEntries.extract(b.asInstanceOf[Array[Byte]], n.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, n) => s"""
-      ${ev.value} = graft.functions.TarEntries.extract($b, $n.toString());
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }

@@ -2,9 +2,7 @@ package graft.functions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -24,22 +22,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * allocation is only paid by rows that need it. NULL -> NULL.
   */
 case class NfcNormalize(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "nfc_normalize"
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    NfcNormalize.compute(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.NfcNormalize.compute($c);")
-
+    extends UnaryKernel("nfc_normalize", KernelInput.Utf8, StringType, "NfcNormalize.compute",
+      quarantines = false) {
+  override def nullSafeEval(v: Any): Any = NfcNormalize.compute(v.asInstanceOf[UTF8String])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 

@@ -1,8 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -129,38 +127,16 @@ private[graft] object UrlKernel {
   }
 }
 
-private[graft] trait UrlStringInput { self: UnaryExpression =>
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects string, got ${other.simpleString}")
-  }
-  override def nullable: Boolean = true
-  override def dataType: DataType = StringType
-}
-
 case class UrlCanonicalize(child: Expression)
-    extends UnaryExpression with UrlStringInput {
-  override def prettyName: String = "url_canonicalize"
-  override def nullSafeEval(v: Any): Any =
-    UrlKernel.canonicalize(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.UrlKernel.canonicalize($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
+    extends UnaryKernel("url_canonicalize", KernelInput.Utf8, StringType, "UrlKernel.canonicalize",
+      quarantines = true) {
+  override def nullSafeEval(v: Any): Any = UrlKernel.canonicalize(v.asInstanceOf[UTF8String])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 case class UrlHost(child: Expression)
-    extends UnaryExpression with UrlStringInput {
-  override def prettyName: String = "url_host"
-  override def nullSafeEval(v: Any): Any =
-    UrlKernel.host(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.UrlKernel.host($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
+    extends UnaryKernel("url_host", KernelInput.Utf8, StringType, "UrlKernel.host",
+      quarantines = true) {
+  override def nullSafeEval(v: Any): Any = UrlKernel.host(v.asInstanceOf[UTF8String])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }

@@ -1,9 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -35,25 +33,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * timescale, and unknown containers all yield NULL.
   */
 case class VideoMeta(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "video_meta"
-  override def dataType: DataType = VideoMeta.Schema
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    VideoMeta.parse(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.VideoMeta.parse($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
+    extends UnaryKernel("video_meta", KernelInput.Binary, VideoMeta.Schema, "VideoMeta.parse",
+      quarantines = true) {
+  override def nullSafeEval(v: Any): Any = VideoMeta.parse(v.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -218,25 +200,9 @@ object VideoMeta {
   * skipped unread. Caps: 4096 frames, 256 MB total payload.
   */
 case class AviFrames(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "avi_frames"
-  override def dataType: DataType = ArrayType(BinaryType)
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    AviFrames.frames(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.AviFrames.frames($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
+    extends UnaryKernel("avi_frames", KernelInput.Binary, ArrayType(BinaryType), "AviFrames.frames",
+      quarantines = true) {
+  override def nullSafeEval(v: Any): Any = AviFrames.frames(v.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 

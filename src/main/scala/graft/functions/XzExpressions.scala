@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.BinaryType
 
 /** XZ/LZMA2 inflation as a scan-fused expression — the third member of
   * the [[Gunzip]]/[[Zunstd]] mirror-encoding family: the long tail of
@@ -29,32 +27,13 @@ import org.apache.spark.sql.types.{BinaryType, DataType}
   * overhead class.
   */
 case class Zunxz(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "zunxz"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    Zunxz.inflate(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Zunxz.inflate($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
+    extends UnaryKernel("zunxz", KernelInput.Binary, BinaryType, "Zunxz.inflate",
+      quarantines = true) {
+  override def nullSafeEval(v: Any): Any = Zunxz.inflate(v.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 object Zunxz {
-  /** Inflation cap per blob — the same bomb refusal as [[Gunzip]]. */
-  val MaxBytes: Int = 256 * 1024 * 1024
-
   /** Decoder memory budget in KiB: refuses streams whose declared
     * dictionary alone would out-allocate the inflation cap (mirrors
     * write <= 64 MiB dictionaries; xz -9 is 64 MiB).
@@ -81,17 +60,7 @@ object Zunxz {
       // — the arbiter of validity, like Zunstd's stream path
       val in = new org.tukaani.xz.XZInputStream(
         new java.io.ByteArrayInputStream(b), MemLimitKiB)
-      try {
-        val out = new java.io.ByteArrayOutputStream(math.min(b.length * 4, 1 << 20))
-        val buf = new Array[Byte](64 * 1024)
-        var n = in.read(buf)
-        while (n >= 0) {
-          if (out.size().toLong + n > MaxBytes) return null // bomb refusal
-          out.write(buf, 0, n)
-          n = in.read(buf)
-        }
-        out.toByteArray
-      } finally in.close()
+      Inflation.readCapped(in, b.length)
     } catch {
       // torn stream (EOFException), check mismatch / garbage
       // (CorruptedInputException), declared-dictionary bomb

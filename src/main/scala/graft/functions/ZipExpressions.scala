@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -37,25 +34,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * extensible data sector. Extraction keeps the 256 MB bound.
   */
 case class ZipEntries(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "zip_entries"
-  override def dataType: DataType = ZipEntries.Schema
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    ZipEntries.list(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.ZipEntries.list($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
+    extends UnaryKernel("zip_entries", KernelInput.Binary, ZipEntries.Schema, "ZipEntries.list",
+      quarantines = true) {
+  override def nullSafeEval(v: Any): Any = ZipEntries.list(v.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
@@ -65,26 +46,10 @@ case class ZipEntries(child: Expression)
   * mismatch, or any structural malformation.
   */
 case class ZipExtract(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def prettyName: String = "zip_extract"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects (binary, string), got (${l.simpleString}, ${r.simpleString})")
-    }
-
+    extends BinaryKernel("zip_extract", KernelInput.Binary, KernelInput.JavaString, BinaryType,
+      "ZipEntries.extract", quarantines = true) {
   override def nullSafeEval(b: Any, n: Any): Any =
     ZipEntries.extract(b.asInstanceOf[Array[Byte]], n.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, n) => s"""
-      ${ev.value} = graft.functions.ZipEntries.extract($b, $n.toString());
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
@@ -96,9 +61,6 @@ object ZipEntries {
     StructField("csize", LongType),
     StructField("usize", LongType)))
   val Schema: DataType = ArrayType(EntrySchema, containsNull = false)
-
-  /** Inflation cap per entry (the Gunzip bomb posture). */
-  val MaxBytes: Int = 256 * 1024 * 1024
 
   private final case class Entry(name: String, method: Int, crc: Long,
                                  csize: Long, usize: Long, localOff: Long)
@@ -250,7 +212,7 @@ object ZipEntries {
     val es = walk(b)
     if (es == null) return null
     val e = es.find(_.name == name).getOrElse(return null)
-    if (e.usize > MaxBytes || e.csize > MaxBytes) return null
+    if (e.usize > Inflation.MaxBytes || e.csize > Inflation.MaxBytes) return null
     val lp = e.localOff.toInt
     val dataOff = lp + 30 + u16(b, lp + 26) + u16(b, lp + 28)
     if (dataOff + e.csize > b.length) return null

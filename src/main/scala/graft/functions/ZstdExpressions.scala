@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.BinaryType
 
 /** Zstandard inflation as a scan-fused expression — [[Gunzip]]'s
   * sibling for the encoding dataset mirrors are migrating to: `.tar.zst`
@@ -24,32 +22,13 @@ import org.apache.spark.sql.types.{BinaryType, DataType}
   * and `tar_entries`.
   */
 case class Zunstd(child: Expression)
-    extends UnaryExpression {
-  override def prettyName: String = "zunstd"
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects binary, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    Zunstd.inflate(v.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.Zunstd.inflate($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-
+    extends UnaryKernel("zunstd", KernelInput.Binary, BinaryType, "Zunstd.inflate",
+      quarantines = true) {
+  override def nullSafeEval(v: Any): Any = Zunstd.inflate(v.asInstanceOf[Array[Byte]])
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 object Zunstd {
-  /** Inflation cap per blob — the same bomb refusal as [[Gunzip]]. */
-  val MaxBytes: Int = 256 * 1024 * 1024
-
   private def isFrameMagic(b: Array[Byte], p: Int): Boolean =
     p + 4 <= b.length &&
       (b(p) & 0xFF) == 0x28 && (b(p + 1) & 0xFF) == 0xB5 &&
@@ -74,11 +53,11 @@ object Zunstd {
     if (isFrameMagic(b, 0)) {
       try {
         val cs = com.github.luben.zstd.Zstd.getFrameContentSize(b)
-        if (cs >= 0 && cs <= MaxBytes) {
+        if (cs >= 0 && cs <= Inflation.MaxBytes) {
           val out = new Array[Byte](cs.toInt)
           val n = com.github.luben.zstd.Zstd.decompress(out, b)
           if (n == cs) return out
-        } else if (cs > MaxBytes) return null // declared bomb: refuse
+        } else if (cs > Inflation.MaxBytes) return null // declared bomb: refuse
       } catch {
         case _: com.github.luben.zstd.ZstdException => () // stream decides
       }
@@ -90,17 +69,7 @@ object Zunstd {
       // frames (chunked arrival) and would turn a TORN blob into a
       // silent short read; the default throws on a truncated source,
       // which is exactly the quarantine this contract needs
-      try {
-        val out = new java.io.ByteArrayOutputStream(math.min(b.length * 4, 1 << 20))
-        val buf = new Array[Byte](64 * 1024)
-        var n = in.read(buf)
-        while (n >= 0) {
-          if (out.size().toLong + n > MaxBytes) return null // bomb refusal
-          out.write(buf, 0, n)
-          n = in.read(buf)
-        }
-        out.toByteArray
-      } finally in.close()
+      Inflation.readCapped(in, b.length)
     } catch {
       case _: java.io.IOException => null // torn frame / checksum / garbage
     }

@@ -3485,7 +3485,7 @@ object Reference extends QueryPack {
     // artifact contract as x4 — a trained cross-encoder export swaps in
     // without touching the execution path.
     "x8_cross_rerank" -> { (s, d) =>
-      val path = s"/dev/shm/graft_ce_${new java.io.File(d).getName}"
+      val path = Tables.fixture("ce", d)
       graft.operators.NeuralEmbed.save(s,
         graft.operators.NeuralEmbed.generate(EmbedDim, CrossHidden, 1), path)
       val model = graft.operators.NeuralEmbed.load(s, path)
@@ -3511,7 +3511,7 @@ object Reference extends QueryPack {
       val vec = Knn.topK(emb, col("embedding"), probe, 20, col("vec_id"))
         .select(col("vec_id").as("id"), (-col("dist")).as("score"))
       val fused = graft.operators.Hybrid.rrf(Seq(lex, vec), k = 12)
-      val path = s"/dev/shm/graft_ce_${new java.io.File(d).getName}"
+      val path = Tables.fixture("ce", d)
       graft.operators.NeuralEmbed.save(s,
         graft.operators.NeuralEmbed.generate(EmbedDim, CrossHidden, 1), path)
       val model = graft.operators.NeuralEmbed.load(s, path)
@@ -3533,7 +3533,7 @@ object Reference extends QueryPack {
     // restatement of the same forward pass.
     "x11_onnx_embed_search" -> { (s, d) =>
       import s.implicits._
-      val path = s"/dev/shm/graft_onnx_${new java.io.File(d).getName}/model.onnx"
+      val path = s"${Tables.fixture("onnx", d)}/model.onnx"
       graft.operators.OnnxMlp.writeFile(
         graft.operators.NeuralEmbed.generate(OnnxD0, OnnxHidden, OnnxOut), path)
       val model = graft.operators.OnnxMlp.readFile(path)
@@ -3571,7 +3571,7 @@ object Reference extends QueryPack {
           .as[graft.operators.Embed.TextRow], model).toDF()
         .filter(dot_product(col("embedding"), col("embedding")) > 0)
       val idx = graft.operators.Ivf.build(emb, "id", "embedding", nlist = 8, iters = 5)
-      val path = s"/dev/shm/graft_ivf_x12_${new java.io.File(d).getName}"
+      val path = Tables.fixture("ivf_x12", d)
       graft.operators.Ivf.save(idx, path)
       graft.operators.Ivf.searchSaved(s, path,
         graft.operators.NeuralEmbed.embedQuery(EmbedQuery, model),
@@ -3607,7 +3607,7 @@ object Reference extends QueryPack {
           .filter(dot_product(col("embedding"), col("embedding")) > 0)
       val emb = encode(curated.select(col("doc_id").as("id"), col("text")))
       val idx = graft.operators.Ivf.build(emb, "id", "embedding", nlist = 8, iters = 5)
-      val path = s"/dev/shm/graft_ivf_x13_${new java.io.File(d).getName}"
+      val path = Tables.fixture("ivf_x13", d)
       graft.operators.Ivf.save(idx, path)
       graft.operators.Ivf.snapshotStats(s, path)
       val drifted = encode(docs
@@ -3625,7 +3625,7 @@ object Reference extends QueryPack {
 
     "x4_neural_embed_search" -> { (s, d) =>
       import s.implicits._
-      val path = s"/dev/shm/graft_nn_${new java.io.File(d).getName}"
+      val path = Tables.fixture("nn", d)
       graft.operators.NeuralEmbed.save(s,
         graft.operators.NeuralEmbed.generate(EmbedDim, NeuralHidden, EmbedDim), path)
       val model = graft.operators.NeuralEmbed.load(s, path)

@@ -827,7 +827,7 @@ object Relational extends QueryPack {
     // read side is exchange-free), not within one query. The gate stays
     // as the priced physical-design comparison.
     "g2b_triangles_bucketed" -> { (s, d) =>
-      val path = s"/dev/shm/graft_tri_${new java.io.File(d).getName}"
+      val path = Tables.fixture("tri", d)
       graft.operators.Triangles.perNodeBucketed(coPurchasePairs(s, d), "p1", "p2",
         table = "graft_tri_oriented", path = path)
         .orderBy(col("n_tri").desc, col("node").asc)
@@ -842,7 +842,7 @@ object Relational extends QueryPack {
     // the gate pins shortest-round-trip double formatting and timestamp
     // codec fidelity, not just the aggregate
     "q32_csv_roundtrip" -> { (s, d) =>
-      val path = s"/dev/shm/graft_csv_${new java.io.File(d).getName}"
+      val path = Tables.fixture("csv", d)
       Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           col("o_orderstatus"), col("o_orderdate"))
@@ -861,7 +861,7 @@ object Relational extends QueryPack {
     // JSON-lines sink + source round-trip (same posture for the JSON
     // codec; e3 covers json PARSING, this covers the sink/source pair)
     "q33_json_roundtrip" -> { (s, d) =>
-      val path = s"/dev/shm/graft_json_${new java.io.File(d).getName}"
+      val path = Tables.fixture("json", d)
       Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
         .write.mode("overwrite").json(path)
@@ -879,7 +879,7 @@ object Relational extends QueryPack {
     // q32/q33): the oracle states the aggregate over the ORIGINAL
     // table, so equality pins codec fidelity end to end
     "q37_orc_roundtrip" -> { (s, d) =>
-      val path = s"/dev/shm/graft_orc_${new java.io.File(d).getName}"
+      val path = Tables.fixture("orc", d)
       Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag"),
           col("l_shipdate"))
@@ -901,8 +901,8 @@ object Relational extends QueryPack {
     // the fact scan's partition filters.
     "q38_dynamic_partition_pruning" -> { (s, d) =>
       val sfx = new java.io.File(d).getName.replace('.', '_')
-      val factPath = s"/dev/shm/graft_dpp_fact_$sfx"
-      val dimPath = s"/dev/shm/graft_dpp_dim_$sfx"
+      val factPath = Tables.fixture("dpp_fact", sfx)
+      val dimPath = Tables.fixture("dpp_dim", sfx)
       val li = Tables.lineitem(s, d)
         .withColumn("ship_month", date_format(col("l_shipdate"), "yyyy-MM"))
       li.select(col("l_quantity"), col("l_extendedprice"), col("l_discount"),
@@ -1212,7 +1212,7 @@ object Relational extends QueryPack {
     // (oracle over the ORIGINAL table); the row-group skipping the
     // layout exists for is measured in BASELINE.md (round 12)
     "q45_zorder_layout" -> { (s, d) =>
-      val path = s"/dev/shm/graft_zorder_${new java.io.File(d).getName}"
+      val path = Tables.fixture("zorder", d)
       // hermetic rep: remove any previous layout FIRST so every run
       // does identical work whether or not the path exists (overwrite
       // mode deletes too, but then rep 1 and rep N time different
@@ -1243,7 +1243,7 @@ object Relational extends QueryPack {
     // At 100 TB this is how a lake actually grows: columns appear over
     // time, history is never rewritten.
     "q44_schema_evolution" -> { (s, d) =>
-      val base = s"/dev/shm/graft_evo_${new java.io.File(d).getName}"
+      val base = Tables.fixture("evo", d)
       val o = Tables.orders(s, d)
       o.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_totalprice"))

@@ -304,7 +304,7 @@ object Text extends QueryPack {
     // hash-bucketed by term for directory pruning, doclens + stats
     // sidecars): must select the identical ids as t18's from-scratch pass
     "t28_inverted_search" -> { (s, d) =>
-      val path = s"/dev/shm/graft_invidx_${new java.io.File(d).getName}"
+      val path = Tables.fixture("invidx", d)
       graft.operators.InvertedIndex.save(Tables.documents(s, d),
         "doc_id", "text", path, buckets = 16)
       graft.operators.InvertedIndex.searchSaved(s, path,
@@ -323,7 +323,7 @@ object Text extends QueryPack {
     // mechanics are spec-pinned (filesystem facts DuckDB cannot state).
     "t52_index_compaction" -> { (s, d) =>
       val docs = Tables.documents(s, d)
-      val path = s"/dev/shm/graft_invidx_c_${new java.io.File(d).getName}"
+      val path = Tables.fixture("invidx_c", d)
       graft.operators.InvertedIndex.save(
         docs.filter(pmod(col("doc_id"), lit(3)) === 0),
         "doc_id", "text", path, buckets = 8)

@@ -309,15 +309,15 @@ object Vectors extends QueryPack {
     // spec: k-means trained on the base subset, final assignment over the
     // FULL corpus — appendSaved's nearest-stored-centroid rule is exactly
     // the af rule, so the v7 oracle extends by swapping the train source.
-    // The saved files live under /dev/shm (this host's root disk stalls;
-    // the index is a few MB) keyed by sf so runs stay isolated.
+    // The saved files live at a Tables.fixture path (memory-backed, keyed
+    // by sf so runs stay isolated; the index is a few MB).
     "v11_ivf_append_search" -> { (s, d) =>
       val e = Tables.embeddings(s, d)
       val base = e.filter(col("vec_id") % 5 =!= 0)
       val extra = e.filter(col("vec_id") % 5 === 0)
       val idx = graft.operators.Ivf.build(base, "vec_id", "embedding",
         nlist = 8, iters = 5)
-      val path = s"/dev/shm/graft_ivf_v11_${new java.io.File(d).getName}"
+      val path = Tables.fixture("ivf_v11", d)
       graft.operators.Ivf.save(idx, path)
       graft.operators.Ivf.appendSaved(s, path, extra, "vec_id", "embedding")
       graft.operators.Ivf.searchSaved(s, path, probeOf(s, d, 0L), k = 10, nprobe = 3)
@@ -382,7 +382,7 @@ object Vectors extends QueryPack {
     // on the base slice, codes = argmin over the FULL corpus — the
     // stored-codebook encode rule is exactly the final-assignment rule,
     // so the v12 oracle extends by swapping the train source (the v11
-    // pattern). Saved files under /dev/shm keyed by sf (v11 precedent).
+    // pattern). Saved files at a Tables.fixture path (v11 precedent).
     "v14_pq_save_append_search" -> { (s, d) =>
       val e = Tables.embeddings(s, d)
       val base = e.filter(col("vec_id") % 5 =!= 0)
@@ -390,7 +390,7 @@ object Vectors extends QueryPack {
       val model = graft.operators.Pq.train(base, "vec_id", "embedding",
         m = 4, k = 8, iters = 3)
       val codes = graft.operators.Pq.encode(base, "vec_id", "embedding", model)
-      val path = s"/dev/shm/graft_pq_v14_${new java.io.File(d).getName}"
+      val path = Tables.fixture("pq_v14", d)
       graft.operators.Pq.save(model, codes, "vec_id", path)
       graft.operators.Pq.appendSaved(s, path, extra, "vec_id", "embedding")
       graft.operators.Pq.searchSavedADC(s, path, probeOf(s, d, 0L), k = 10)
@@ -447,7 +447,7 @@ object Vectors extends QueryPack {
       val extra = e.filter(col("vec_id") % 5 === 0)
       val model = graft.operators.Sq.train(base, "embedding")
       val codes = graft.operators.Sq.encode(base, "vec_id", "embedding", model)
-      val path = s"/dev/shm/graft_sq_${new java.io.File(d).getName}"
+      val path = Tables.fixture("sq", d)
       graft.operators.Sq.save(model, codes, "vec_id", path)
       graft.operators.Sq.appendSaved(s, path, extra, "vec_id", "embedding")
       graft.operators.Sq.searchSaved(s, path, probeOf(s, d, 0L), r = 10)
@@ -551,7 +551,7 @@ object Vectors extends QueryPack {
     "v20_rebalanced_search" -> { (s, d) =>
       val e = Tables.embeddings(s, d)
       val idx = graft.operators.Ivf.build(e, "vec_id", "embedding", nlist = 8, iters = 5)
-      val path = s"/dev/shm/graft_ivf_v20_${new java.io.File(d).getName}"
+      val path = Tables.fixture("ivf_v20", d)
       graft.operators.Ivf.save(idx, path)
       graft.operators.Ivf.rebalanceSaved(s, path,
         maxBucketRows = e.count() / 8, splitInto = 2)
@@ -572,7 +572,7 @@ object Vectors extends QueryPack {
     "v38_drift_maintenance" -> { (s, d) =>
       val e = Tables.embeddings(s, d)
       val base = e.filter(col("label") =!= 1)
-      val path = s"/dev/shm/graft_ivf_v38_${new java.io.File(d).getName}"
+      val path = Tables.fixture("ivf_v38", d)
       val idx = graft.operators.Ivf.build(base, "vec_id", "embedding",
         nlist = 8, iters = 5)
       graft.operators.Ivf.save(idx, path)
@@ -608,7 +608,7 @@ object Vectors extends QueryPack {
         nlist = 8, iters = 5)
       val model = graft.operators.Pq.train(base, "vec_id", "embedding",
         m = 4, k = 8, iters = 3)
-      val path = s"/dev/shm/graft_ivfpq_v39_${new java.io.File(d).getName}"
+      val path = Tables.fixture("ivfpq_v39", d)
       graft.operators.IvfPq.save(idx, model, path)
       graft.operators.IvfPq.snapshotStats(s, path)
       val drifted = e.filter(col("label") === 1 && col("vec_id") =!= 0)
@@ -650,7 +650,7 @@ object Vectors extends QueryPack {
     "v22_ivf_knn_join_saved" -> { (s, d) =>
       val e = Tables.embeddings(s, d)
       val idx = graft.operators.Ivf.build(e, "vec_id", "embedding", nlist = 8, iters = 5)
-      val path = s"/dev/shm/graft_ivf_v22_${new java.io.File(d).getName}"
+      val path = Tables.fixture("ivf_v22", d)
       graft.operators.Ivf.save(idx, path)
       graft.operators.Ivf.knnJoinApproxSaved(s, path, e.filter(col("vec_id") < 8),
         "vec_id", "embedding", k = 3, nprobe = 3)
@@ -664,7 +664,7 @@ object Vectors extends QueryPack {
     "v23_index_stats" -> { (s, d) =>
       val e = Tables.embeddings(s, d)
       val idx = graft.operators.Ivf.build(e, "vec_id", "embedding", nlist = 8, iters = 5)
-      val path = s"/dev/shm/graft_ivf_v23_${new java.io.File(d).getName}"
+      val path = Tables.fixture("ivf_v23", d)
       graft.operators.Ivf.save(idx, path)
       graft.operators.Ivf.savedBucketStats(s, path)
         .orderBy(col("bucket"))
@@ -726,7 +726,7 @@ object Vectors extends QueryPack {
       val idx = graft.operators.Ivf.build(e, "vec_id", "embedding", nlist = 8, iters = 5)
       val model = graft.operators.Pq.train(e, "vec_id", "embedding",
         m = 4, k = 8, iters = 3)
-      val path = s"/dev/shm/graft_ivfpq_v16_${new java.io.File(d).getName}"
+      val path = Tables.fixture("ivfpq_v16", d)
       graft.operators.IvfPq.save(idx, model, path)
       graft.operators.IvfPq.searchSaved(s, path, probeOf(s, d, 0L), k = 10, nprobe = 3)
         .select(col("id"))
@@ -742,7 +742,7 @@ object Vectors extends QueryPack {
       val idx = graft.operators.Ivf.build(e, "vec_id", "embedding", nlist = 8, iters = 5)
       val model = graft.operators.Pq.train(e, "vec_id", "embedding",
         m = 4, k = 8, iters = 3)
-      val path = s"/dev/shm/graft_ivfpq_v17_${new java.io.File(d).getName}"
+      val path = Tables.fixture("ivfpq_v17", d)
       graft.operators.IvfPq.save(idx, model, path)
       graft.operators.IvfPq.searchSavedRefine(s, path, e, "vec_id", "embedding",
         probeOf(s, d, 0L), k = 10, r = 40, nprobe = 3)
@@ -908,7 +908,7 @@ object Vectors extends QueryPack {
     // activation under the float32-exact 2^24 assert at this width.
     "x4w_neural_encode_1024" -> { (s, d) =>
       import s.implicits._
-      val path = s"/dev/shm/graft_nnw_${new java.io.File(d).getName}"
+      val path = Tables.fixture("nnw", d)
       graft.operators.NeuralEmbed.save(s,
         graft.operators.NeuralEmbed.generate(256, 256, 1024), path)
       val model = graft.operators.NeuralEmbed.load(s, path)

@@ -67,24 +67,14 @@ class BmpSpec extends AnyFunSuite {
 
   test("bmp_pixel_stats: codegen/interpreted agreement through SQL registration") {
     import spark.implicits._
+    import org.apache.spark.sql.functions.expr
     val blob = bmp(3, 3, (r, x) => (r * 20 + x, x * 30, 255 - r * x))
-    Seq((1L, blob), (2L, blob.dropRight(1))).toDF("id", "blob")
-      .createOrReplaceTempView("bmp_tmp")
+    val df = Seq((1L, blob), (2L, blob.dropRight(1)), (3L, null)).toDF("id", "blob")
     graft.functions.GraftFunctions.register(spark)
-    def run(): Seq[String] =
-      spark.sql("SELECT id, bmp_pixel_stats(blob) FROM bmp_tmp ORDER BY id")
-        .collect().map(_.toString).toSeq
-    val key = "spark.sql.codegen.factoryMode"
-    val prev = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key, "NO_CODEGEN")
-      val interp = run()
-      spark.conf.set(key, "CODEGEN_ONLY")
-      assert(run() === interp)
-      assert(interp(1).contains("null")) // the torn row quarantined
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    val (interp, gen) = CodegenParity.rows(df,
+      Seq("id", "bmp_pixel_stats(blob)", "bmp_ahash(blob)").map(expr): _*)
+    assert(gen === interp)
+    assert(interp(1) === "[2,null,null]") // the torn row quarantined
+    assert(interp(2) === "[3,null,null]")
   }
 }

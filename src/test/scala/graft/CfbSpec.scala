@@ -377,4 +377,20 @@ class CfbSpec extends AnyFunSuite {
     val noWb = build(Seq("Book" -> bof(0x0005)))
     assert(XlsCells.cells(noWb) === null)
   }
+
+  test("cfb_entries, cfb_extract, doc_text, xls_cells: codegen/interpreted agreement") {
+    import graft.functions.CfbExtract
+    import CodegenParity.{column, input}
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val doc = build(docStreams(Seq(("Hello legacy Word.\r", true)), 1))
+    val xls = buildXls()
+    val df = Seq((doc, xls), (doc.take(600), xls.take(600)), (null, null)).toDF("doc", "xls")
+    val (interp, gen) = CodegenParity.rows(df, column(CfbEntries(input("doc"))),
+      column(CfbExtract(input("doc"), org.apache.spark.sql.catalyst.expressions.Literal("1Table"))),
+      column(DocText(input("doc"))), column(XlsCells(input("xls"))))
+    assert(interp === gen)
+    assert(!interp.head.contains("null"))
+    assert(interp(2) === "[null,null,null,null]")
+  }
 }

@@ -104,4 +104,15 @@ class FlacSpec extends AnyFunSuite {
     // ...while total == 0 legitimately has no frames
     assert(walk(flacOf(44100, 2, 16, 0L, md5, withFrame = false)).nonEmpty)
   }
+
+  test("flac_streaminfo: codegen/interpreted agreement") {
+    import CodegenParity.{column, input}
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val flac = flacOf(44100, 2, 16, 44100L, Array.tabulate(16)(_.toByte))
+    val df = Seq(Tuple1(flac), Tuple1(flac.take(20)), Tuple1(null)).toDF("flac")
+    val (interp, gen) = CodegenParity.rows(df, column(FlacStreaminfo(input("flac"))))
+    assert(interp === gen)
+    assert(interp.map(_ == "[null]") === Seq(false, true, true))
+  }
 }

@@ -917,34 +917,37 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("round-10 expressions run identically under CODEGEN_ONLY and NO_CODEGEN") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.expr
     val rnd = new scala.util.Random(41)
     val px = Array.fill(6 * 4)(rnd.nextInt(256))
+    val mp3 = Seq.fill(3)(mp3Header(9, 0, 0) ++ new Array[Byte](413)).reduce(_ ++ _)
+    val jpeg = imageIoJpeg(8, 8, 3)
+    val png = pngEncode(2, 2, 1, Array(0, 64, 128, 255), Array(0, 1))
+    // one blob per format, then the same blobs torn, then junk, then NULL
+    val blobs = Seq(gifEncode(6, 4, px), wavHeader(2, 44100, 16),
+      wavPcm(Array[Short](1, -2, 300)), mp3, aviHeader(40000, 10, 1, 32, 24),
+      mjpegAvi(Seq(jpeg), 40000), png, imageIoGif(4, 3, 5)._1, jpeg)
+    val torn = gifEncode(6, 4, px, truncate = 5) +: blobs.tail.map(_.dropRight(3))
+    val junk = blobs.map(_ => "junk".getBytes("UTF-8"))
+    val cols = Seq("gif", "wav", "pcm", "mp3", "avi", "mjpeg", "png", "agif", "jpeg")
+    def row(id: Long, text: String, bs: Seq[Array[Byte]]) = (id, text, bs)
     val df = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta", gifEncode(6, 4, px)),
-      (2L, "  ", gifEncode(6, 4, px, truncate = 5)),
-      (3L, "one two three four five six seven eight", "junk".getBytes("UTF-8")))
-      .toDF("id", "text", "blob")
-    df.createOrReplaceTempView("r10_tmp")
+      row(1L, "alpha beta gamma delta epsilon zeta", blobs),
+      row(2L, "  ", torn),
+      row(3L, "one two three four five six seven eight", junk),
+      row(4L, null, blobs.map(_ => null)))
+      .toDF("id", "text", "bs")
+      .select(($"id" +: $"text" +: cols.indices.map(i => $"bs"(i).as(cols(i)))): _*)
     graft.functions.GraftFunctions.register(spark)
-    def run(): Seq[String] =
-      spark.sql("""SELECT id, fnv64(text), cdc_chunks(text, 4),
-                   gif_pixel_stats(blob) FROM r10_tmp ORDER BY id""")
-        .collect().map(_.toString).toSeq
-    val key = "spark.sql.codegen.factoryMode"
-    val prev = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key, "NO_CODEGEN")
-      val interp = run()
-      spark.conf.set(key, "CODEGEN_ONLY")
-      val gen = run()
-      assert(interp === gen)
-      assert(interp.head.nonEmpty)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    val (interp, gen) = CodegenParity.rows(df, Seq("id", "fnv64(text)",
+      "cdc_chunks(text, 4)", "gif_pixel_stats(gif)", "audio_meta(wav)",
+      "audio_pcm_stats(pcm)", "mp3_frames(mp3)", "video_meta(avi)", "avi_frames(mjpeg)",
+      "image_meta(png)", "image_pixel_stats(png)", "gif_frames(agif)",
+      "jpeg_pixel_stats(jpeg)", "jpeg_rgb_stats(jpeg)").map(expr): _*)
+    assert(interp === gen)
+    assert(interp.head.nonEmpty)
   }
+
   /** Full MJPEG AVI: hand-built RIFF framing (independent offset
     * bookkeeping) around REAL baseline JPEGs written by ImageIO — the
     * independent-encoder differential for [[graft.functions.AviFrames]].

@@ -132,4 +132,16 @@ class OggSpec extends AnyFunSuite {
       assert(OggMeta.crc(b, 0, b.length) === crcRef(b), s"len=$len")
     }
   }
+
+  test("ogg_meta: codegen/interpreted agreement") {
+    import CodegenParity.{column, input}
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val ogg = page(0x02, 0, 9, 0, vorbisId(2, 44100)) ++
+      page(0x04, 960, 9, 1, Array.fill(5)(2: Byte))
+    val df = Seq(Tuple1(ogg), Tuple1(ogg.dropRight(3)), Tuple1(null)).toDF("ogg")
+    val (interp, gen) = CodegenParity.rows(df, column(OggMeta(input("ogg"))))
+    assert(interp === gen)
+    assert(interp.map(_ == "[null]") === Seq(false, true, true))
+  }
 }

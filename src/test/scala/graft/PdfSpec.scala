@@ -315,4 +315,21 @@ class PdfSpec extends AnyFunSuite {
     }
     assert(PdfWalk.text(bomb) === null)
   }
+
+  test("pdf_meta, pdf_text, pdf_info: codegen/interpreted agreement") {
+    import graft.functions.{PdfInfo, PdfMeta, PdfText}
+    import CodegenParity.{column, input}
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val b = new Builder
+    b.obj(1, "<</Type /Catalog /Pages 2 0 R>>")
+    b.obj(2, "<</Type /Pages /Kids [] /Count 0>>")
+    b.obj(3, "<</Title (t) /Producer (graft)>>")
+    val pdf = b.finish(" /Info 3 0 R")
+    val df = Seq(Tuple1(pdf), Tuple1(pdf.dropRight(20)), Tuple1(null)).toDF("pdf")
+    val (interp, gen) = CodegenParity.rows(df, column(PdfMeta(input("pdf"))),
+      column(PdfText(input("pdf"))), column(PdfInfo(input("pdf"))))
+    assert(interp === gen)
+    assert(interp(2) === "[null,null,null]")
+  }
 }

@@ -517,10 +517,11 @@ class TextDedupSpec extends AnyFunSuite {
   }
 
   test("promoted codegen kernels agree across NO_CODEGEN and CODEGEN_ONLY") {
-    import graft.functions.GraftFunctions.{minhash_signature, simhash64, rolling_hash, hashing_tf, hyperplane_bands}
+    import graft.functions.GraftFunctions.{minhash_signature, simhash64, rolling_hash, hashing_tf,
+      hyperplane_bands, fnv64, cm_buckets, nfc_normalize}
     import graft.functions.TextFunctions.{shingle_set, quality_score, html_to_markdown}
     val docs = Tables.documents(spark, sfDir).limit(50)
-    def run(): Seq[String] = docs.select(
+    val (interpreted, codegen) = CodegenParity.rows(docs,
         shingle_set(col("text"), 3).as("sh"),
         html_to_markdown(concat(lit("<b><b><i>x</i></b></b><ol><li>"), col("text"),
           lit("</li></ol>"))).as("md"),
@@ -528,21 +529,12 @@ class TextDedupSpec extends AnyFunSuite {
         simhash64(shingle_set(col("text"), 3)).as("sim"),
         rolling_hash(col("text")).as("rh"),
         quality_score(col("text")).as("q"),
-        hyperplane_bands(hashing_tf(shingle_set(col("text"), 3), 64), 8, 8, 7L).as("hb"))
-      .collect().map(_.toString).toSeq
-    val key = "spark.sql.codegen.factoryMode"
-    val prev = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key, "NO_CODEGEN")
-      val interpreted = run()
-      spark.conf.set(key, "CODEGEN_ONLY")
-      val codegen = run()
-      assert(interpreted === codegen)
-      assert(interpreted.nonEmpty)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+        hyperplane_bands(hashing_tf(shingle_set(col("text"), 3), 64), 8, 8, 7L).as("hb"),
+        fnv64(col("text")).as("fnv"),
+        cm_buckets(col("text"), 4, 64).as("cm"),
+        nfc_normalize(col("text")).as("nfc"))
+    assert(interpreted === codegen)
+    assert(interpreted.nonEmpty)
   }
 
   test("contamination: full overlap scores 1, disjoint scores 0, short docs absent") {

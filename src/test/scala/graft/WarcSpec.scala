@@ -121,6 +121,13 @@ class WarcSpec extends AnyFunSuite {
     corrupt(14) = (corrupt(14) ^ 0x55).toByte
     assert(Gunzip.inflate(corrupt) === null)
     assert(Gunzip.inflate(Array[Byte]()) === null)
+    // bomb: 300 MB of zeros gzips to ~300 KB; inflation past the shared
+    // cap refuses, as bzip2/zstd/xz/lz4 do (Bzip2Spec, ZstdSpec, XzSpec, Lz4Spec)
+    val bos = new java.io.ByteArrayOutputStream()
+    val g = new java.util.zip.GZIPOutputStream(bos)
+    g.write(new Array[Byte](300 * 1024 * 1024)); g.close()
+    assert(bos.size < (1 << 20), "fixture: the bomb really is tiny")
+    assert(Gunzip.inflate(bos.toByteArray) === null)
   }
 
   test("binary-safe bodies: content-length covers bytes, not chars") {
